@@ -93,21 +93,6 @@ def word_shingles_normed(s: Column, n: int = 3) -> Column:
     )
 
 
-def char_ngrams(c: Column, n: int = 5) -> Column:
-    """Array of distinct character n-grams of the normalized text (same
-    lookahead-capture construction as word_shingles; blank and NULL text →
-    empty array, matching the word_shingles contract)."""
-    s = normalize_text(c)
-    grams = F.array_distinct(
-        F.regexp_extract_all(s, F.lit(f"(?=(.{{{n}}}))."), 1)
-    )
-    return (
-        F.when(s.isNull() | (F.length(s) == 0), F.array().cast("array<string>"))
-        .when(F.length(s) >= n, grams)
-        .otherwise(F.array(s))
-    )
-
-
 def nonspace_char_count(c: Column) -> Column:
     """Count of non-space characters — ZERO extra scan: normalized text
     separates its n tokens with exactly n-1 single spaces, so

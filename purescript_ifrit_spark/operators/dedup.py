@@ -28,8 +28,9 @@ from __future__ import annotations
 from typing import List, Optional, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from purescript_ifrit_spark.functions import hashing as H
 from purescript_ifrit_spark.functions import text as X
@@ -40,13 +41,74 @@ from purescript_ifrit_spark.functions import text as X
 # ---------------------------------------------------------------------------
 
 
+def _orderable(dt: T.DataType) -> bool:
+    """Whether `_sort_key` can order values of `dt`: everything but
+    variants, UDTs and intervals, at any depth."""
+    if isinstance(dt, T.MapType):
+        return _orderable(dt.keyType) and _orderable(dt.valueType)
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return not isinstance(
+        dt, (T.VariantType, T.UserDefinedType, T.CalendarIntervalType)
+    )
+
+
+def _holds_map(dt: T.DataType) -> bool:
+    if isinstance(dt, T.MapType):
+        return True
+    if isinstance(dt, T.ArrayType):
+        return _holds_map(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return any(_holds_map(f.dataType) for f in dt.fields)
+    return False
+
+
+def _sort_key(c: Column, dt: T.DataType) -> Column:
+    """`c` as an orderable value that is equal exactly when `c` is. Spark
+    cannot order maps, so a map becomes its entries sorted by key (map
+    keys are unique, so that order is total), recursing through arrays,
+    structs and map values that hold maps."""
+    if not _holds_map(dt):
+        return c
+    if isinstance(dt, T.MapType):
+        return F.array_sort(F.transform(
+            F.map_entries(c),
+            lambda e: F.struct(
+                _sort_key(e["key"], dt.keyType).alias("key"),
+                _sort_key(e["value"], dt.valueType).alias("value"),
+            ),
+        ))
+    if isinstance(dt, T.ArrayType):
+        return F.transform(c, lambda x: _sort_key(x, dt.elementType))
+    return F.when(c.isNotNull(), F.struct(
+        *[_sort_key(c[f.name], f.dataType).alias(f.name) for f in dt.fields]
+    ))
+
+
+def _tiebreak(df: DataFrame, skip: Sequence[str]) -> List[Column]:
+    """Ascending sort keys over every column of `df` outside `skip`, so a
+    rank-1 window ordered by (order_col, *these) picks one survivor per
+    group whatever the input partitioning: rows that tie on every key are
+    value-identical. Columns `_orderable` rejects are left out; rows that
+    differ only there stay an arbitrary choice."""
+    return [
+        _sort_key(F.col(f"`{f.name}`"), f.dataType).asc()
+        for f in df.schema.fields
+        if f.name not in skip and _orderable(f.dataType)
+    ]
+
+
 def dedup_exact(
     df: DataFrame,
     key_cols: Sequence[str],
     order_col: str,
 ) -> DataFrame:
     """Keep exactly one row per distinct `key_cols` — the one with the
-    smallest `order_col` (deterministic, unlike dropDuplicates).
+    smallest `order_col`, ties broken by the remaining columns in order
+    (deterministic under any partitioning, unlike dropDuplicates; see
+    _tiebreak).
 
     Implementation: rank-1 window with Spark's WindowGroupLimit pushdown
     (r14 optimization round, guide §2.3): the former min_by(struct(payload))
@@ -56,14 +118,14 @@ def dedup_exact(
     plans as Sort + WindowGroupLimit(Partial) BELOW the exchange (at most
     one surviving row per key per input partition — the same shuffle bound
     as the partial aggregate) and Sort + WindowGroupLimit(Final) above it.
-    Same single shuffle on the key, same kept row per key (smallest
-    `order_col`; ties were arbitrary under min_by's merge order and are
-    arbitrary under the sort here), measured ~1.3× faster at sf0.1 and
-    value-identical output including column order.
+    Same single shuffle on the key, measured ~1.3× faster at sf0.1 and
+    value-identical output including column order. The tiebreak keys only
+    cost comparisons between rows that tie on `order_col` (map columns
+    also add their sorted entries to the shuffled rows).
     """
     others = [c for c in df.columns if c not in key_cols]
     w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
-        F.col(order_col).asc()
+        F.col(order_col).asc(), *_tiebreak(df, [*key_cols, order_col])
     )
     out = (
         df.withColumn("_rk", F.row_number().over(w))
@@ -79,7 +141,8 @@ def dedup_exact_text(
 ) -> DataFrame:
     """Exact content dedup on the *normalized* text fingerprint (md5), the
     standard first pass of a corpus pipeline. Keeps the smallest
-    `order_col` per fingerprint.
+    `order_col` per fingerprint, ties broken by the remaining columns
+    (see dedup_exact).
 
     Single hash-shuffle on the fingerprint via a rank-1 window with
     WindowGroupLimit pushdown (one candidate row per fingerprint per
@@ -102,7 +165,9 @@ def dedup_exact_text(
         fp, F.concat(F.lit("\0null:"), F.col(order_col).cast("string"))
     )
     with_fp = df.withColumn("_fp", fp)
-    w = Window.partitionBy("_fp").orderBy(F.col(order_col).asc())
+    w = Window.partitionBy("_fp").orderBy(
+        F.col(order_col).asc(), *_tiebreak(df, [order_col])
+    )
     kept = (
         with_fp.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)

@@ -17,13 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dim_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Fact ⋈ broadcast(dim). Use for any dimension that fits in executor
-    memory (rule of thumb: < spark.sql.autoBroadcastJoinThreshold, but we
-    force it — AQE sometimes under-estimates dimension size on parquet)."""
-    return fact.join(F.broadcast(dim), on, how)
-
-
 def salted_join(
     left: DataFrame,
     right: DataFrame,

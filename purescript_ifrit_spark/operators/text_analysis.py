@@ -22,8 +22,7 @@ from purescript_ifrit_spark.functions.text import (  # noqa: F401
 
 
 def _quality_staged(
-    df: DataFrame, text_col: str, with_quality: bool,
-    keep_norm: bool = False, with_features: bool = True,
+    df: DataFrame, text_col: str, keep_norm: bool, with_features: bool,
 ) -> DataFrame:
     """Three staged projections so each text scan runs ONCE:
 
@@ -88,20 +87,14 @@ def _quality_staged(
                 ),
             }
         )
-    if with_quality:
-        out = out.withColumn(
-            "quality",
-            X.quality_from_parts(n, nonspace, F.col("_punct"), F.col("_hits")),
-        )
+    out = out.withColumn(
+        "quality",
+        X.quality_from_parts(n, nonspace, F.col("_punct"), F.col("_hits")),
+    )
     drop = ("_nonspace", "_punct", "_hits") if keep_norm else (
         "_norm", "_nonspace", "_punct", "_hits"
     )
     return out.drop(*drop)
-
-
-def quality_features(df: DataFrame, text_col: str) -> DataFrame:
-    """Attach the classic cheap quality signals used for corpus filtering."""
-    return _quality_staged(df, text_col, with_quality=False)
 
 
 def quality_score(
@@ -129,18 +122,7 @@ def quality_score(
     scored stage (curate) should not cache three doubles per row nobody
     downstream reads."""
     return _quality_staged(
-        df, text_col, with_quality=True, keep_norm=keep_norm,
-        with_features=with_features,
-    )
-
-
-def token_stats(df: DataFrame, text_col: str) -> DataFrame:
-    c = F.col(text_col)
-    return df.select(
-        *df.columns,
-        X.token_count(c).alias("n_tokens"),
-        X.bpe_ish_token_count(c).alias("n_bpe_ish"),
-        F.length(c).alias("n_chars_raw"),
+        df, text_col, keep_norm=keep_norm, with_features=with_features
     )
 
 

@@ -12,6 +12,7 @@ work unchanged on an object store; `maxPartitionBytes` governs split sizing.
 
 from __future__ import annotations
 
+import os
 from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,7 +47,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     interprets the wall-clock in the *session* timezone, and the stored
     wall-clocks are UTC instants — any other session tz would silently
     shift epoch values, so we fail fast instead (the engine's entry points
-    — bench.py, conftest.py, api.get_spark — all pin UTC)."""
+    — bench.py, conftest.py, api.get_spark — all pin UTC).
+
+    Schema memo: `spark.read.parquet` infers the schema from the parquet
+    footers with a Spark job on every call. The StructType it infers is
+    memoized per (absolute path, listing signature, parquet-conversion
+    confs): the signature is (file, size, mtime_ns) of every file under
+    the path, so a rewrite in place misses, and the confs are
+    `_PARQUET_SCHEMA_CONFS`, so a read under another type conversion
+    misses too. A hit reads with that schema given, which resolves the
+    relation with no job. Only the schema is memoized: every call still
+    builds a fresh relation with fresh attribute ids (a self-join of two
+    calls stays unambiguous), and the `events.ts` normalization and the
+    UTC check above run on every call. Paths that are not absolute local
+    files or directories (object stores, globs) always infer."""
     if name == "events":
         # scope the legacy conf to this read: it is consulted when the
         # parquet schema is converted (at read() time), so restoring it
@@ -56,7 +70,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         prev = spark.conf.get(conf_key, None)
         spark.conf.set(conf_key, "true")
         try:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+            df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
         finally:
             if prev is None:
                 spark.conf.unset(conf_key)
@@ -81,7 +95,66 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             _require_utc_session(spark)
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+# Session confs that change the StructType inferred from parquet footers:
+# the flags of Spark's parquet-to-Spark schema converter, and the confs
+# that change which footers and partition values inference reads.
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+)
+
+# (path, conf values) -> (listing signature, inferred StructType); a
+# rewritten path replaces its entry instead of adding one
+_SCHEMAS: Dict[tuple, tuple] = {}
+
+
+def _listing(path: str) -> Optional[tuple]:
+    """((file, size, mtime_ns), ...) for every file under an absolute
+    local path, or None when the path is not one."""
+    if not os.path.isabs(path):
+        return None
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` with the inferred schema memoized (see
+    load_table). The listing is taken before the inferring read, so a
+    rewrite racing the read can only cause a later miss, never a stale
+    hit."""
+    listing = _listing(path)
+    if listing is None:
+        return spark.read.parquet(path)
+    key = (path, tuple(spark.conf.get(k, None) for k in _PARQUET_SCHEMA_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == listing:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (listing, df.schema)
+    return df
 
 
 def _require_utc_session(spark: SparkSession) -> None:
@@ -105,10 +178,6 @@ def _require_utc_session(spark: SparkSession) -> None:
             'spark.conf.set("spark.sql.session.timeZone", "UTC") '
             "(bench.py/conftest.py/api.get_spark already do)."
         ) from conf_exc
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -36,6 +36,54 @@ def test_dedup_exact_text(spark, docs):
     assert kept == [0, 1, 2, 4, 5]  # 3 is an exact dup of 0
 
 
+def test_dedup_exact_ties_are_partitioning_independent(spark):
+    """Rows that tie on the key AND on order_col must yield the same
+    survivor however the input is partitioned: the smallest by the
+    remaining columns, maps compared by their key-sorted entries (Spark
+    cannot order a map), still as a WindowGroupLimit plan."""
+    rows = [
+        ("a", 1, "z", {"a": 1}, ({"k": 0},)),
+        ("a", 1, "m", {"x": 1}, ({"k": 0},)),
+        ("a", 1, "m", {"b": 2, "a": 1}, ({"k": 9},)),
+        ("a", 1, "m", {"a": 1, "b": 2}, ({"k": 1},)),
+        ("a", 2, "a", {}, ({},)),
+        ("b", 5, "q", None, None),
+        ("b", 5, "q", {"c": 3}, ({"k": 0},)),
+        ("b", 5, "q", {"c": 3}, None),
+        ("c", 7, "only", {"z": 0}, ({"k": 0},)),
+    ] * 3
+    tied = spark.createDataFrame(
+        rows,
+        "key string, ord int, s string, m map<string,int>, "
+        "meta struct<tags map<string,int>>",
+    )
+    want = [
+        ("a", 1, "m", {"a": 1, "b": 2}, ({"k": 1},)),
+        ("b", 5, "q", None, None),
+        ("c", 7, "only", {"z": 0}, ({"k": 0},)),
+    ]
+    for n in (1, 3, 7):
+        out = dedup.dedup_exact(tied.repartition(n), ["key"], "ord")
+        assert sorted(tuple(r) for r in out.collect()) == want, n
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("WindowGroupLimit") >= 2, plan
+    # a column Spark cannot order at all (variant) is left out of the
+    # tiebreak instead of failing analysis
+    with_variant = tied.withColumn("v", F.parse_json(F.lit('{"x": 1}')))
+    assert dedup.dedup_exact(with_variant, ["key"], "ord").count() == 3
+
+    docs = spark.createDataFrame(
+        [(1, "hello   WORLD", "a"), (1, "Hello world", "b"),
+         (1, "HELLO world", "c"), (2, "other", "x")] * 3,
+        "doc_id long, text string, src string",
+    )
+    for n in (1, 3, 7):
+        out = dedup.dedup_exact_text(docs.repartition(n), "text", "doc_id")
+        assert sorted(tuple(r) for r in out.collect()) == [
+            (1, "HELLO world", "c"), (2, "other", "x"),
+        ], n
+
+
 def test_minhash_finds_planted_near_dups(spark, docs):
     pairs = dedup.minhash_candidate_pairs(
         docs, "doc_id", "text", jaccard_threshold=0.5

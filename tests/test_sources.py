@@ -117,25 +117,110 @@ def _write_events_parquet(path: str, ts_type: pa.DataType) -> None:
 )
 def test_load_table_normalizes_every_ts_encoding(spark, tmp_path, ts_type):
     """All three physical encodings events.ts has shipped under must
-    surface as plain TimestampType with identical epoch values."""
+    surface as plain TimestampType with identical epoch values — on the
+    inferring first load and on the second, a schema-memo hit."""
     from pyspark.sql import functions as F
 
     _write_events_parquet(str(tmp_path / "events.parquet"), ts_type)
-    df = S.load_table(spark, str(tmp_path), "events")
-    assert isinstance(df.schema["ts"].dataType, T.TimestampType)
-    assert df.select(F.unix_micros("ts")).first()[0] == _EPOCH_US
+    for _ in range(2):
+        df = S.load_table(spark, str(tmp_path), "events")
+        assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+        assert df.select(F.unix_micros("ts")).first()[0] == _EPOCH_US
 
 
 def test_ntz_cast_requires_utc_session(spark, tmp_path):
     """The NTZ->TIMESTAMP cast is value-preserving only under a UTC session
-    timezone; any other tz must fail fast instead of silently shifting."""
+    timezone; any other tz must fail fast instead of silently shifting —
+    also when the schema comes from the memo of an earlier UTC load."""
     _write_events_parquet(str(tmp_path / "events.parquet"), pa.timestamp("us"))
+    S.load_table(spark, str(tmp_path), "events")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
         with pytest.raises(ValueError, match="session timezone"):
             S.load_table(spark, str(tmp_path), "events")
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def _jobs_run(spark, fn):
+    """fn()'s result and the number of Spark jobs it started (a set
+    difference: the tracker drops its oldest jobs past its retention)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup() or [])
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup() or []) - before)
+
+
+def test_load_table_second_load_runs_no_job(spark, tmp_path):
+    """The first load infers the schema from the footers with a Spark job;
+    a second load of the unchanged table reuses it and runs none — for a
+    file, a partitioned directory and the events branch."""
+    _write_events_parquet(str(tmp_path / "events.parquet"), pa.timestamp("ns"))
+    pq.write_table(pa.table({"k": [1, 2]}), str(tmp_path / "t.parquet"))
+    spark.range(6).selectExpr("id", "id % 2 AS p").write.partitionBy(
+        "p"
+    ).parquet(str(tmp_path / "d.parquet"))
+    for name, rows in (("t", 2), ("d", 6), ("events", 1)):
+        def load():
+            return S.load_table(spark, str(tmp_path), name)
+
+        inferred, first = _jobs_run(spark, load)
+        df, second = _jobs_run(spark, load)
+        assert first >= 1 and second == 0, (name, first, second)
+        assert df.schema == inferred.schema and df.count() == rows, name
+    assert S.load_table(spark, str(tmp_path), "d").filter("p = 1").count() == 3
+
+
+def test_load_table_rewrite_in_place_is_not_stale(spark, tmp_path):
+    """Rewriting a table at the same path with another column set must
+    give the new schema, not the memoized one."""
+    _write_events_parquet(str(tmp_path / "events.parquet"), pa.timestamp("us"))
+    assert "value" in S.load_table(spark, str(tmp_path), "events").columns
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([5], type=pa.int64()),
+            "ts": pa.array([_EPOCH_US]).cast(pa.timestamp("us")),
+            "session": pa.array(["s1"], type=pa.string()),
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    df = S.load_table(spark, str(tmp_path), "events")
+    assert df.columns == ["event_id", "ts", "session"]
+    assert df.first()["session"] == "s1"
+
+
+def test_load_table_memo_keys_on_parquet_confs(spark, tmp_path):
+    """A conf that changes the inferred type must miss the memo: an NTZ
+    column reads as TIMESTAMP_NTZ by default and as TIMESTAMP when
+    inferTimestampNTZ is off."""
+    pq.write_table(
+        pa.table({"ts": pa.array([_EPOCH_US]).cast(pa.timestamp("us"))}),
+        str(tmp_path / "t.parquet"),
+    )
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    assert isinstance(
+        S.load_table(spark, str(tmp_path), "t").schema["ts"].dataType,
+        T.TimestampNTZType,
+    )
+    spark.conf.set(key, "false")
+    try:
+        got = S.load_table(spark, str(tmp_path), "t").schema["ts"].dataType
+    finally:
+        spark.conf.unset(key)
+    assert isinstance(got, T.TimestampType)
+
+
+def test_load_table_self_join_resolves(spark, sf_dir):
+    """Each load is a fresh relation with fresh attribute ids, so two
+    loads of one table (the second a memo hit) join without
+    AMBIGUOUS_REFERENCE."""
+    S.load_table(spark, sf_dir, "orders")
+    a = S.load_table(spark, sf_dir, "orders")
+    b = S.load_table(spark, sf_dir, "orders")
+    joined = a.join(b, a.o_orderkey == b.o_orderkey).select(
+        a.o_orderkey, b.o_totalprice
+    )
+    assert joined.count() == a.count()
 
 
 def _ntz_events(spark):
