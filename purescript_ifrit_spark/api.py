@@ -10,20 +10,21 @@ PySpark DataFrame transformations instead:
     run_query(spark, df|name, sql, schema=None) -> DataFrame
 
 Any compile-time failure raises IfritError with the reference's message
-shapes (string errors in the reference's Either chain).
+shapes (string errors in the reference's Either chain). Compiling imports no
+pyspark: the planner (and Spark) load when a plan is applied.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Optional, Union
-
-from pyspark.sql import DataFrame, SparkSession
+from typing import TYPE_CHECKING, Any, Optional, Union
 
 from purescript_ifrit_spark import analyzer, lexer, parser
-from purescript_ifrit_spark import planner as P
-from purescript_ifrit_spark.plans.ast import Statement
+from purescript_ifrit_spark.plans.ast import CompatFlags, Statement
 from purescript_ifrit_spark.schema import Schema, schema_from_json, schema_from_struct
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass(frozen=True)
@@ -33,11 +34,13 @@ class IfritPlan:
     statement: Statement
     input_schema: Schema
     output_schema: Schema
-    flags: P.CompatFlags = field(default_factory=P.CompatFlags)
+    flags: CompatFlags = field(default_factory=CompatFlags)
 
     def apply(self, df: DataFrame) -> DataFrame:
         """Materialize the plan over a DataFrame (lazy — no action run)."""
-        return P.build(df, self.statement, self.flags)
+        from purescript_ifrit_spark import planner
+
+        return planner.build(df, self.statement, self.flags)
 
     def to_spark_sql(self, table: str) -> str:
         """Render the same semantics as a Spark SQL string over a view name
@@ -56,7 +59,7 @@ class IfritPlan:
 def compile_query(
     schema: Union[Schema, dict, str],
     sql: str,
-    flags: P.CompatFlags = P.CompatFlags(),
+    flags: CompatFlags = CompatFlags(),
 ) -> IfritPlan:
     """schema decode → tokenize → parse → analyze → plan (Core.purs:30-37).
 
@@ -77,7 +80,7 @@ def compile_query(
 
 def compile_unchecked(
     sql: str,
-    flags: P.CompatFlags = P.CompatFlags(),
+    flags: CompatFlags = CompatFlags(),
 ) -> IfritPlan:
     """Tokenize + parse + plan WITHOUT semantic analysis — the reference's
     test-harness entry point (test/Test.Main.purs:26-30, SURVEY §3 EP3):
@@ -97,7 +100,7 @@ def run_query(
     source: Union[DataFrame, str],
     sql: str,
     schema: Optional[Union[Schema, dict, str]] = None,
-    flags: P.CompatFlags = P.CompatFlags(),
+    flags: CompatFlags = CompatFlags(),
 ) -> DataFrame:
     """Compile + apply in one step.
 

@@ -96,12 +96,17 @@ reference applies to AVG..SUM.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, Dict
+from functools import partial
+from typing import TYPE_CHECKING, Callable, Dict
 
-from pyspark.sql import Column
-
-from purescript_ifrit_spark.functions import text as X
 from purescript_ifrit_spark.schema import Schema
+
+if TYPE_CHECKING:
+    from pyspark.sql import Column
+
+# Importing this module runs no pyspark import: the parser and analyzer
+# read EXT_FUNCTIONS' names and metadata on the compile path. Builders and
+# renderers import functions/text (and Spark) when they are called.
 
 # chunking geometry of the dialect CHUNK function (fixed: the one-argument
 # fn grammar has no room for parameters; the Python API takes them)
@@ -124,6 +129,8 @@ def _token_count_sql(x: str) -> str:
 
 
 def _quality_sql(x: str) -> str:
+    from purescript_ifrit_spark.functions import text as X
+
     # integer micro-unit arithmetic, in lock-step with functions/text.quality
     # (see its docstring for why no float ratio rounding may appear here);
     # `div` is Spark SQL's exact integer division
@@ -157,6 +164,8 @@ def _quality_sql(x: str) -> str:
 
 
 def _lang_id_sql(x: str) -> str:
+    from purescript_ifrit_spark.functions import text as X
+
     def score(rx: str) -> str:
         lit = rx.replace("\\", "\\\\")
         return f"size(regexp_extract_all(lower({x}), '{lit}', 0))"
@@ -172,6 +181,14 @@ def _lang_id_sql(x: str) -> str:
 
 def _fingerprint_sql(x: str) -> str:
     return f"md5({_norm_sql(x)})"
+
+
+def _text_column(name: str, c: Column, **kwargs) -> Column:
+    """functions/text.<name>(c, **kwargs), importing that module (and Spark)
+    only when a plan is built."""
+    from purescript_ifrit_spark.functions import text as X
+
+    return getattr(X, name)(c, **kwargs)
 
 
 # fixed split geometry of the dialect SPLIT function (the one-argument fn
@@ -273,6 +290,7 @@ def _c4pass_sql(x: str) -> str:
 
 def _minhash_column(c: Column) -> Column:
     from purescript_ifrit_spark.functions import hashing as H
+    from purescript_ifrit_spark.functions import text as X
 
     return H.minhash_hexsig(X.word_shingles(c, 3), 16)
 
@@ -319,6 +337,8 @@ def _bm25_column(c: Column) -> Column:
     # non-overlapping token count. Blank text counts 0 (pad of '' is
     # '  '), NULL text propagates NULL.
     from pyspark.sql import functions as F
+
+    from purescript_ifrit_spark.functions import text as X
 
     n = X.normalize_text(c)
     pad = F.concat(F.lit(" "), F.replace(n, F.lit(" "), F.lit("  ")), F.lit(" "))
@@ -606,16 +626,28 @@ EXT_FUNCTIONS: Dict[str, ExtFn] = {
         ExtFn(
             "TOKEN_COUNT",
             Schema.number(),
-            X.token_count,
+            partial(_text_column, "token_count"),
             _token_count_sql,
         ),
-        ExtFn("QUALITY", Schema.number(), X.quality, _quality_sql),
-        ExtFn("LANG_ID", Schema.string(), X.lang_id, _lang_id_sql),
-        ExtFn("FINGERPRINT", Schema.string(), X.fingerprint, _fingerprint_sql),
+        ExtFn(
+            "QUALITY", Schema.number(), partial(_text_column, "quality"), _quality_sql
+        ),
+        ExtFn(
+            "LANG_ID", Schema.string(), partial(_text_column, "lang_id"), _lang_id_sql
+        ),
+        ExtFn(
+            "FINGERPRINT",
+            Schema.string(),
+            partial(_text_column, "fingerprint"),
+            _fingerprint_sql,
+        ),
         ExtFn(
             "CHUNK",
             Schema.array(Schema.string()),
-            lambda c: X.chunk_array(c, CHUNK_TOKENS, CHUNK_OVERLAP),
+            partial(
+                _text_column, "chunk_array",
+                chunk_tokens=CHUNK_TOKENS, overlap=CHUNK_OVERLAP,
+            ),
             _chunk_sql,
             groupable=False,  # array-typed result is not a valid group key
         ),

@@ -2,9 +2,13 @@
 
 Faithful re-expression of the reference lexer (src/Ifrit/Lexer.purs):
 
-- case-sensitive keywords, matched in an order where longer alternatives win
-  ("OR is included in ORDER BY, AS in ASC", Lexer.purs:176-177)
-- functions AVG|COUNT|MAX|MIN|SUM (Lexer.purs:193-195)
+- case-sensitive keywords (Lexer.purs:176-177) and functions
+  AVG|COUNT|MAX|MIN|SUM (Lexer.purs:193-195) plus the engine's extension
+  functions. A name is recognized only when the maximal run of word
+  characters equals it (maximal munch), which is the reference's "name not
+  followed by a word character" rule: `ASC` is one keyword, `ANDREW` and
+  `MINHASH1` are words. GROUP BY / ORDER BY are two-word keywords with any
+  whitespace between them.
 - binaries != = < > (Lexer.purs:190-195). `<=` / `>=` exist as token kinds in
   the reference but are never emitted by its tokenizer (SURVEY.md §2.3 F3) —
   we lex them directly as a documented fix (they remain reachable via NOT).
@@ -64,104 +68,71 @@ class Token:
         return f"{self.kind}({self.value!r}@{self.pos})"
 
 
-# Keywords in the reference's match order (Lexer.purs:176-177); GROUP BY /
-# ORDER BY are two-word keywords normalized to GROUPBY / ORDERBY.
-_KEYWORDS = [
-    ("DISTINCT", "DISTINCT"),
-    ("GROUP\\s+BY", "GROUPBY"),
-    ("ORDER\\s+BY", "ORDERBY"),
-    ("OFFSET", "OFFSET"),
-    ("SELECT", "SELECT"),
-    ("WHERE", "WHERE"),
-    ("LIMIT", "LIMIT"),
-    ("NULL", "NULL"),
-    ("FROM", "FROM"),
-    ("AND", "AND"),
-    ("ASC", "ASC"),
-    ("AS", "AS"),
-    ("OR", "OR"),
-    ("DESC", "DESC"),
-]
+# Keywords (Lexer.purs:176-177); GROUP BY / ORDER BY are two-word keywords
+# normalized to GROUPBY / ORDERBY.
+_KEYWORDS = (
+    "DISTINCT", "OFFSET", "SELECT", "WHERE", "LIMIT", "NULL", "FROM", "AND",
+    "ASC", "AS", "OR", "DESC",
+)
 # reference functions (Lexer.purs:193-195) + engine extension functions
-# (functions/dialect_ext.py — SURVEY §2.7/§7 phase 6). Order is safe: no
-# name is a prefix of another within the boundary rule.
-_FUNCTIONS = [
+# (functions/dialect_ext.py, SURVEY §2.7/§7 phase 6). Kept by hand so that
+# lexing imports no Spark; tests/test_lexer.py pins it to EXT_FUNCTIONS.
+_FUNCTIONS = (
     "AVG", "COUNT", "MAX", "MIN", "SUM",
     "TOKEN_COUNT", "QUALITY_SCORE", "QUALITY", "LANG_ID", "FINGERPRINT",
     "CHUNK", "SPLIT", "REDACT", "HTMLTEXT", "TUMBLE", "SESSIONIZE",
     "VECTORIZE", "IMAGE_DHASH", "GOPHER", "C4PASS", "JL_PROJECT",
-    # MINHASH is safe next to MIN: the _BOUNDARY lookahead stops MIN from
-    # matching the "MIN" prefix of "MINHASH(" (H is a word char)
-    "MINHASH",
-    "BM25",
-    "NFC",
-    # SIMHASH is prefix-safe: no other name starts with "SIM" and SUM
-    # diverges at the second character
-    "SIMHASH",
-    # PQ_ENCODE (r13): prefix-safe — no other name starts with "PQ"
-    "PQ_ENCODE",
-]
-
-_WORD_CHARS = r"[a-zA-Z0-9_.]"
-# a keyword/function match must not run into an identifier tail
-_BOUNDARY = rf"(?!{_WORD_CHARS})"
-
-# (kind, pattern, normalized value) in priority order. STRING's quotes are
-# stripped in the handler (the charset has no escapes), so no rule needs an
-# inner capture group — a requirement of the combined alternation below.
-_RULE_SPECS = (
-    [(KEYWORD, pat + _BOUNDARY, norm) for pat, norm in _KEYWORDS]
-    + [(FUNCTION, f + _BOUNDARY, f) for f in _FUNCTIONS]
-    + [
-        (UNARY, "NOT" + _BOUNDARY, "NOT"),
-        (BINARY, r"!=", "!="),
-        (BINARY, r"<=", "<="),  # documented fix, SURVEY.md §2.3 F3
-        (BINARY, r">=", ">="),
-        (BINARY, r"=", "="),
-        (BINARY, r"<", "<"),
-        (BINARY, r">", ">"),
-        (BOOLEAN, "(?:true|false)" + _BOUNDARY, None),
-        (NUMBER, r"[0-9]*\.?[0-9]+", None),
-        (STRING, r'"[a-zA-Z0-9_.]+"', None),
-        (WORD, r"[a-zA-Z0-9_.]+", None),
-        (PAREN_CLOSE, r"\)", ")"),
-        (PAREN_OPEN, r"\(", "("),
-        (COMMA, r",", ","),
-    ]
+    "MINHASH", "BM25", "NFC", "SIMHASH", "PQ_ENCODE",
 )
 
-# ONE alternation regex instead of trying ~27 rules per token: Python's
-# alternation is leftmost-first, so rule priority is preserved exactly;
-# m.lastgroup names the winning rule. Measured ~1.5× end-to-end compile
-# throughput (the per-rule loop spent ~60% of compile time in failed
-# re.match attempts — ~2M calls per 3k compiles of the nested shape).
-_COMBINED = re.compile(
-    "|".join(f"(?P<g{i}>{pat})" for i, (_, pat, _n) in enumerate(_RULE_SPECS))
-)
+# a maximal run of word characters → (kind, value). Every entry is made of
+# word characters only, so an exact lookup of the maximal run is the
+# reference's "name not followed by a word character" rule.
+_WORDS = {
+    **{k: (KEYWORD, k) for k in _KEYWORDS},
+    **{f: (FUNCTION, f) for f in _FUNCTIONS},
+    "NOT": (UNARY, "NOT"),
+    "true": (BOOLEAN, True),
+    "false": (BOOLEAN, False),
+    # GROUP / ORDER start a two-word keyword: kind None marks an entry whose
+    # value must match at the run's position (no match: the run is a WORD)
+    "GROUP": (None, re.compile(r"GROUP\s+BY(?![a-zA-Z0-9_.])").match),
+    "ORDER": (None, re.compile(r"ORDER\s+BY(?![a-zA-Z0-9_.])").match),
+}
+
+# NUMBER is tried before the word run, as in the reference's rule order
+# (only a run starting with a digit or "." can match it); group 1 set
+# means the NUMBER alternative won
+_NUMBER_OR_RUN = re.compile(r"([0-9]*\.?[0-9]+)|[a-zA-Z0-9_.]+")
+_STRING = re.compile(r'"[a-zA-Z0-9_.]+"')
+# operators and punctuation: two-character operators are looked up first.
+# `<=` / `>=` are the documented fix, SURVEY.md §2.3 F3.
+_SYMBOLS = {
+    "!=": BINARY, "<=": BINARY, ">=": BINARY,
+    "=": BINARY, "<": BINARY, ">": BINARY,
+    ")": PAREN_CLOSE, "(": PAREN_OPEN, ",": COMMA,
+}
 
 _WS = re.compile(r"\s*")
 # ASCII whitespace for the inline fast-path skip below; non-ASCII \s
-# matches (NBSP etc.) take the _WS regex fallback so behavior is
-# unchanged for every input the old regex-skip accepted
+# matches (NBSP etc.) take the _WS regex fallback
 _WS_CHARS = " \t\n\r\x0b\x0c"
 
 
 def tokenize(source: str) -> List[Token]:
     """Tokenize; appends EOF. Raises LexError with reference-parity message.
 
-    Hot-loop shape (r14 optimization round, guide §1.2 "per-task work"):
-    whitespace is skipped with an inline character loop (typical gaps are
-    a single space — cheaper than a regex call), and the winning rule is
-    recovered via `m.lastindex` (an int attribute) instead of parsing
-    `m.lastgroup`'s name. Valid because every inner group in _RULE_SPECS
-    is non-capturing, so group i+1 IS rule i. For fixed-value rules the
-    matched text is never sliced out. Measured on a quiet host: ~1.25×
-    tokenize throughput, identical Token streams (pinned by the existing
-    lexer goldens)."""
+    Word first: at each position one regex takes a NUMBER or the maximal
+    run of word characters, and one dict lookup classifies the run as a
+    keyword, function, NOT or boolean, else a WORD. Strings, operators and
+    punctuation are handled by their first character. Whitespace is skipped
+    inline (typical gaps are one space); non-ASCII whitespace falls back to
+    the `\\s*` regex. tests/test_lexer.py checks the token stream against a
+    rule-by-rule lexer in the reference's order (Lexer.purs:176-229)."""
     tokens: List[Token] = []
     append = tokens.append
-    rx_match = _COMBINED.match
-    specs = _RULE_SPECS
+    run_match = _NUMBER_OR_RUN.match
+    words_get = _WORDS.get
     pos = 0
     n = len(source)
     while True:
@@ -170,30 +141,46 @@ def tokenize(source: str) -> List[Token]:
         if pos >= n:
             append(Token(EOF, None, pos))
             return tokens
-        m = rx_match(source, pos)
-        if not m:
-            # rare path: \s covers non-ASCII whitespace the inline skip
-            # does not — retry once through the full regex skip
-            ws_end = _WS.match(source, pos).end()
-            if ws_end != pos:
-                pos = ws_end
+        m = run_match(source, pos)
+        if m is not None:
+            end = m.end()
+            raw = m.group()
+            if m.lastindex:
+                append(Token(NUMBER, float(raw), pos, end - pos))
+            else:
+                hit = words_get(raw)
+                if hit is None:
+                    append(Token(WORD, raw, pos, end - pos))
+                elif hit[0] is not None:
+                    append(Token(hit[0], hit[1], pos, end - pos))
+                else:
+                    pair = hit[1](source, pos)
+                    if pair is None:
+                        append(Token(WORD, raw, pos, end - pos))
+                    else:
+                        end = pair.end()
+                        append(Token(KEYWORD, raw + "BY", pos, end - pos))
+            pos = end
+            continue
+        c = source[pos]
+        sym = source[pos:pos + 2]
+        kind = _SYMBOLS.get(sym)
+        if kind is None:
+            sym = c
+            kind = _SYMBOLS.get(c)
+        if kind is not None:
+            append(Token(kind, sym, pos, len(sym)))
+            pos += len(sym)
+            continue
+        if c == '"':
+            m = _STRING.match(source, pos)
+            if m is not None:
+                end = m.end()
+                append(Token(STRING, source[pos + 1:end - 1], pos, end - pos))
+                pos = end
                 continue
-            raise invalid_token(source[pos], pos)
-        kind, _, norm = specs[m.lastindex - 1]
-        end = m.end()
-        if norm is not None:
-            value: Any = norm
-        else:
-            raw = m.group(0)
-            if kind == WORD:
-                value = raw
-            elif kind == NUMBER:
-                value = float(raw)
-            elif kind == STRING:
-                value = raw[1:-1]
-            else:  # BOOLEAN
-                value = raw == "true"
-        append(Token(kind, value, pos, end - pos))
-        pos = end
-
-
+        # rare path: \s covers non-ASCII whitespace the inline skip does not
+        ws_end = _WS.match(source, pos).end()
+        if ws_end == pos:
+            raise invalid_token(c, pos)
+        pos = ws_end

@@ -41,7 +41,6 @@ Scale notes (100 TB design bar):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame
@@ -51,6 +50,7 @@ from purescript_ifrit_spark.errors import PlanError
 from purescript_ifrit_spark.plans.ast import (
     And,
     BinaryCond,
+    CompatFlags,
     Condition,
     FieldOperand,
     FnCall,
@@ -72,14 +72,6 @@ def _ext_fn(name: str):
     from purescript_ifrit_spark.functions.dialect_ext import EXT_FUNCTIONS
 
     return EXT_FUNCTIONS.get(name)
-
-
-@dataclass(frozen=True)
-class CompatFlags:
-    """Deliberate deviations from reference quirks (SURVEY.md §7)."""
-
-    sane_offset: bool = False  # True → SQL skip-then-take instead of $limit,$skip
-    allow_field_comparison: bool = False  # lift MongoDB.purs:386-397 restriction
 
 
 def _fmt_operand(o) -> str:

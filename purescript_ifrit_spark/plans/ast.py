@@ -143,3 +143,17 @@ class Group:
 
 
 Statement = Union[Select, Group]
+
+
+# ---------------------------------------------------------------------------
+# compile options (both backends read them; Spark-free so compile_query
+# imports no pyspark)
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class CompatFlags:
+    """Deliberate deviations from reference quirks (SURVEY.md §7)."""
+
+    sane_offset: bool = False  # True → SQL skip-then-take instead of $limit,$skip
+    allow_field_comparison: bool = False  # lift MongoDB.purs:386-397 restriction

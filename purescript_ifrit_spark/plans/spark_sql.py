@@ -17,10 +17,10 @@ Quirk encodings (must stay in lock-step with planner.py):
 
 from __future__ import annotations
 
-from purescript_ifrit_spark.planner import CompatFlags
 from purescript_ifrit_spark.plans.ast import (
     And,
     BinaryCond,
+    CompatFlags,
     Condition,
     FieldOperand,
     FnCall,

@@ -19,18 +19,20 @@ String→StringType, Number→DoubleType, Boolean→BooleanType, Null→NullType
 DataFrame (parquet tables etc.) by deriving the allowlist from df.schema —
 all Spark numeric types degrade to `number`, matching the reference's
 single-number-type model (src/Ifrit/Lexer.purs:18 lexes Decimal, degraded to
-double at codegen, src/Ifrit/Driver/MongoDB.purs:453).
+double at codegen, src/Ifrit/Driver/MongoDB.purs:453). Both Spark-facing
+functions import pyspark when called, so decoding a schema needs no Spark.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
-from typing import Any, Dict, Optional
-
-from pyspark.sql import types as T
+from typing import TYPE_CHECKING, Any, Dict, Optional
 
 from purescript_ifrit_spark.errors import AnalysisError
+
+if TYPE_CHECKING:
+    from pyspark.sql import types as T
 
 # kind tags
 OBJECT = "object"
@@ -120,6 +122,8 @@ class Schema:
 
     # -- Spark mapping ------------------------------------------------------
     def to_spark(self) -> T.DataType:
+        from pyspark.sql import types as T
+
         if self.kind == OBJECT:
             return T.StructType(
                 [T.StructField(k, v.to_spark(), True) for k, v in self.fields.items()]
@@ -176,6 +180,8 @@ def schema_from_struct(dt: T.DataType) -> Schema:
     JSON schema. Numeric/temporal Spark types all map to `number`/`string`
     per the reference's 4-type model.
     """
+    from pyspark.sql import types as T
+
     if isinstance(dt, T.StructType):
         return Schema.object({f.name: schema_from_struct(f.dataType) for f in dt.fields})
     if isinstance(dt, T.ArrayType):
