@@ -129,7 +129,7 @@ def _token_count_sql(x: str) -> str:
 
 
 def _quality_sql(x: str) -> str:
-    from purescript_ifrit_spark.functions import text as X
+    from purescript_ifrit_spark.functions import stopwords as X
 
     # integer micro-unit arithmetic, in lock-step with functions/text.quality
     # (see its docstring for why no float ratio rounding may appear here);
@@ -164,7 +164,7 @@ def _quality_sql(x: str) -> str:
 
 
 def _lang_id_sql(x: str) -> str:
-    from purescript_ifrit_spark.functions import text as X
+    from purescript_ifrit_spark.functions import stopwords as X
 
     def score(rx: str) -> str:
         lit = rx.replace("\\", "\\\\")

@@ -11,6 +11,12 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from purescript_ifrit_spark.functions.stopwords import (
+    DEFAULT_STOPWORDS,
+    LANG_MARKERS,
+    _stop_rx,
+)
+
 # A deliberately simple, deterministic tokenizer contract shared by every
 # consumer (and by the DuckDB oracles, which replicate these expressions):
 #   normalize = lower + collapse whitespace + strip
@@ -133,17 +139,6 @@ def mean_token_len(c: Column) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(total_chars / n.cast("double"))
 
 
-DEFAULT_STOPWORDS = ("the", "a", "of", "and", "is", "to", "in")
-
-
-def _stop_rx(stopwords: tuple) -> str:
-    import re as _re
-
-    # escape each word: callers may pass tokens containing regex
-    # metacharacters ("c++", "a.b") and the contract is literal equality
-    return "(?:^| )(?:" + "|".join(_re.escape(w) for w in stopwords) + ")(?= |$)"
-
-
 def stopword_ratio(c: Column, stopwords: tuple = DEFAULT_STOPWORDS) -> Column:
     """Fraction of tokens that are (English) stopwords — a classic quality
     signal: natural text has ~0.2-0.4, keyword spam ~0.
@@ -193,16 +188,6 @@ def rolling_fingerprint(c: Column) -> Column:
         % F.lit(ROLLING_MOD),
     )
     return F.when(F.length(n) == 0, F.lit(0).cast("long")).otherwise(folded)
-
-
-# language → stopword alternation, deliberately tiny and deterministic.
-# Order matters: ties resolve in this priority order.
-LANG_MARKERS = (
-    ("en", r"\b(the|of|and|is|to)\b"),
-    ("de", r"\b(der|die|das|und|ist)\b"),
-    ("fr", r"\b(le|la|les|et|est)\b"),
-    ("es", r"\b(el|los|las|es|y)\b"),
-)
 
 
 def lang_id(c: Column) -> Column:

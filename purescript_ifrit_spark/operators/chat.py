@@ -30,7 +30,7 @@ modeling dataset:
   window.
 
 All outputs are flat scalar columns (the driver's comparator hashes flat
-cells; array columns crashed it in r4 — suite._ledger history). NULL
+cells; array columns crashed it in r4 — CORRECTNESS_r04.json). NULL
 content counts as zero tokens / zero chars throughout (real corpora
 always contain some): token and char expressions are coalesced at the
 operator boundary so window sums and kept-flags never go NULL.

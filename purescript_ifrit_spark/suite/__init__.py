@@ -19,6 +19,10 @@ on both sides.
 
 from __future__ import annotations
 
+import json
+import re
+from pathlib import Path
+
 from purescript_ifrit_spark.suite._registry import (  # noqa: F401
     DEMO_REGISTRY,
     REGISTRY,
@@ -27,8 +31,9 @@ from purescript_ifrit_spark.suite._registry import (  # noqa: F401
     register_demo,
 )
 
-# Import order populates REGISTRY; the driver window below pins the
-# first 50 positions regardless, so order here is cosmetic.
+# Import order populates REGISTRY. The driver window computed at the end of
+# this module moves the 50 entries due first to the front; the rest keep
+# this order.
 from purescript_ifrit_spark.suite import (  # noqa: E402,F401
     core,
     dedup,
@@ -47,628 +52,28 @@ from purescript_ifrit_spark.suite import (  # noqa: E402,F401
 from purescript_ifrit_spark.suite.core import flagship  # noqa: E402,F401
 
 
-
 # ===========================================================================
-# Driver-window ordering
+# Driver window
 # ===========================================================================
 #
 # The driver's correctness harness checks the FIRST 50 registry entries
-# (dict insertion order). Rotation policy (COVERAGE.md ledger records the
-# per-entry driver history): never-verified ORACLE entries enter first,
-# then the entries with the OLDEST last driver check, so no entry's last
-# hard check ages past two rounds. Since r8 there are NO rows-only
-# entries in the driver registry at all (VERDICT r7 #4): the 15
-# approximate/composition demos moved to DEMO_REGISTRY, so every
-# `queries()` name has an `oracle_sql()` twin and `no_oracle` driver rows
-# are structurally impossible.
-#
-# Round-11 composition (VERDICT r10 #1 — planned at round start, 50 slots):
-#   1. the declared r11 queue head FIRST (_R11_QUEUE_HEAD, pinned at r10
-#      close — the two never-driver-checked entries; policy says
-#      never-verified enter first);
-#   2. the 28-entry declared r11 spill (_R11_SPILL exactly as stated and
-#      test-pinned at r10 round start — last hard check r6, the oldest
-#      thing in the registry), order preserved;
-#   3. backfill: the r7-last-checked oracle cohort in ledger order (50
-#      such entries exist; 19 fit the round-start window);
-#   4. new round-11 oracle entries land at the END of the window as
-#      built, each displacing the backfill TAIL by the stated policy and
-#      recorded inline below.
-#
-# Explicit r12 plan (VERDICT r10 #5 — stated NOW, at round start):
-# _R12_SPILL (the 31 r7-cohort entries that do not fit this window, plus
-# any backfill tail displaced by new r11 entries) heads the r12 window,
-# followed by _R12_CORE_SEXTET — the six r8-checked core SURVEY §2
-# contract entries, the oldest core-contract driver evidence in the
-# ledger. Both lists are test-pinned (tests/test_coverage_ledger.py), so
-# the §2 contract's driver evidence cannot age past the policy silently.
+# (dict insertion order) each round and writes CORRECTNESS_rNN.json to the
+# repo root. The window is computed from those artifacts alone, earliest
+# deadline first (Liu & Layland, JACM 1973): never-green entries, then by
+# the round by which each entry must be re-checked, then by name. A round
+# that lands moves the window on with no source edit.
 
-# The r10 window is kept (flattened) as the historical record the ledger
-# narrative cites: 50/50 hash-green in CORRECTNESS_r10.json, composition
-# was queue-head-free — 23-entry _R10_SPILL, r6 backfill, six new r10
-# entries displacing the backfill tail (recorded in _R11_SPILL comments).
-_DRIVER_WINDOW_R10 = [
-    "x_feature_hash",
-    "x_embedding_quantize",
-    "x_embedding_normalize",
-    "x_bigram_xent",
-    "x_html_extract",
-    "x_unigram_xent",
-    "x_quality_topfrac",
-    "x_blocklist_dedup",
-    "x_dedup_subdoc",
-    "x_linear_filter",
-    "x_temperature_mix",
-    "x_dau_exact",
-    "x_ohlc_bars",
-    "x_moving_avg",
-    "x_hopping_agg",
-    "x_value_histogram",
-    "x_corr_stats",
-    "x_cube_counts",
-    "x_heavy_hitters",
-    "x_source_overlap_exact",
-    "x_source_overlap_sketch",
-    "x_corpus_report",
-    "x_salted_join",
-    "x_dedup_clusters_planted",
-    "x_cluster_stats_planted",
-    "x_dedup_keep_best_planted",
-    "x_dedup_incremental_simhash_planted",
-    "x_chunk_documents",
-    "x_pack_sequences",
-    "x_rolling_fingerprint",
-    "x_explode_chunks",
-    "x_pii_redact",
-    "x_term_stats",
-    "x_tfidf_topk",
-    "x_repetition_stats",
-    "x_term_spectrum",
-    "x_vocab_divergence",
-    "x_ngram_novelty",
-    "x_bpe_pairs",
-    "x_url_domains",
-    "x_encoding_quality",
-    "x_packing_stats",
-    "xd_redact",
-    "xd_tumble_hourly",
-    "x_rrf_batch",
-    "x_profile_table_types",
-    "x_streaming_index_fold",
-    "x_ann_batch",
-    "x_ann_ivf_batch_planted",
-    "x_bm25_indexed",
-]
+WINDOW_SIZE = 50
 
-# The 29 r6-checked entries that did not fit the r10 window (stated at
-# r10 round start; comments record which new r10 entry displaced each).
-_R11_SPILL = [
-    "x_split_train_val",  # displaced from the r10 backfill tail by
-                          # x_rrf_batch
-    "x_embedding_centroids",  # displaced by x_profile_table_types
-    "xd_quality_score",       # displaced by x_streaming_index_fold
-    "xd_vectorize",           # displaced by x_ann_batch
-    "xd_htmltext",            # displaced by x_ann_ivf_batch_planted
-    "xd_sessionize",          # displaced by x_bm25_indexed
-    "x_hash_sample",
-    "x_stratified_fixed_k",
-    "x_stratified_sample",
-    "x_shuffle_shards",
-    "x_events_hourly",
-    "x_running_total",
-    "x_equidepth_buckets",
-    "x_asof_join",
-    "x_asof_forward",
-    "x_range_join",
-    "x_rollup_multi",
-    "x_winsorize",
-    "x_quantile_normalize",
-    "x_label_entropy",
-    "x_label_dispersion",
-    "x_cms_probe_planted",
-    "x_heavy_hitters_mg_planted",
-    "x_percentiles_approx_planted",
-    "x_tpch_q18ish",
-    "x_partitioned_sink",
-    "x_multimodal_png",
-    "x_multimodal_video",
-    "x_image_dedup_planted",
-]
-
-# Never-driver-checked entries enter FIRST (rotation policy): these two
-# landed after the r10 window saturated and were queued at r10 close.
-_R11_QUEUE_HEAD = [
-    "x_streaming_bm25",  # streaming retrieval vs the static BM25 index
-    "xd_simhash",        # SIMHASH dialect function (r10)
-]
-
-# r7-cohort backfill, ledger order (50 such entries; 20 fit this window).
-_R11_BACKFILL_R7 = [
-    "x_set_ops",
-    "x_anti_join",
-    "x_semi_join",
-    "x_multimodal_framesample",
-    "x_streaming_windowed",
-    "x_streaming_session",
-    "x_streaming_state",
-    "x_bm25_topk",
-    "x_truncate_docs",
-    "x_pack_text",
-    "x_leakage_split",
-    "x_audio_activity",
-    "x_scene_changes",
-    "xd_image_dhash",
-]
-
-_DRIVER_WINDOW_R11 = [
-    # -- (1) never-driver-checked queue head, as pinned at r10 close -------
-    *_R11_QUEUE_HEAD,
-    # -- (2) the declared r11 spill, exactly as stated at r10 round start --
-    *_R11_SPILL,
-    # -- (3) r7-cohort backfill, ledger order ------------------------------
-    *_R11_BACKFILL_R7,
-    # -- (4) new round-11 oracle entries land HERE as built, each
-    #        displacing the backfill tail above into _R12_SPILL ------------
-    "x_bm25_screen_report",   # displaced x_hll_distinct_planted
-    "x_ann_recall_planted",   # displaced x_ann_ivf_planted
-    "x_bm25_indexed_pruned",  # displaced x_ann_lsh_planted
-    "x_bm25_index_fold",      # displaced x_knn_join_planted
-    "x_ann_lsh_batch_planted",  # displaced x_multimodal_jpeg
-]
-
-# The r7-cohort entries that wait for r12 (ledger order; grows as new
-# r11 entries displace the backfill tail above).
-_R12_SPILL = [
-    "x_hll_distinct_planted",  # displaced from the r11 backfill tail by
-                               # x_bm25_screen_report
-    "x_ann_ivf_planted",       # displaced from the r11 backfill tail by
-                               # x_ann_recall_planted
-    "x_ann_lsh_planted",       # displaced from the r11 backfill tail by
-                               # x_bm25_indexed_pruned
-    "x_knn_join_planted",      # displaced from the r11 backfill tail by
-                               # x_bm25_index_fold
-    "x_multimodal_jpeg",       # displaced from the r11 backfill tail by
-                               # x_ann_lsh_batch_planted
-    "x_dau_bound_planted",
-    "x_duplicate_spans",
-    "x_span_dup_stats",
-    "x_gopher_quality",
-    "x_mixture_weights",
-    "xd_gopher",
-    "x_multimodal_resize",
-    "x_pagerank_planted",
-    "x_corpus_diff",
-    "x_fuzzy_join",
-    "x_unicode_nfc",
-    "x_url_canonicalize",
-    "x_kmeans_planted",
-    "x_vocab_growth",
-    "x_mojibake_repair",
-    "x_domain_blocklist",
-    "x_pmi_collocations",
-    "x_script_profile",
-    "x_c4_line_filter",
-    "x_line_dedup_global",
-    "x_jaccard_join_prefix",
-    "x_cdc_chunks",
-    "x_semdedup_planted",
-    "xd_c4",
-    "x_vocab_coverage",
-    "x_mmr_planted",
-    "x_extract_links",
-    "x_hard_negatives_planted",
-    "x_bpe_encode_planted",
-    "x_training_shards_planted",
-    "x_streaming_dau_planted",
-]
-
-# VERDICT r10 #5: the r8-checked core SURVEY §2 sextet — the oldest
-# core-contract driver evidence — is pinned to follow _R12_SPILL at the
-# r12 window head.
-_R12_CORE_SEXTET = [
-    "p1_projection",
-    "p2_nested_projection",
-    "f1_eq",
-    "o3_limit_before_offset",
-    "a1_a3_group_avg",
-    "s2_derived_table",
-]
-
-# Oracle entries that land AFTER the r11 window saturates queue here for
-# the r12 head (the session-3 precedent).
-_R12_QUEUE_HEAD: list = []
-
-# ---------------------------------------------------------------------------
-# Round-12 window (VERDICT r11 #1 — spent exactly as pinned at r11 close):
-#   1. _R12_QUEUE_HEAD (empty — nothing landed after the r11 window
-#      saturated);
-#   2. _R12_SPILL — the 36 r7-last-checked entries, order preserved;
-#   3. _R12_CORE_SEXTET — the six r8-checked core SURVEY §2 contract
-#      entries, the oldest core-contract driver evidence in the ledger;
-#   4. backfill: the r8-last-checked oracle cohort in ledger order (44
-#      such entries exist; 8 fit the round-start window);
-#   5. new round-12 oracle entries land at the END of the window as
-#      built, each displacing the backfill TAIL into _R13_SPILL and
-#      recorded inline below.
-
-# r8-cohort backfill, ledger order (44 such entries; 8 fit the
-# round-start window — new r12 entries displace from the TAIL, each
-# displacement recorded in _R13_SPILL).
-_R12_BACKFILL_R8 = [
-    "x_dedup_exact",
-    "x_dedup_minhash_planted",
-    "x_dedup_incremental_planted",
-]
-
-_DRIVER_WINDOW_R12 = [
-    # -- (1) declared r12 queue head (empty at r11 close) ------------------
-    *_R12_QUEUE_HEAD,
-    # -- (2) the declared r12 spill, exactly as stated at r11 round start --
-    *_R12_SPILL,
-    # -- (3) the pinned core sextet (VERDICT r10 #5 / r11 #1) --------------
-    *_R12_CORE_SEXTET,
-    # -- (4) r8-cohort backfill, ledger order ------------------------------
-    *_R12_BACKFILL_R8,
-    # -- (5) new round-12 oracle entries land HERE as built, each
-    #        displacing the backfill tail above into _R13_SPILL ------------
-    "x_neardup_multiprobe_planted",  # displaced x_lang_id
-    "x_ivf_refined_planted",         # displaced x_text_quality
-    "x_pq_adc_planted",              # displaced x_text_token_count
-    "x_streaming_ann_planted",       # displaced x_curate_exact
-    "x_embedding_contamination_planted",  # displaced x_dedup_simhash_planted
-]
-
-# Explicit r13 plan (stated NOW, at r12 round start): the r8-cohort
-# entries that do not fit this window (ledger order, 36 + any backfill
-# tail displaced by new r12 entries). NOTE the r13 composition crunch
-# recorded here so it cannot surprise anyone: at r13 the 24 core §2
-# entries last checked r9 (p3_alias .. b5_max_nested_array) hit the core
-# staleness SLA (age 4 > 3) and MUST head the r13 window; the r13 window
-# is therefore core-r9-cohort (24) + the oldest 26 of _R13_SPILL, and the
-# ~10-entry _R13_SPILL tail rides to r14 at age 6 (within the extension
-# SLA, which requires presence in the r14 window — see
-# window_staleness_violations below, which enforces exactly this).
-_R13_SPILL = [
-    "x_lang_id",  # displaced from the r12 backfill tail by
-                  # x_neardup_multiprobe_planted
-    "x_text_quality",  # displaced by x_ivf_refined_planted
-    "x_text_token_count",  # displaced by x_pq_adc_planted
-    "x_curate_exact",  # displaced by x_streaming_ann_planted
-    "x_dedup_simhash_planted",  # displaced by
-                                # x_embedding_contamination_planted
-    "x_fingerprint",
-    "x_token_rarity",
-    "x_contamination",
-    "xd_dedup_exact",
-    "xd_token_count",
-    "xd_quality",
-    "xd_lang_id",
-    "xd_chunk",
-    "xd_quality_filter",
-    "xd_quality_where",
-    "xd_split",
-    "x_budget_sample",
-    "x_ann_cosine_topk",
-    "x_embedding_neardup",
-    "x_chat_stats",
-    "x_sft_spans",
-    "x_preference_pairs",
-    "x_zorder_key",
-    "x_layout_pruning",
-    "x_skew_profile",
-    "x_robots_filter",
-    "x_mergeable_stats",
-    "x_chat_truncate",
-    "x_inverted_index",
-    "x_jl_project",
-    "x_compact_roundtrip",
-    "x_interval_join",
-    "x_streaming_interval_join",
-    "xd_jl_project",
-    "x_contribution_cap",
-    "x_kanon_suppress",
-    "x_gap_fill_locf",
-    "x_gap_fill_interp",
-    "x_markdown_sections",
-    "x_time_weighted_avg",
-    "xd_minhash",
-]
-
-# Oracle entries that land AFTER the r12 window saturates queue here for
-# the r13 head.
-_R13_QUEUE_HEAD: list = []
-
-# ---------------------------------------------------------------------------
-# Round-13 window (VERDICT r12 #1 — spent exactly as pre-planned at r12
-# round start, see the _R13_SPILL note above):
-#   1. _R13_QUEUE_HEAD (empty — nothing landed after the r12 window
-#      saturated);
-#   2. _R13_CORE_R9_COHORT — the 24 core SURVEY §2 contract entries last
-#      checked r9; at r13 they sit at age 4 > core SLA 3, so they MUST
-#      head the window (this is the composition the staleness tripwire
-#      fired to force);
-#   3. the oldest 26 of _R13_SPILL (the r8-cohort, ledger order) — at
-#      age 5 they are AT the extension SLA edge;
-#   4. new round-13 oracle entries land at the END of the window as
-#      built, each displacing the spill TAIL into _R14_SPILL and
-#      recorded inline below.
-
-# The 24-entry core-r9 cohort (derived pin: every core-grammar entry
-# whose last driver check is r9 — test_r13_core_cohort_plan_is_pinned).
-_R13_CORE_R9_COHORT = [
-    "p3_alias",
-    "f1_neq",
-    "f2_lt_gt",
-    "f3_lte_via_not",
-    "f3_gte_direct",
-    "f4_and",
-    "f5_or",
-    "f6_not_demorgan",
-    "f7_bare_boolean",
-    "f8_null_compare",
-    "f9_reversed_literal",
-    "o1_o2_topk",
-    "o4_pregroup_sort_limit",
-    "a2_group_by_null",
-    "a4_group_sum",
-    "a5_group_min_max",
-    "a6_group_count",
-    "a7_push_collect",
-    "b1_avg_array",
-    "b3_sum_array",
-    "b4_min_max_array",
-    "b6_count_array",
-    "b2_avg_nested_array",
-    "b5_max_nested_array",
-]
-
-# New round-13 oracle entries, appended as built; each displaces the
-# r13-window spill tail into _R14_SPILL MECHANICALLY (the slice
-# arithmetic below), so the window stays exactly 50 and the displaced
-# names cannot be mis-transcribed the way a hand-edit could.
-_R13_NEW: list = [
-    "x_ivf_pq_at_rest_planted",  # displaced x_robots_filter
-    "xd_pq",                     # displaced x_skew_profile
-    "x_ann_advise_planted",      # displaced x_layout_pruning
-    "x_pq_distortion_planted",   # displaced x_zorder_key
-    "x_pq_rerank_batch_planted",  # displaced x_preference_pairs
-    "x_ivf_pq_rerank_planted",    # displaced x_sft_spans
-]
-
-# 26 spill slots at round start; each _R13_NEW entry consumes one.
-_R13_SPILL_SLOTS = 26
-
-_DRIVER_WINDOW_R13 = [
-    # -- (1) declared r13 queue head (empty at r12 close) ------------------
-    *_R13_QUEUE_HEAD,
-    # -- (2) the core-r9 cohort, pre-planned at r12 round start ------------
-    *_R13_CORE_R9_COHORT,
-    # -- (3) the oldest of the declared r13 spill, order preserved ---------
-    *_R13_SPILL[: _R13_SPILL_SLOTS - len(_R13_NEW)],
-    # -- (4) new round-13 oracle entries land at the END as built ----------
-    *_R13_NEW,
-]
-
-# Explicit r14 plan (stated NOW, at r13 round start). The _R13_SPILL
-# tail that does not fit the r13 window rides to r14 at age 6 — past the
-# extension SLA unless spent, so it MUST head the r14 window; then the
-# 26-entry r9-checked extension cohort (age 5 at r14, at the SLA edge);
-# then r10-cohort backfill fills to 50. The window is sliced to 50 so
-# displacement into _R14_SPILL by new r13 entries auto-shrinks the
-# backfill — the plan stays exactly spendable as the round evolves.
-_R14_SPILL = [
-    # tail of _R13_SPILL that did not fit the r13 window (ledger order;
-    # grows from the head as _R13_NEW displaces the r13 spill tail)
-    *_R13_SPILL[_R13_SPILL_SLOTS - len(_R13_NEW):],
-]
-
-# The 26-entry r9-checked extension cohort (derived from the ledger;
-# age 5 = extension SLA edge at r14).
-_R14_EXT_R9_COHORT = [
-    "x_dedup_ngram_planted",
-    "x_sessionize",
-    "x_funnel",
-    "x_retention",
-    "x_topk_per_group",
-    "x_percentiles",
-    "x_distinct_count",
-    "x_pivot_events",
-    "x_robust_outliers",
-    "x_join_star",
-    "x_json_extract",
-    "x_tpch_q1ish",
-    "x_tpch_q3ish",
-    "x_tpch_q5ish",
-    "x_multimodal_features",
-    "x_multimodal_decode",
-    "x_multimodal_audio",
-    "xd_bm25",
-    "x_bm25_batch",
-    "x_rrf_fusion",
-    "x_streaming_index_dedup",
-    "x_xent_against",
-    "x_dsir_weights",
-    "x_profile_table",
-    "xd_nfc",
-    "x_tpch_q12ish",
-]
-
-# r10-cohort backfill, ledger order (50 such entries; the slice below
-# takes however many fit after the spill and the r9 cohort).
-_R14_BACKFILL_R10 = [
-    "x_embedding_normalize",
-    "x_embedding_quantize",
-    "x_dau_exact",
-    "x_dedup_subdoc",
-    "x_unigram_xent",
-    "x_corr_stats",
-    "x_cube_counts",
-    "x_quality_topfrac",
-    "x_ohlc_bars",
-    "x_moving_avg",
-    "x_hopping_agg",
-    "x_value_histogram",
-]
-
-# Oracle entries that land AFTER the r13 window saturates queue here for
-# the r14 head.
-_R14_QUEUE_HEAD: list = []
-
-# New round-14 oracle entries, appended as built; each displaces the
-# r10-cohort backfill tail into the r15 plan MECHANICALLY (the slice
-# arithmetic below — the r13 innovation, kept), so the window stays
-# exactly 50 and the displaced names cannot be mis-transcribed.
-_R14_NEW: list = [
-    "x_pq_rerank_pushdown_planted",  # displaced x_dau_exact
-    "x_ivf_pq_advise_planted",       # displaced x_embedding_quantize
-    "x_ivf_cell_health_planted",     # displaced x_embedding_normalize
-]
-
-# 3 backfill slots at round start (50 − 21 spill − 26 ext cohort); each
-# _R14_NEW entry consumes one.
-_R14_BACKFILL_SLOTS = 50 - len(_R14_SPILL) - len(_R14_EXT_R9_COHORT)
-
-# ---------------------------------------------------------------------------
-# Round-14 window (VERDICT r13 #8 — spent exactly as pre-planned at r13
-# round start, _DRIVER_WINDOW_R14_PLAN there = this list with _R14_NEW
-# empty):
-#   1. _R14_QUEUE_HEAD (empty — nothing landed after the r13 window
-#      saturated);
-#   2. _R14_SPILL — the 21-entry _R13_SPILL tail (last hard check r8;
-#      age 6 > extension SLA 5 at r14, so they MUST head the window);
-#   3. _R14_EXT_R9_COHORT — the 26 r9-checked extension entries (age 5 =
-#      the SLA edge);
-#   4. r10-cohort backfill, ledger order, sliced to fit;
-#   5. new round-14 oracle entries land at the END as built, each
-#      displacing the backfill tail into the r15 plan.
-_DRIVER_WINDOW_R14 = [
-    *_R14_QUEUE_HEAD,
-    *_R14_SPILL,
-    *_R14_EXT_R9_COHORT,
-    *_R14_BACKFILL_R10[: _R14_BACKFILL_SLOTS - len(_R14_NEW)],
-    *_R14_NEW,
-]
-
-# Explicit r15 plan (stated NOW, at r14 round start). After the r14
-# window lands, the oldest cohort is the r10-checked one (age 5 at r15,
-# the SLA edge — it MUST be fully spent by r16, and 50 of the 59 slots
-# it and the r11 cohort need fit this window): the full r10 cohort in
-# ledger order, MINUS whatever backfill the r14 window already spent
-# (the list-comprehension makes displacement by _R14_NEW self-
-# correcting), then r11-cohort backfill in ledger order fills to 50.
-_R15_R10_COHORT = [
-    "x_embedding_normalize",
-    "x_embedding_quantize",
-    "x_dau_exact",
-    "x_dedup_subdoc",
-    "x_unigram_xent",
-    "x_corr_stats",
-    "x_cube_counts",
-    "x_quality_topfrac",
-    "x_ohlc_bars",
-    "x_moving_avg",
-    "x_hopping_agg",
-    "x_value_histogram",
-    "x_salted_join",
-    "x_blocklist_dedup",
-    "x_heavy_hitters",
-    "x_source_overlap_exact",
-    "x_source_overlap_sketch",
-    "x_html_extract",
-    "x_temperature_mix",
-    "x_bigram_xent",
-    "x_feature_hash",
-    "x_linear_filter",
-    "x_corpus_report",
-    "x_dedup_clusters_planted",
-    "x_chunk_documents",
-    "x_pack_sequences",
-    "x_rolling_fingerprint",
-    "x_explode_chunks",
-    "x_pii_redact",
-    "x_term_stats",
-    "x_tfidf_topk",
-    "x_repetition_stats",
-    "x_term_spectrum",
-    "x_vocab_divergence",
-    "x_ngram_novelty",
-    "x_bpe_pairs",
-    "xd_redact",
-    "xd_tumble_hourly",
-    "x_url_domains",
-    "x_encoding_quality",
-    "x_packing_stats",
-    "x_cluster_stats_planted",
-    "x_dedup_keep_best_planted",
-    "x_dedup_incremental_simhash_planted",
-    "x_rrf_batch",
-    "x_profile_table_types",
-    "x_streaming_index_fold",
-    "x_ann_batch",
-    "x_ann_ivf_batch_planted",
-    "x_bm25_indexed",
-]
-
-# r11-cohort backfill head, ledger order (50 such entries; the slice
-# takes however many fit after the r10 cohort).
-_R15_BACKFILL_R11 = [
-    "xd_sessionize",
-    "xd_htmltext",
-    "x_split_train_val",
-    "x_hash_sample",
-    "x_stratified_fixed_k",
-    "x_stratified_sample",
-]
-
-# Oracle entries that land AFTER the r14 window saturates queue here
-# for the r15 head (the session-3 precedent): never-driver-checked, so
-# rotation policy puts them FIRST in the next window.
-_R15_QUEUE_HEAD: list = [
-    "x_ivf_pq_query_planted",  # r14: self-describing stored index
-]
-
-_DRIVER_WINDOW_R15_PLAN = [
-    *_R15_QUEUE_HEAD,
-    *[n for n in _R15_R10_COHORT if n not in _DRIVER_WINDOW_R14],
-    *_R15_BACKFILL_R11,
-][:50]
-
-# Round -> window lookup for the staleness machinery. The LAST entry is
-# the plan for the round about to be spent next; round-start discipline
-# (VERDICT r12 #1): (a) record the landed round's marks in _ledger.py,
-# (b) roll the plan forward one round, so the suite is green at judge
-# time even though the driver drops CORRECTNESS_r{N}.json after the
-# builder's final commit (tests/test_coverage_ledger.py overlays those
-# artifacts as evidence when validating the upcoming window).
-DRIVER_WINDOWS = {
-    10: _DRIVER_WINDOW_R10,
-    11: _DRIVER_WINDOW_R11,
-    12: _DRIVER_WINDOW_R12,
-    13: _DRIVER_WINDOW_R13,
-    14: _DRIVER_WINDOW_R14,
-    15: _DRIVER_WINDOW_R15_PLAN,
-}
-
-# ---------------------------------------------------------------------------
-# Registry staleness SLA (VERDICT r11 #6). 236+ entries x 50 slots/round
-# is a ~5-round revisit cycle; this is the policy, written down once, that
-# the per-round "oldest evidence" debates kept re-deriving:
-#
-#   * core SURVEY §2 contract entries (no x_/xd_ prefix): driver evidence
-#     may age at most 3 rounds — an entry last checked rN must be in the
-#     window of every round R with R - N > 3;
-#   * extension entries (x_/xd_): at most 5 rounds;
-#   * never-driver-checked oracle entries: must be in the next window (or
-#     its declared queue head) — the existing rotation rule, restated.
-#
-# Capacity check (so the SLA is known feasible, not aspirational): ~30
-# core entries revisited every <=4 rounds is ~7.5 slots/round; ~206
-# extension entries every <=6 rounds is ~34.3 slots/round; total ~42 of
-# the 50 slots, leaving ~8/round of headroom for new entries. Enforced by
-# tests/test_coverage_ledger.py::test_window_meets_staleness_sla, which
-# fails at composition time if the NEXT window, as composed, would let
-# any entry breach its tier's bound.
+# How many rounds an entry's last green driver check may age before it is
+# overdue: core SURVEY §2 contract entries (no x_/xd_ prefix) at most 3,
+# extension entries at most 5. An entry last green in round N must be in
+# the window of every round R with R - N > its bound. Never-green entries
+# must be in the next window.
 STALENESS_SLA = {"core": 3, "extension": 5}
+
+_ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")
+_ROOT = Path(__file__).resolve().parents[2]
 
 
 def entry_tier(name: str) -> str:
@@ -677,67 +82,131 @@ def entry_tier(name: str) -> str:
     return "extension" if name.startswith(("x_", "xd_")) else "core"
 
 
+def _artifacts(root=None) -> list:
+    """[(round, {entry: row})] for every CORRECTNESS_rNN.json in `root`
+    (default: the repo root), oldest round first. An unreadable artifact
+    still counts as a spent round, with no rows."""
+    out = []
+    for p in Path(root or _ROOT).glob("CORRECTNESS_r*.json"):
+        m = _ARTIFACT.fullmatch(p.name)
+        if not m:
+            continue
+        try:
+            rows = json.loads(p.read_text())
+        except ValueError:
+            rows = {}
+        out.append((int(m.group(1)), rows if isinstance(rows, dict) else {}))
+    return sorted(out, key=lambda a: a[0])
+
+
+def _is_green(row) -> bool:
+    return (
+        isinstance(row, dict)
+        and bool(row.get("rows_match"))
+        and bool(row.get("hash_match"))
+        and row.get("err") is None
+    )
+
+
+def last_green(root=None) -> dict:
+    """{entry: latest round whose artifact holds a green row for it}."""
+    return {
+        name: rnd
+        for rnd, rows in _artifacts(root)
+        for name, row in rows.items()
+        if _is_green(row)
+    }
+
+
+def upcoming_round(root=None) -> int:
+    """The round the next window is spent in: latest artifact round + 1."""
+    return max((rnd for rnd, _ in _artifacts(root)), default=0) + 1
+
+
+def deadline(name: str, last_green: dict):
+    """Last round `name` may be spent without; None if it was never green."""
+    if name not in last_green:
+        return None
+    return last_green[name] + STALENESS_SLA[entry_tier(name)]
+
+
+def driver_window(names, last_green: dict) -> list:
+    """The WINDOW_SIZE entries due first: never-green entries, then by
+    deadline, then by name."""
+
+    def key(name):
+        due = deadline(name, last_green)
+        return (due is not None, due or 0, name)
+
+    return sorted(names, key=key)[:WINDOW_SIZE]
+
+
 def window_staleness_violations(
-    window, current_round: int, extra_evidence=None, queue_head=()
+    window, current_round: int, last_green: dict
 ) -> list:
-    """Entries whose driver evidence breaches STALENESS_SLA if `window`
-    is spent at `current_round` without them.
-
-    Returns [] when the window satisfies the SLA. Each violation is
-    (name, reason). `current_round` is the round the window will be spent
-    in (latest recorded CORRECTNESS round + 1). `queue_head` (r14) is
-    the NEXT round's declared queue head: a never-checked entry that
-    landed after this round's window saturated satisfies the rotation
-    rule by being pinned there (the session-3 precedent, restated in
-    the STALENESS_SLA comment), not by squeezing into a full window.
-
-    `extra_evidence` (VERDICT r12 #1) is an optional {entry: round}
-    overlay of green driver evidence read from the on-disk
-    CORRECTNESS_r*.json artifacts themselves — at judge time the driver
-    has dropped the new round's artifact but the builder's _ledger.py
-    (necessarily committed earlier) does not carry its marks yet; the
-    overlay lets the check see that ground truth instead of going red on
-    bookkeeping lag."""
-    import re as _re
-
-    from purescript_ifrit_spark.suite._ledger import DRIVER_HISTORY
-
+    """[(entry, reason)] for every registry entry that breaches
+    STALENESS_SLA if `window` is spent at `current_round` without it;
+    [] when the window meets the SLA."""
     in_window = set(window)
-    extra = extra_evidence or {}
     bad = []
-    for name, (check, hist) in DRIVER_HISTORY.items():
-        if check != "oracle" or name in in_window:
+    for name in REGISTRY:
+        if name in in_window:
             continue
-        rounds = [
-            int(x)
-            for x in _re.findall(r"\br(\d+)\b", _re.sub(r"new r\d+", "", hist))
-        ]
-        if name in extra:
-            rounds = rounds + [int(extra[name])]
-        if not rounds:
-            if name not in queue_head:
-                bad.append(
-                    (name, "never driver-checked and not in window")
-                )
+        if name not in last_green:
+            bad.append((name, "never driver-checked and not in window"))
             continue
-        age = current_round - max(rounds)
-        bound = STALENESS_SLA[entry_tier(name)]
-        if age > bound:
+        tier = entry_tier(name)
+        age = current_round - last_green[name]
+        if age > STALENESS_SLA[tier]:
             bad.append(
-                (name, f"age {age} rounds > {entry_tier(name)} SLA {bound}")
+                (name, f"age {age} rounds > {tier} SLA {STALENESS_SLA[tier]}")
             )
     return bad
 
 
+def _verdict(row) -> str:
+    if not isinstance(row, dict):
+        return "malformed row"
+    if row.get("err") is not None:
+        # the last traceback line names the exception
+        lines = str(row["err"]).strip().splitlines() or [""]
+        return lines[-1].replace("|", "/")
+    if not row.get("rows_match"):
+        return f"rows {row.get('spark_rows')} vs oracle {row.get('oracle_rows')}"
+    return "hash mismatch"
+
+
+def render_ledger_table(root=None) -> str:
+    """Markdown table of every registry entry in driver order: the rounds
+    whose artifacts checked it (failed rows annotated from the row's own
+    fields), `rN*` for the upcoming round's window, and its deadline."""
+    artifacts = _artifacts(root)
+    green = last_green(root)
+    upcoming = upcoming_round(root)
+    window = set(driver_window(REGISTRY, green))
+    out = ["| pos | Entry | Driver rounds | Due by |", "|---|---|---|---|"]
+    for pos, name in enumerate(REGISTRY):
+        marks = [
+            f"r{rnd}" if _is_green(rows[name])
+            else f"r{rnd} ({_verdict(rows[name])})"
+            for rnd, rows in artifacts
+            if name in rows
+        ]
+        if name in window:
+            marks.append(f"r{upcoming}*")
+        due = deadline(name, green)
+        out.append(
+            f"| {pos} | `{name}` | {', '.join(marks) or '—'} "
+            f"| {'next round' if due is None else f'r{due}'} |"
+        )
+    return "\n".join(out)
+
+
 def _apply_driver_window(window: list) -> None:
-    ordered: Dict[str, Tuple[SparkFn, Optional[str]]] = {}
-    for name in window:
-        ordered[name] = REGISTRY[name]  # KeyError on typo = fail at import
-    for name, entry in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = entry
+    ordered = {name: REGISTRY[name] for name in window}
+    ordered.update(REGISTRY)
     REGISTRY.clear()
     REGISTRY.update(ordered)
 
 
-_apply_driver_window(_DRIVER_WINDOW_R14)
+_apply_driver_window(driver_window(REGISTRY, last_green()))

@@ -18,8 +18,8 @@ from purescript_ifrit_spark.suite._registry import (
 # growth, third swap): the single-query brute form is subsumed by
 # x_ann_batch — cosine_topk_batch per-query ids/order/sims ≡ cosine_topk
 # is test-pinned, so the batch entry's oracle covers this path. Oracle
-# while registered (green r1, r2, r4, r8, r13 — history preserved in
-# RETIRED_HISTORY): DuckDB list_cosine_similarity top-10, ordered by the
+# while registered (green r1, r2, r4, r8, r13 in the CORRECTNESS_rNN.json
+# artifacts): DuckDB list_cosine_similarity top-10, ordered by the
 # unrounded sim, round-5 projected.
 def x_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from purescript_ifrit_spark.operators.similarity import cosine_topk
@@ -289,7 +289,7 @@ _PLANTED_TOPK_ORACLE = (
 # growth): the single-query form is subsumed by x_ann_lsh_batch_planted —
 # lsh_topk_batch 1-query ≡ lsh_topk is test-pinned, so the batch entry's
 # oracle covers this path. Oracle while registered: _PLANTED_TOPK_ORACLE
-# (green r7, r7, r12 — history preserved in RETIRED_HISTORY).
+# (green r7, r12 in the CORRECTNESS_rNN.json artifacts).
 def x_ann_lsh_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH multi-probe top-k under planted basis clusters — the full
     operator path (signature in the scan, probe-bucket filter, exact
@@ -313,7 +313,7 @@ def x_ann_lsh_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # growth): the single-query form is subsumed by x_ann_ivf_batch_planted —
 # ivf_topk_batch 1-query ≡ ivf_topk is test-pinned, so the batch entry's
 # oracle covers this path. Oracle while registered: _PLANTED_TOPK_ORACLE
-# (green r7, r7, r12 — history preserved in RETIRED_HISTORY).
+# (green r7, r12 in the CORRECTNESS_rNN.json artifacts).
 def x_ann_ivf_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k under planted basis clusters — the full index path
     (bounded seeded centroid build, JVM-side cell assignment, nprobe

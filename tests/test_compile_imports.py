@@ -1,6 +1,7 @@
-"""`compile_query` imports no pyspark: compile-only callers pay neither
-Spark's import time nor its memory. Checked in a fresh interpreter, since
-the test session itself imports Spark."""
+"""`compile_query` and `IfritPlan.to_spark_sql` import no pyspark:
+compile-only callers pay neither Spark's import time nor its memory.
+Checked in a fresh interpreter, since the test session itself imports
+Spark."""
 
 from __future__ import annotations
 
@@ -37,10 +38,15 @@ compile_query(
     {"doc_id": "number", "text": "string"},
     "SELECT MIN(doc_id) AS keep GROUP BY FINGERPRINT(text)",
 )
-compile_query(
-    {"doc_id": "number", "text": "string"},
+# rendering the extension functions whose SQL reads the stopword and
+# language-marker tables
+for sql in (
     "SELECT doc_id, TOKEN_COUNT(text) AS n WHERE QUALITY(text) > 0.5",
-)
+    "SELECT doc_id, LANG_ID(text) AS lang",
+):
+    compile_query({"doc_id": "number", "text": "string"}, sql).to_spark_sql(
+        "docs"
+    )
 print(sorted(m for m in sys.modules if m.split(".")[0] == "pyspark"))
 '''
 

@@ -1,117 +1,76 @@
-"""Static guards for the COVERAGE.md driver-verification ledger and the
-driver window (VERDICT r5 #5): commit 5cd00bc repaired 12 ledger rows that
-hand-edits had silently dropped when the table renumbered — these tests
-make the repair permanent by failing whenever the committed table drifts
-from the registry or the renderer, and by pinning the window invariants
-the rotation policy promises."""
+"""Guards for the driver window: the 50 registry entries the driver checks
+each round are computed from the CORRECTNESS_rNN.json artifacts alone
+(never-green first, then earliest SLA deadline), so a landed round moves
+the window on with no source edit. Also the COVERAGE.md citation guard and
+bench.py's static guards."""
 
 from __future__ import annotations
 
+import json
 import re
+import shutil
 from pathlib import Path
 
 from purescript_ifrit_spark.suite import (
-    _DRIVER_WINDOW_R10,
-    _DRIVER_WINDOW_R11,
-    _DRIVER_WINDOW_R12,
-    _DRIVER_WINDOW_R13,
-    _DRIVER_WINDOW_R14,
-    _R11_BACKFILL_R7,
-    _R11_QUEUE_HEAD,
-    _R11_SPILL,
-    _R12_BACKFILL_R8,
-    _R12_CORE_SEXTET,
-    _R12_QUEUE_HEAD,
-    _R12_SPILL,
-    _R13_CORE_R9_COHORT,
-    _R13_NEW,
-    _R13_QUEUE_HEAD,
-    _R13_SPILL,
-    _R13_SPILL_SLOTS,
-    _R14_BACKFILL_R10,
-    _R14_BACKFILL_SLOTS,
-    _R14_EXT_R9_COHORT,
-    _R14_NEW,
-    _R14_QUEUE_HEAD,
-    _R14_SPILL,
-    _DRIVER_WINDOW_R15_PLAN,
-    _R15_BACKFILL_R11,
-    _R15_QUEUE_HEAD,
-    _R15_R10_COHORT,
     DEMO_REGISTRY,
-    DRIVER_WINDOWS,
     REGISTRY,
     STALENESS_SLA,
+    WINDOW_SIZE,
+    deadline,
+    driver_window,
     entry_tier,
-    window_staleness_violations,
-)
-from purescript_ifrit_spark.suite._ledger import (
-    DRIVER_HISTORY,
-    RETIRED_HISTORY,
+    last_green,
     render_ledger_table,
+    upcoming_round,
+    window_staleness_violations,
 )
 
 COVERAGE = Path(__file__).resolve().parents[1] / "COVERAGE.md"
 
-# Historical-window assertions look up entries that may since have been
-# retired to DEMO_REGISTRY (their driver history moves verbatim to
-# RETIRED_HISTORY — the r14 net-zero wave); live entries win on key
-# collisions (there are none by construction).
-FULL_HISTORY = {**RETIRED_HISTORY, **DRIVER_HISTORY}
+GREEN = {
+    "rows_match": True, "schema_match": True, "hash_match": True,
+    "spark_rows": 1, "oracle_rows": 1, "err": None,
+}
 
 
-def _committed_table_rows() -> list:
-    rows = []
-    for line in COVERAGE.read_text().split("\n"):
-        m = re.match(r"\| (\d+) \| `([^`]+)` \| ([^|]+) \| ([^|]+) \|", line)
-        if m:
-            rows.append(
-                (int(m.group(1)), m.group(2), m.group(3).strip(),
-                 m.group(4).strip())
-            )
-    return rows
+def _assert_edf_order(window, names, evidence):
+    # never-green entries first (as due at -1), then non-decreasing
+    # deadlines; nothing left outside is due before something let in
+    def due(name):
+        return deadline(name, evidence) if name in evidence else -1
+
+    dues = [due(n) for n in window]
+    assert dues == sorted(dues), window
+    outside = [due(n) for n in names if n not in set(window)]
+    assert not outside or dues[-1] <= min(outside)
 
 
 def test_ledger_history_covers_registry_exactly():
-    # every registry entry has a history row and vice versa — the r5
-    # failure mode (silently dropped rows) becomes a hard test failure
-    assert set(DRIVER_HISTORY) == set(REGISTRY)
-
-
-def test_committed_ledger_table_matches_renderer():
-    # COVERAGE.md's table must be the renderer's output byte-for-byte —
-    # hand-edits against a renumbered table can no longer silently no-op
-    committed = COVERAGE.read_text()
-    assert render_ledger_table() in committed
-
-
-def test_committed_ledger_positions_match_registry_order():
-    rows = _committed_table_rows()
-    names = list(REGISTRY)
-    assert len(rows) == len(names)
-    for pos, name, check, hist in rows:
-        assert names[pos] == name, (pos, name, names[pos])
-        want_check = "oracle" if REGISTRY[name][1] else "rows-only"
-        assert check == want_check, (name, check, want_check)
+    # the rendered ledger has one row per registry entry, in driver order
+    rows = re.findall(r"^\| (\d+) \| `([^`]+)` \|", render_ledger_table(), re.M)
+    assert [(int(pos), name) for pos, name in rows] == list(
+        enumerate(REGISTRY)
+    )
 
 
 def test_driver_window_is_exactly_fifty_oracle_entries():
     # the driver checks the FIRST 50 — all 50 slots must be spendable on
-    # hash-green outcomes (no rows-only entries per the rotation policy)
-    assert len(_DRIVER_WINDOW_R14) == 50
-    assert len(set(_DRIVER_WINDOW_R14)) == 50
-    assert list(REGISTRY)[:50] == _DRIVER_WINDOW_R14
-    rows_only = [n for n in _DRIVER_WINDOW_R14 if REGISTRY[n][1] is None]
+    # hash-green outcomes, and the import-time order is the computed one
+    window = driver_window(REGISTRY, last_green())
+    assert WINDOW_SIZE == 50
+    assert len(window) == 50
+    assert len(set(window)) == 50
+    assert list(REGISTRY)[:50] == window
+    rows_only = [n for n in window if REGISTRY[n][1] is None]
     assert rows_only == []
 
 
 def test_registry_is_fully_oracle_backed_and_demos_are_disjoint():
-    """VERDICT r7 #4: since r8 the driver registry carries NO rows-only
-    entries — `oracle_sql()` covers 100% of `queries()` — and every
-    retired demo lives in DEMO_REGISTRY with its history preserved."""
+    """Since r8 the driver registry carries NO rows-only entries —
+    `oracle_sql()` covers 100% of `queries()` — and every retired demo
+    lives in DEMO_REGISTRY."""
     no_oracle = [n for n, (_, o) in REGISTRY.items() if o is None]
     assert no_oracle == []
-    assert set(DEMO_REGISTRY) == set(RETIRED_HISTORY)
     assert not set(DEMO_REGISTRY) & set(REGISTRY)
     # each retired name is shadowed by a green planted/bound twin that IS
     # in the driver registry (documented pairing, spot-pinned here)
@@ -142,360 +101,131 @@ def test_registry_is_fully_oracle_backed_and_demos_are_disjoint():
         assert twin in REGISTRY and REGISTRY[twin][1] is not None, (demo, twin)
 
 
-def _checked_rounds(hist: str) -> list:
-    # "new rN" marks creation, not a driver check; plain rN tokens are
-    # the recorded driver rounds
-    return [int(x) for x in re.findall(r"\br(\d+)\b", re.sub(r"new r\d+", "", hist))]
-
-
 def test_window_prioritizes_never_verified_oracle_entries():
-    # every oracle-backed entry whose history has no driver round yet
-    # must be IN the window — or, if it lands after the window saturates
-    # (the session-3 precedent), pinned in the declared r15 queue head.
-    # Either way, no entry silently leaves the rotation.
-    never = [
-        name
-        for name, (check, hist) in DRIVER_HISTORY.items()
-        if check == "oracle" and not _checked_rounds(hist)
-    ]
-    missing = [
-        n for n in never
-        if n not in _DRIVER_WINDOW_R14 and n not in _R15_QUEUE_HEAD
-    ]
-    assert missing == [], missing
-    # the queue is real: disjoint from the window, oracle-backed,
-    # registry-resident, never-checked
-    for n in _R15_QUEUE_HEAD:
-        assert n in REGISTRY and REGISTRY[n][1] is not None, n
-        assert n not in _DRIVER_WINDOW_R14, n
-        assert not _checked_rounds(DRIVER_HISTORY[n][1]), n
+    # every registry entry with no green driver row yet is IN the window,
+    # ahead of every entry that has evidence; the rest follow by deadline
+    evidence = last_green()
+    window = list(REGISTRY)[:50]
+    never = [n for n in REGISTRY if n not in evidence]
+    assert window[: len(never)] == sorted(never)
+    _assert_edf_order(window, REGISTRY, evidence)
+    # a newly registered entry joins them, whatever its name sorts as
+    grown = driver_window([*REGISTRY, "x_zz_new"], evidence)
+    assert "x_zz_new" in grown[: len(never) + 1]
 
 
-def test_window_r11_composition_is_the_pinned_plan():
-    # VERDICT r10 #1 (historical, kept as the audit record): the
-    # never-driver-checked queue head held the FIRST 2 slots; the
-    # declared r11 spill (last hard check r6 at the time — histories now
-    # also carry the r11 mark the window earned) followed, order
-    # preserved; the rest was r7-cohort backfill plus new r11 entries at
-    # the tail.
-    assert _DRIVER_WINDOW_R11[:2] == _R11_QUEUE_HEAD
-    assert _DRIVER_WINDOW_R11[2:2 + len(_R11_SPILL)] == _R11_SPILL
-    for name in _R11_SPILL:
-        assert 6 in _checked_rounds(DRIVER_HISTORY[name][1]), name
-    tail = _DRIVER_WINDOW_R11[2 + len(_R11_SPILL):]
-    assert tail[:len(_R11_BACKFILL_R7)] == _R11_BACKFILL_R7
-    for name in tail:
-        rounds = _checked_rounds(DRIVER_HISTORY[name][1])
-        # r7-last-checked backfill, or a new r11 entry whose first-ever
-        # driver check IS the r11 mark
-        assert 7 in rounds or rounds == [11], (name, rounds)
-
-
-def test_window_r12_composition_is_the_pinned_plan():
-    # VERDICT r11 #1 (historical, kept as the audit record): the r12
-    # window was spent exactly as pinned at r11 close — _R12_QUEUE_HEAD
-    # (empty), then the 36-entry declared spill (last hard check r7 at
-    # the time — histories now also carry the r12 mark the window
-    # earned) order-preserved, then the core sextet, then r8-cohort
-    # backfill in ledger order; new r12 entries landed only at the tail,
-    # displacing backfill into _R13_SPILL.
-    head = len(_R12_QUEUE_HEAD)
-    assert _DRIVER_WINDOW_R12[:head] == _R12_QUEUE_HEAD
-    assert _DRIVER_WINDOW_R12[head:head + len(_R12_SPILL)] == _R12_SPILL
-    for name in _R12_SPILL:
-        assert 7 in _checked_rounds(FULL_HISTORY[name][1]), name
-    mid = head + len(_R12_SPILL)
-    sextet = _DRIVER_WINDOW_R12[mid:mid + len(_R12_CORE_SEXTET)]
-    assert sextet == _R12_CORE_SEXTET
-    tail = _DRIVER_WINDOW_R12[mid + len(_R12_CORE_SEXTET):]
-    assert tail[:len(_R12_BACKFILL_R8)] == _R12_BACKFILL_R8
-    for name in tail:
-        rounds = _checked_rounds(FULL_HISTORY[name][1])
-        # r8-last-checked backfill, or a new r12 entry whose first-ever
-        # driver check IS the r12 mark
-        assert 8 in rounds or rounds == [12], (name, rounds)
-
-
-def _disk_evidence() -> dict:
-    """Green driver evidence read from the CORRECTNESS_r*.json artifacts
-    themselves: {entry: latest round with a green row}. The overlay for
-    window_staleness_violations (VERDICT r12 #1) — at judge time the
-    driver has dropped the new round's artifact but the committed
-    _ledger.py cannot carry its marks yet."""
-    import json
-
-    ev: dict = {}
-    for p in COVERAGE.parent.glob("CORRECTNESS_r*.json"):
-        m = re.match(r"CORRECTNESS_r(\d+)", p.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.loads(p.read_text())
-        except ValueError:
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict) or row.get("err") is not None:
-                continue
-            if row.get("rows_match") and row.get("hash_match"):
-                ev[name] = max(ev.get(name, 0), rnd)
-    return ev
+def test_evidence_reader_applies_the_green_rule(tmp_path, monkeypatch):
+    # green = rows_match and hash_match and err is None; a later green row
+    # wins; files that are not CORRECTNESS_rNN.json are ignored; an
+    # unreadable artifact is a spent round with no evidence
+    a, b, c, d = list(REGISTRY)[:4]
+    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
+        a: GREEN,
+        b: {**GREEN, "hash_match": False},
+        c: {**GREEN, "rows_match": False, "spark_rows": 3},
+        d: {**GREEN, "rows_match": None, "hash_match": None,
+            "err": "Traceback ...\nTypeError: boom"},
+    }))
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({b: GREEN}))
+    (tmp_path / "CORRECTNESS_r03.json").write_text("{not json")
+    (tmp_path / "CORRECTNESS_r09.json.bak").write_text(json.dumps({c: GREEN}))
+    assert last_green(tmp_path) == {a: 1, b: 2}
+    assert upcoming_round(tmp_path) == 4
+    table = render_ledger_table(tmp_path)
+    assert f"| `{b}` | r1 (hash mismatch), r2" in table
+    assert f"| `{c}` | r1 (rows 3 vs oracle 1)" in table
+    assert f"| `{d}` | r1 (TypeError: boom)" in table
+    # the repo's own artifacts are found from the package, not the cwd
+    evidence = last_green()
+    monkeypatch.chdir(tmp_path)
+    assert last_green() == evidence and evidence
 
 
 def test_window_meets_staleness_sla():
-    # VERDICT r11 #6 / r12 #1: the written-down SLA (core contract
-    # evidence <= 3 rounds old, extensions <= 5, never-checked -> next
-    # window) is enforced against the window ABOUT TO BE SPENT: compute
-    # every entry's age from the ledger PLUS the on-disk CORRECTNESS
-    # artifacts (so the check sees ground truth even before the round's
-    # bookkeeping lands) against current_round = latest recorded
-    # CORRECTNESS round + 1, and fail if that round's window, as
-    # composed, lets any entry breach its tier's bound. DRIVER_WINDOWS
-    # must always hold a plan for the upcoming round — the round-start
-    # discipline is (a) record marks in _ledger.py, (b) roll the plan
-    # one round forward, so this test is green at judge time and goes
-    # red only on a real rotation gap.
+    # the SLA (core contract evidence <= 3 rounds old, extensions <= 5,
+    # never-checked -> next window) is enforced against the window ABOUT
+    # TO BE SPENT: every entry's age comes from the on-disk CORRECTNESS
+    # artifacts against current_round = latest artifact round + 1, and
+    # the test fails if that round's window lets any entry breach its
+    # tier's bound. It can only fail when more entries are due than the
+    # window has slots: after a round that did not check the computed
+    # window, or registry growth past test_registry_capacity_fits_the_sla.
     assert STALENESS_SLA == {"core": 3, "extension": 5}
     assert entry_tier("p1_projection") == "core"
     assert entry_tier("x_dedup_exact") == "extension"
     assert entry_tier("xd_simhash") == "extension"
-    evidence = _disk_evidence()
-    current_round = max(
-        [
-            int(m.group(1))
-            for p in COVERAGE.parent.glob("CORRECTNESS_r*.json")
-            if (m := re.match(r"CORRECTNESS_r(\d+)", p.name))
-        ]
-    ) + 1
+    evidence = last_green()
+    current_round = upcoming_round()
     assert current_round >= 13
-    assert current_round in DRIVER_WINDOWS, (
-        f"no window plan for round {current_round}: record r"
-        f"{current_round - 1} marks in _ledger.py and compose "
-        f"_DRIVER_WINDOW_R{current_round} (suite/__init__.py)"
-    )
-    next_queue = _R15_QUEUE_HEAD if current_round == 14 else ()
-    violations = window_staleness_violations(
-        DRIVER_WINDOWS[current_round], current_round, evidence,
-        queue_head=next_queue,
-    )
-    assert violations == [], violations
     # the checker is not vacuous: an empty window at the same round must
     # report the stale cohorts this window exists to clear
     assert window_staleness_violations([], current_round, evidence)
-    # and the overlay itself is real: the r12 artifact contributes
-    # evidence for every r12-window entry
-    assert all(evidence.get(n, 0) >= 12 for n in _DRIVER_WINDOW_R12)
-
-
-def test_window_r14_composition_is_the_pinned_plan():
-    # VERDICT r13 #8: the r14 window is spent exactly as pre-planned at
-    # r13 round start — queue head (empty), then the 21-entry _R13_SPILL
-    # tail (age 6 > extension SLA 5, MUST head the window), then the 26
-    # r9-checked extension entries (age 5 = the SLA edge), then
-    # r10-cohort backfill in ledger order; new r14 entries land only at
-    # the tail, displacing the backfill tail into the r15 plan
-    # mechanically via _R14_NEW.
-    head = len(_R14_QUEUE_HEAD)
-    assert _DRIVER_WINDOW_R14[:head] == _R14_QUEUE_HEAD
-    assert _DRIVER_WINDOW_R14[head:head + len(_R14_SPILL)] == _R14_SPILL
-    mid = head + len(_R14_SPILL)
-    assert (
-        _DRIVER_WINDOW_R14[mid:mid + len(_R14_EXT_R9_COHORT)]
-        == _R14_EXT_R9_COHORT
-    )
-    for name in _R14_EXT_R9_COHORT:
-        rounds = _checked_rounds(DRIVER_HISTORY[name][1])
-        assert max(r for r in rounds if r < 14) == 9, name
-    tail = _DRIVER_WINDOW_R14[mid + len(_R14_EXT_R9_COHORT):]
-    n_backfill = _R14_BACKFILL_SLOTS - len(_R14_NEW)
-    assert tail[:n_backfill] == _R14_BACKFILL_R10[:n_backfill]
-    assert tail[n_backfill:] == _R14_NEW
-    for name in _R14_BACKFILL_R10:
-        rounds = _checked_rounds(DRIVER_HISTORY[name][1])
-        assert max(r for r in rounds if r < 14) == 10, name
-
-
-def test_window_meets_staleness_sla_under_r14_evidence():
-    # the window about to be spent, adjudicated under the evidence it
-    # will itself produce (green rows for every r14 entry): no entry may
-    # breach its SLA tier at r14 — the same check
-    # test_window_meets_staleness_sla runs, restated with the overlay
-    # the r14 driver pass will write.
-    evidence = _disk_evidence()
-    evidence.update({n: 14 for n in _DRIVER_WINDOW_R14})
     violations = window_staleness_violations(
-        _DRIVER_WINDOW_R14, 14, evidence, queue_head=_R15_QUEUE_HEAD
+        list(REGISTRY)[:50], current_round, evidence
     )
     assert violations == [], violations
-    # the queue-head escape is real but narrow: without it the same
-    # call flags exactly the queued never-checked entries
-    flagged = window_staleness_violations(_DRIVER_WINDOW_R14, 14, evidence)
-    assert sorted(n for n, _ in flagged) == sorted(_R15_QUEUE_HEAD)
 
 
-def test_r15_plan_meets_staleness_sla_today():
-    # the declared one-round-ahead plan must already satisfy the SLA
-    # under the evidence the r14 driver pass will produce (its window =
-    # green rows for every r14 entry) — so the suite stays green at
-    # judge time, after the driver drops CORRECTNESS_r14.json and before
-    # the r15 builder's first commit.
-    evidence = _disk_evidence()
-    evidence.update({n: 14 for n in _DRIVER_WINDOW_R14})
-    violations = window_staleness_violations(
-        _DRIVER_WINDOW_R15_PLAN, 15, evidence
+def test_window_moves_on_at_round_boundary(tmp_path):
+    # a landed round is the only input the next window needs: mark the
+    # upcoming window green in a synthetic artifact and recompute
+    for p in COVERAGE.parent.glob("CORRECTNESS_r*.json"):
+        shutil.copy(p, tmp_path)
+    rnd = upcoming_round(tmp_path)
+    assert rnd == upcoming_round()
+    window = driver_window(REGISTRY, last_green(tmp_path))
+    assert window == list(REGISTRY)[:50]
+    (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(
+        json.dumps({name: GREEN for name in window})
     )
-    assert violations == [], violations
-    assert len(_DRIVER_WINDOW_R15_PLAN) == 50
-    assert len(set(_DRIVER_WINDOW_R15_PLAN)) == 50
-    # plan structure: the declared queue head (entries that landed after
-    # the r14 window saturated — never-checked enters first), then the
-    # r10 cohort not already re-checked by the r14 window
-    # (self-correcting against _R14_NEW displacement), then r11-cohort
-    # backfill sliced to fit
-    head = len(_R15_QUEUE_HEAD)
-    assert _DRIVER_WINDOW_R15_PLAN[:head] == _R15_QUEUE_HEAD
-    r10_due = [n for n in _R15_R10_COHORT if n not in _DRIVER_WINDOW_R14]
-    assert (
-        _DRIVER_WINDOW_R15_PLAN[head:head + len(r10_due)]
-        == r10_due[: 50 - head]
-    )
-    rest = _DRIVER_WINDOW_R15_PLAN[head + len(r10_due):]
-    assert rest == _R15_BACKFILL_R11[:len(rest)]
+    assert upcoming_round(tmp_path) == rnd + 1
+    evidence = last_green(tmp_path)
+    assert all(evidence[n] == rnd for n in window)
+    moved = driver_window(REGISTRY, evidence)
+    assert len(moved) == 50 and moved != window
+    _assert_edf_order(moved, REGISTRY, evidence)
+    assert f"r{rnd + 1}*" in render_ledger_table(tmp_path)
+    # never-green entries still come first: a new entry heads the window
+    never = [n for n in REGISTRY if n not in evidence]
+    grown = driver_window([*REGISTRY, "x_zz_new"], evidence)
+    assert grown[: len(never) + 1] == sorted([*never, "x_zz_new"])
+
+
+def test_deadline_first_rotation_drains_the_backlog():
+    # 25 simulated rounds from today's evidence, each window going green:
+    # the backlog left by the wasted round 15 (57 entries due at round 16
+    # for 50 slots) drains by round 19, and no entry breaches its SLA
+    # after that
+    evidence = last_green()
+    start = upcoming_round()
+    for rnd in range(start, start + 25):
+        window = driver_window(REGISTRY, evidence)
+        violations = window_staleness_violations(window, rnd, evidence)
+        if rnd >= 19:
+            assert violations == [], (rnd, violations)
+        evidence.update({name: rnd for name in window})
 
 
 def test_coverage_cites_only_live_entry_names():
-    # VERDICT r11 #5: COVERAGE.md rows cited pre-rename entry names
-    # (x_dedup_minhash, x_dedup_simhash_pairs, x_curate_pipeline as live
-    # entries). Guard: every x_/xd_ name cited anywhere in COVERAGE.md
-    # must exist in the driver registry or (for the documented retired
-    # demos) in DEMO_REGISTRY — so a rename can never leave a dangling
-    # citation again.
+    # COVERAGE.md rows once cited pre-rename entry names. Guard: every
+    # x_/xd_ name cited anywhere in COVERAGE.md must exist in the driver
+    # registry or (for the documented retired demos) in DEMO_REGISTRY —
+    # so a rename can never leave a dangling citation again.
     cited = set(re.findall(r"`(xd?_[a-z0-9_]+)`", COVERAGE.read_text()))
     known = set(REGISTRY) | set(DEMO_REGISTRY)
     dangling = sorted(n for n in cited if n not in known)
     assert dangling == [], dangling
 
 
-def test_window_r10_history_marks_are_recorded():
-    # post-round bookkeeping (VERDICT r10 "what's wrong" #2): every entry
-    # the r10 driver checked (CORRECTNESS_r10.json = the 50-slot window,
-    # 50/50 hash-green) carries the confirming r10 round mark
-    assert len(_DRIVER_WINDOW_R10) == 50
-    for name in _DRIVER_WINDOW_R10:
-        assert 10 in _checked_rounds(DRIVER_HISTORY[name][1]), name
-
-
-def test_window_r11_history_marks_are_recorded():
-    # post-round bookkeeping: every entry the r11 driver checked
-    # (CORRECTNESS_r11.json = the 50-slot window, 50/50 hash-green)
-    # carries the confirming r11 round mark
-    assert len(_DRIVER_WINDOW_R11) == 50
-    for name in _DRIVER_WINDOW_R11:
-        assert 11 in _checked_rounds(DRIVER_HISTORY[name][1]), name
-
-
-def test_window_r12_history_marks_are_recorded():
-    # post-round bookkeeping: every entry the r12 driver checked
-    # (CORRECTNESS_r12.json = the 50-slot window, 50/50 hash-green)
-    # carries the confirming r12 round mark
-    assert len(_DRIVER_WINDOW_R12) == 50
-    for name in _DRIVER_WINDOW_R12:
-        assert 12 in _checked_rounds(FULL_HISTORY[name][1]), name
-
-
-def test_window_r13_history_marks_are_recorded():
-    # post-round bookkeeping: every entry the r13 driver checked
-    # (CORRECTNESS_r13.json = the 50-slot window, 50/50 hash-green)
-    # carries the confirming r13 round mark
-    assert len(_DRIVER_WINDOW_R13) == 50
-    for name in _DRIVER_WINDOW_R13:
-        assert 13 in _checked_rounds(FULL_HISTORY[name][1]), name
-
-
-def test_window_r13_composition_is_the_pinned_plan():
-    # VERDICT r12 #1: the r13 window is spent exactly as pre-planned at
-    # r12 round start — queue head (empty), then the 24-entry core-r9
-    # cohort (age 4 > core SLA 3, the cohort the staleness tripwire
-    # fired to force), then the oldest 26 of the declared _R13_SPILL in
-    # ledger order; new r13 entries land only at the tail, displacing
-    # the spill tail into _R14_SPILL mechanically via _R13_NEW.
-    head = len(_R13_QUEUE_HEAD)
-    assert _DRIVER_WINDOW_R13[:head] == _R13_QUEUE_HEAD
-    assert (
-        _DRIVER_WINDOW_R13[head:head + len(_R13_CORE_R9_COHORT)]
-        == _R13_CORE_R9_COHORT
-    )
-    mid = head + len(_R13_CORE_R9_COHORT)
-    n_spill = _R13_SPILL_SLOTS - len(_R13_NEW)
-    assert _DRIVER_WINDOW_R13[mid:mid + n_spill] == _R13_SPILL[:n_spill]
-    assert _DRIVER_WINDOW_R13[mid + n_spill:] == _R13_NEW
-    for name in _R13_SPILL:
-        # the whole spill cohort was r8-last-checked AS OF the r13
-        # composition (the spent window added r13 marks to the slice
-        # that fit; FULL_HISTORY covers later retirees)
-        rounds = _checked_rounds(FULL_HISTORY[name][1])
-        assert max(r for r in rounds if r < 13) == 8, name
-    for name in _R13_NEW:
-        # new r13 entries' first-ever driver check IS the r13 mark
-        assert _checked_rounds(FULL_HISTORY[name][1]) == [13], name
-
-
-def test_r13_core_cohort_plan_is_pinned():
-    # VERDICT r12 #1: the 24 core SURVEY §2 contract entries last
-    # checked r9 — the cohort at age 4 > core SLA 3 — head the r13
-    # window. The pin is derived, not typed: the cohort must be EXACTLY
-    # the core-grammar entries (no x_/xd_ prefix) whose last driver
-    # check as of the r13 composition is r9.
-    core_r9 = [
-        name
-        for name, (check, hist) in DRIVER_HISTORY.items()
-        if check == "oracle"
-        and not name.startswith(("x_", "xd_"))
-        and [r for r in _checked_rounds(hist) if r < 13]
-        and max(r for r in _checked_rounds(hist) if r < 13) == 9
-    ]
-    assert sorted(core_r9) == sorted(_R13_CORE_R9_COHORT)
-    assert len(_R13_CORE_R9_COHORT) == 24
-    assert set(_R13_CORE_R9_COHORT) <= set(_DRIVER_WINDOW_R13)
-
-
-def test_window_spill_is_exactly_the_stated_r14_list():
-    # after the r13 window landed, every oracle entry NOT in that window
-    # must have a last check of r9+ — EXCEPT the explicitly declared r14
-    # spill (the stated-plan discipline from VERDICT r7 #1). An r8-or-
-    # older entry outside both lists is a rotation bug. Evaluated AS OF
-    # the r14 composition (rounds < 14): the r14 window being spent now
-    # adds r14 marks to these same histories.
-    stale = []
-    for name, (check, hist) in DRIVER_HISTORY.items():
-        if (check != "oracle" or name in _DRIVER_WINDOW_R13
-                or name in _R14_QUEUE_HEAD):
-            continue
-        pre = [r for r in _checked_rounds(hist) if r < 14]
-        if not pre:
-            # entries born at r14+: never-checked rotation is covered by
-            # test_window_prioritizes_never_verified_*
-            assert re.search(r"new r1[4-9]", hist), (name, hist)
-            continue
-        if max(pre) < 9:
-            stale.append(name)
-    assert sorted(stale) == sorted(_R14_SPILL), (
-        sorted(set(stale) ^ set(_R14_SPILL))
-    )
-    for name in _R14_SPILL:
-        rounds = _checked_rounds(DRIVER_HISTORY[name][1])
-        assert max(r for r in rounds if r < 14) == 8, name
-
-
 def test_registry_capacity_fits_the_sla():
-    # VERDICT r12 #5: growth discipline, stated once and enforced. At
-    # steady state each core entry consumes a window slot every
-    # (core SLA + 1) rounds and each extension entry every
-    # (extension SLA + 1) rounds; the projected demand plus a reserve
-    # for new entries (the observed ~5/round intake, which occupies
-    # slots the round it lands) must fit the 50-slot window. When this
-    # fails, the registry must go net-zero: retire a superseded demo to
-    # DEMO_REGISTRY (the r8 precedent) for every new `_planted` entry.
+    # Growth discipline, stated once and enforced. At steady state each
+    # core entry consumes a window slot every (core SLA + 1) rounds and
+    # each extension entry every (extension SLA + 1) rounds; the projected
+    # demand plus a reserve for new entries (the observed ~5/round intake,
+    # which occupies slots the round it lands) must fit the 50-slot
+    # window. When this fails, the registry must go net-zero: retire a
+    # superseded demo to DEMO_REGISTRY (the r8 precedent) for every new
+    # `_planted` entry.
     n_core = sum(
         1 for n in REGISTRY if not n.startswith(("x_", "xd_"))
     )
@@ -512,64 +242,6 @@ def test_registry_capacity_fits_the_sla():
         "retire superseded demos to DEMO_REGISTRY (net-zero growth) "
         "before registering more"
     )
-
-
-def test_window_backfill_spill_is_exactly_the_stated_r13_list():
-    # after the r12 window lands, every oracle entry NOT in the window
-    # must have a last check of r9+ — EXCEPT the explicitly declared r13
-    # spill (the stated-plan discipline from VERDICT r7 #1). An r8-or-
-    # older entry outside both lists is a rotation bug.
-    stale = []
-    for name, (check, hist) in DRIVER_HISTORY.items():
-        if (check != "oracle" or name in _DRIVER_WINDOW_R12
-                or name in _R13_QUEUE_HEAD):
-            continue
-        # evaluated AS OF the r13 composition: later windows add r13/r14
-        # marks to these same histories
-        pre = [r for r in _checked_rounds(hist) if r < 13]
-        if not pre:
-            # entries born after r12 close: never-checked rotation is
-            # covered by test_window_prioritizes_never_verified_*
-            assert re.search(r"\br1[3-9]\b", DRIVER_HISTORY[name][1]), (
-                name, hist,
-            )
-            continue
-        if max(pre) < 9:
-            stale.append(name)
-    # retirement-aware: a name moved to DEMO_REGISTRY/RETIRED_HISTORY
-    # (the r14 net-zero wave) leaves the driver rotation EXPLICITLY —
-    # the twins test pins its oracle-covering replacement — so the
-    # stale scan (over live DRIVER_HISTORY) matches the spill list
-    # minus retirees
-    live_spill = [n for n in _R13_SPILL if n in DRIVER_HISTORY]
-    assert sorted(stale) == sorted(live_spill), (
-        sorted(set(stale) ^ set(live_spill))
-    )
-    for name in _R13_SPILL:
-        rounds = _checked_rounds(FULL_HISTORY[name][1])
-        assert max(r for r in rounds if r < 13) == 8, name
-
-
-def test_r12_core_sextet_plan_is_pinned():
-    # VERDICT r10 #5: the six r8-checked core SURVEY §2 contract entries
-    # (the oldest core-contract driver evidence) are pinned to follow
-    # _R12_SPILL in the r12 window. The pin is derived, not typed: the
-    # sextet must be EXACTLY the core-grammar entries (no x_/xd_
-    # extension prefix) whose last driver check is r8.
-    # "last check r8" is evaluated AS OF the r12 composition: the spent
-    # window added r12 marks to these same histories
-    core_r8 = [
-        name
-        for name, (check, hist) in DRIVER_HISTORY.items()
-        if check == "oracle"
-        and not name.startswith(("x_", "xd_"))
-        and [r for r in _checked_rounds(hist) if r < 12]
-        and max(r for r in _checked_rounds(hist) if r < 12) == 8
-    ]
-    assert sorted(core_r8) == sorted(_R12_CORE_SEXTET)
-    assert len(_R12_CORE_SEXTET) == 6
-    # spent THIS round: every sextet entry sits inside the r12 window
-    assert set(_R12_CORE_SEXTET) <= set(_DRIVER_WINDOW_R12)
 
 
 def test_bench_loads_every_table_it_references():

@@ -233,15 +233,3 @@ def test_decimal_sum_headroom_under_2_53(sf_dir):
             f"decimal-sum 10x margin lost at sf{sf}: {worst} = "
             f"{maxes[worst]:.3e} vs 2^53/10 = {bound / 10:.3e}"
         )
-
-
-def test_driver_window_is_exactly_fifty():
-    """The driver checks REGISTRY positions 0-49; the pinned window must
-    fill the hard-signal budget exactly (a short list would silently
-    promote tail entries the COVERAGE ledger doesn't schedule). The
-    full window/ledger invariant suite lives in test_coverage_ledger.py."""
-    from purescript_ifrit_spark.suite import REGISTRY, _DRIVER_WINDOW_R14
-
-    assert len(_DRIVER_WINDOW_R14) == 50
-    assert len(set(_DRIVER_WINDOW_R14)) == 50
-    assert list(REGISTRY)[:50] == _DRIVER_WINDOW_R14
