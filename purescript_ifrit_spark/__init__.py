@@ -7,12 +7,15 @@ brand-new Spark-first engine with the same dialect and semantics:
 
     SQL string ──lexer──▶ tokens ──parser──▶ AST ──analyzer──▶ output schema
                                                │
-                                               └──planner──▶ pyspark DataFrame
+                                               └──spark_sql──▶ Spark SQL text
+                                                     └──planner──▶ pyspark DataFrame
+                                                        (one spark.sql call)
 
-Execution is delegated entirely to Spark/Catalyst: the planner emits
-declarative DataFrame transformations (filter/select/groupBy/orderBy/limit,
-higher-order array functions), so predicate pushdown, column pruning,
-partial aggregation and whole-stage codegen come for free.
+Execution is delegated entirely to Spark/Catalyst: plans/spark_sql renders
+one declarative query (filter/projection/aggregate/order/limit,
+higher-order array functions) and the planner resolves it over a temp view
+of the input, so predicate pushdown, column pruning, partial aggregation
+and whole-stage codegen come for free.
 
 Beyond the reference surface it ships the large-scale training-data-pipeline
 operators (operators/): exact & fuzzy dedup, similarity search, text

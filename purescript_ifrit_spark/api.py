@@ -2,11 +2,11 @@
 (dist/index.js:23-30) and `Core.compile` (src/Ifrit/Core.purs:30-37).
 
 The reference pipeline is: schema decode → tokenize → parse → analyze →
-generate MongoDB stages. Ours is identical until the last step, which emits
-PySpark DataFrame transformations instead:
+generate MongoDB stages. Ours is identical until the last step, which
+renders one Spark SQL query instead and resolves it over the input:
 
     compile_query(schema, sql)  -> IfritPlan   (pure, no Spark needed)
-    plan.apply(df)              -> DataFrame   (declarative; Catalyst optimizes)
+    plan.apply(df)              -> DataFrame   (one spark.sql call; Catalyst optimizes)
     run_query(spark, df|name, sql, schema=None) -> DataFrame
 
 Any compile-time failure raises IfritError with the reference's message
@@ -37,14 +37,18 @@ class IfritPlan:
     flags: CompatFlags = field(default_factory=CompatFlags)
 
     def apply(self, df: DataFrame) -> DataFrame:
-        """Materialize the plan over a DataFrame (lazy — no action run)."""
+        """Materialize the plan over a DataFrame (lazy — no action run):
+        the `to_spark_sql` text over a temp view of `df`, resolved by one
+        spark.sql call (planner.build)."""
         from purescript_ifrit_spark import planner
 
         return planner.build(df, self.statement, self.flags)
 
     def to_spark_sql(self, table: str) -> str:
-        """Render the same semantics as a Spark SQL string over a view name
-        (debugging/interop surface; backends are equivalence-tested)."""
+        """The Spark SQL text `apply` runs, rendered over a view name — for
+        inspection, EXPLAIN, or SQL-first tooling. Text that calls
+        IMAGE_DHASH or NFC needs `functions.dialect_ext.
+        register_sql_functions(spark)` before a hand-run spark.sql."""
         from purescript_ifrit_spark.plans.spark_sql import to_spark_sql
 
         return to_spark_sql(self.statement, table, self.flags)

@@ -24,19 +24,20 @@ Surface (each takes one string-typed field path, like the built-in fns):
     SELECT event_id, SESSIONIZE(ts) AS sid -- 30-min-gap session id per row
                                            -- (analytic — see below)
 
-Extension functions are projection-mode scalars (per row, scan-stage Column
-expressions — never Python UDFs, with ONE documented exception: IMAGE_DHASH
-is an Arrow-vectorized pandas_udf, because a binary image decode is not
-expressible as a Column tree; it is still scan-stage and batch-transferred,
-never row-at-a-time; NFC shares the exception for codepoint
-recomposition). They are rejected inside grouped SELECT lists, and
-every one except CHUNK (whose result is an array) can serve as a GROUP BY
-key. Both backends stay in lock-step: `column` builds the planner's Column,
-`sql` renders the identical expression for the Spark-SQL emitter, and
-backend-equivalence tests compare the two on real data. The SQL emitter's
-IMAGE_DHASH rendering references the session function `ifrit_image_dhash`
-— call `register_sql_functions(spark)` before executing emitted SQL that
-uses it (the DataFrame backend needs no registration).
+Extension functions are projection-mode scalars (per row, scan-stage Spark
+SQL expressions — never Python UDFs, with ONE documented exception:
+IMAGE_DHASH is an Arrow-vectorized pandas_udf, because a binary image
+decode is not expressible as a SQL expression; it is still scan-stage and
+batch-transferred, never row-at-a-time; NFC shares the exception for
+codepoint recomposition). They are rejected inside grouped SELECT lists,
+and every one except CHUNK (whose result is an array) can serve as a GROUP
+BY key. Each function is one renderer, `sql(x) -> str`, that
+plans/spark_sql.py — the one dialect backend — inlines; tests compare its
+values with the operator-level functions (functions/text, operators/*).
+The IMAGE_DHASH and NFC renderings call the session functions
+`ifrit_image_dhash` / `ifrit_nfc`: `planner.build` registers them when a
+statement uses them; run `register_sql_functions(spark)` before executing
+`to_spark_sql` text by hand.
 
     SELECT media_id, IMAGE_DHASH(payload) AS dhash
                                            -- 64-bit perceptual hash of a
@@ -63,8 +64,7 @@ uses it (the DataFrame backend needs no registration).
 
     SELECT doc_id, NFC(text) AS t          -- Unicode NFC canonicalization
                                            -- (string; pandas_udf
-                                           -- exception #2 — SQL backend
-                                           -- needs register_sql_functions)
+                                           -- exception #2)
     SELECT MIN(doc_id) AS keep GROUP BY NFC(text)
                                            -- canonicalization-aware key
 
@@ -79,12 +79,11 @@ shape as operators/windows.sessionize) rather than a scan-stage scalar, so
 it is projection-only: no WHERE, no GROUP BY key, no grouped SELECT (wrap
 it in a derived table and aggregate the result instead — see DIALECT.md).
 Spark forbids nesting a window function inside another window aggregate in
-one expression, so analytic fns declare `stages`: intermediate columns the
-planner materializes as extra projections before the final select; the SQL
-backend renders them as one extra subquery level. Like SPLIT/CHUNK, the
-one-argument grammar fixes the geometry: partition key `user_id`, tiebreak
-`event_id` (both must exist in the queried document — analyzer-checked via
-`requires`), gap 30 minutes. The Python API (operators/windows.sessionize)
+one expression, so analytic fns declare `stages_sql`: intermediate columns
+rendered as one extra subquery level below the final select. Like
+SPLIT/CHUNK, the one-argument grammar fixes the geometry: partition key
+`user_id`, tiebreak `event_id` (both must exist in the queried document —
+analyzer-checked via `requires`), gap 30 minutes. The Python API (operators/windows.sessionize)
 takes all of these as parameters.
 
 Caveat (documented in DIALECT.md): these uppercase names become function
@@ -96,17 +95,13 @@ reference applies to AVG..SUM.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import partial
-from typing import TYPE_CHECKING, Callable, Dict
+from typing import Any, Callable, Dict, Iterable, Optional
 
 from purescript_ifrit_spark.schema import Schema
 
-if TYPE_CHECKING:
-    from pyspark.sql import Column
-
 # Importing this module runs no pyspark import: the parser and analyzer
-# read EXT_FUNCTIONS' names and metadata on the compile path. Builders and
-# renderers import functions/text (and Spark) when they are called.
+# read EXT_FUNCTIONS' names and metadata on the compile path. Renderers
+# import their operator modules (some of which import Spark) when called.
 
 # chunking geometry of the dialect CHUNK function (fixed: the one-argument
 # fn grammar has no room for parameters; the Python API takes them)
@@ -131,7 +126,7 @@ def _token_count_sql(x: str) -> str:
 def _quality_sql(x: str) -> str:
     from purescript_ifrit_spark.functions import stopwords as X
 
-    # integer micro-unit arithmetic, in lock-step with functions/text.quality
+    # integer micro-unit arithmetic, value-identical to functions/text.quality
     # (see its docstring for why no float ratio rounding may appear here);
     # `div` is Spark SQL's exact integer division
     n = _norm_sql(x)
@@ -143,8 +138,8 @@ def _quality_sql(x: str) -> str:
     ntok = f"CAST(CASE WHEN length({n}) = 0 THEN 0 ELSE {spaces} + 1 END AS BIGINT)"
     nonspace = f"(CAST(length({n}) AS BIGINT) - {spaces})"
     punct = f"CAST(regexp_count({n}, '[^a-z0-9 ]') AS BIGINT)"
-    # same generator as the Column backend — editing DEFAULT_STOPWORDS
-    # changes BOTH backends (a hard-coded twin here would silently diverge)
+    # same generator as functions/text.quality — editing DEFAULT_STOPWORDS
+    # changes both (a hard-coded twin here would silently diverge)
     stop_rx = X._stop_rx(X.DEFAULT_STOPWORDS).replace("\\", "\\\\")
     hits = f"CAST(regexp_count({n}, '{stop_rx}') AS BIGINT)"
     punct_micro = (
@@ -183,30 +178,16 @@ def _fingerprint_sql(x: str) -> str:
     return f"md5({_norm_sql(x)})"
 
 
-def _text_column(name: str, c: Column, **kwargs) -> Column:
-    """functions/text.<name>(c, **kwargs), importing that module (and Spark)
-    only when a plan is built."""
-    from purescript_ifrit_spark.functions import text as X
-
-    return getattr(X, name)(c, **kwargs)
-
-
 # fixed split geometry of the dialect SPLIT function (the one-argument fn
 # grammar has no room for parameters; the Python API takes weights/salt)
 SPLIT_WEIGHTS = (("train", 0.98), ("val", 0.01), ("test", 0.01))
 SPLIT_SALT = "v1"
 
 
-def _split_column(c: Column) -> Column:
-    from purescript_ifrit_spark.operators.sampling import split_expr
-
-    return split_expr(c, SPLIT_WEIGHTS, SPLIT_SALT)
-
-
 def _split_sql(x: str) -> str:
     from purescript_ifrit_spark.operators.sampling import hash_split_sql
 
-    # CAST keeps numeric ids lock-step with the Column backend's cast
+    # CAST: numeric ids draw on their string form, like split_expr's cast
     return hash_split_sql(f"CAST({x} AS STRING)", SPLIT_WEIGHTS, SPLIT_SALT)
 
 
@@ -224,22 +205,10 @@ def _chunk_sql(x: str) -> str:
     )
 
 
-def _redact_column(c: Column) -> Column:
-    from purescript_ifrit_spark.operators.text_cleaning import redact_expr
-
-    return redact_expr(c)
-
-
 def _redact_sql(x: str) -> str:
     from purescript_ifrit_spark.operators.text_cleaning import redact_sql
 
     return redact_sql(x)
-
-
-def _vectorize_column(c: Column) -> Column:
-    from purescript_ifrit_spark.operators.vectorize import vectorize_expr
-
-    return vectorize_expr(c)
 
 
 def _vectorize_sql(x: str) -> str:
@@ -248,24 +217,10 @@ def _vectorize_sql(x: str) -> str:
     return vectorize_sql(x)
 
 
-def _quality_score_column(c: Column) -> Column:
-    from purescript_ifrit_spark.operators.vectorize import hash_margin_expr
-
-    return hash_margin_expr(c)
-
-
 def _quality_score_sql(x: str) -> str:
     from purescript_ifrit_spark.operators.vectorize import hash_margin_sql
 
     return hash_margin_sql(x)
-
-
-def _gopher_column(c: Column) -> Column:
-    from purescript_ifrit_spark.operators.text_analysis import (
-        gopher_pass_expr,
-    )
-
-    return gopher_pass_expr(c)
 
 
 def _gopher_sql(x: str) -> str:
@@ -276,35 +231,16 @@ def _gopher_sql(x: str) -> str:
     return gopher_pass_sql(x)
 
 
-def _c4pass_column(c: Column) -> Column:
-    from purescript_ifrit_spark.operators.text_cleaning import c4_pass_expr
-
-    return c4_pass_expr(c)
-
-
 def _c4pass_sql(x: str) -> str:
     from purescript_ifrit_spark.operators.text_cleaning import c4_pass_sql
 
     return c4_pass_sql(x)
 
 
-def _minhash_column(c: Column) -> Column:
-    from purescript_ifrit_spark.functions import hashing as H
-    from purescript_ifrit_spark.functions import text as X
-
-    return H.minhash_hexsig(X.word_shingles(c, 3), 16)
-
-
 def _minhash_sql(x: str) -> str:
     from purescript_ifrit_spark.functions import hashing as H
 
     return H.minhash_hexsig_sql(x, 16, 3)
-
-
-def _simhash_column(c: Column) -> Column:
-    from purescript_ifrit_spark.functions import hashing as H
-
-    return H.simhash_hex(c, 64)
 
 
 def _simhash_sql(x: str) -> str:
@@ -320,15 +256,15 @@ def _simhash_sql(x: str) -> str:
 # index's idf/avgdl are frozen snapshots, not live corpus aggregates).
 # Corpus-RELATIVE BM25 (df/avgdl computed from the queried corpus, top-k)
 # stays in operators/text_analysis.bm25_topk. Every constant is an
-# exactly-representable double and both backends evaluate the identical
-# association order, so the scores are bit-equal cross-backend.
+# exactly-representable double and the sum has one pinned association
+# order, so the scores are reproducible bit for bit.
 BM25_K1 = 1.25
 BM25_B = 0.75
 BM25_AVGDL = 128.0
 BM25_QUERY = (("spark", 2.5), ("join", 1.5), ("merge", 0.75))
 
 
-def _bm25_column(c: Column) -> Column:
+def _bm25_sql(x: str) -> str:
     # Term frequency WITHOUT a higher-order function: HOF lambdas run
     # interpreted and break the projection out of whole-stage codegen,
     # so tf is counted with pure string ops instead — double every
@@ -336,32 +272,6 @@ def _bm25_column(c: Column) -> Column:
     # never overlap, making replace-then-length-diff an exact
     # non-overlapping token count. Blank text counts 0 (pad of '' is
     # '  '), NULL text propagates NULL.
-    from pyspark.sql import functions as F
-
-    from purescript_ifrit_spark.functions import text as X
-
-    n = X.normalize_text(c)
-    pad = F.concat(F.lit(" "), F.replace(n, F.lit(" "), F.lit("  ")), F.lit(" "))
-    dl = X.token_count(c).cast("double")
-    # length-normalization load: (1-b) + b * (dl / avgdl), division first
-    load = F.lit(1.0 - BM25_B) + (F.lit(BM25_B) * (dl / F.lit(BM25_AVGDL)))
-    score = None
-    for term, idf in BM25_QUERY:
-        m = float(len(term) + 2)
-        tf = (
-            F.length(pad)
-            - F.length(F.replace(pad, F.lit(f" {term} "), F.lit("")))
-        ).cast("double") / F.lit(m)
-        contrib = F.lit(idf) * (
-            (tf * F.lit(BM25_K1 + 1.0)) / (tf + (F.lit(BM25_K1) * load))
-        )
-        # left-associated sum in query order — the SQL twin renders the
-        # same tree, so the float result is bit-identical
-        score = contrib if score is None else score + contrib
-    return F.round(score, 6)
-
-
-def _bm25_sql(x: str) -> str:
     n = _norm_sql(x)
     pad = f"(' ' || replace({n}, ' ', '  ') || ' ')"
     dl = f"CAST(({_token_count_sql(x)}) AS DOUBLE)"
@@ -383,24 +293,12 @@ def _bm25_sql(x: str) -> str:
     return f"round({total}, 6)"
 
 
-def _jlproject_column(c: Column) -> Column:
-    from purescript_ifrit_spark.operators.vectorize import jlproject_expr
-
-    return jlproject_expr(c)
-
-
 def _jlproject_sql(x: str) -> str:
     from purescript_ifrit_spark.operators.vectorize import (
         jlproject_dialect_sql,
     )
 
     return jlproject_dialect_sql(x)
-
-
-def _pq_encode_column(c: Column) -> Column:
-    from purescript_ifrit_spark.operators.vectorize import pq_code_expr
-
-    return pq_code_expr(c)
 
 
 def _pq_encode_sql(x: str) -> str:
@@ -411,16 +309,12 @@ def _pq_encode_sql(x: str) -> str:
     return pq_code_dialect_sql(x)
 
 
-def _htmltext_column(c: Column) -> Column:
-    from purescript_ifrit_spark.operators.text_cleaning import html_text_expr
-
-    return html_text_expr(c)
-
-
 def _htmltext_sql(x: str) -> str:
-    from purescript_ifrit_spark.operators.text_cleaning import html_text_sql
+    from purescript_ifrit_spark.operators.text_cleaning import (
+        html_text_spark_sql,
+    )
 
-    return html_text_sql(x)
+    return html_text_spark_sql(x)
 
 
 # fixed temporal geometry (the one-argument fn grammar has no room for
@@ -431,62 +325,18 @@ SESSIONIZE_TIEBREAK = "event_id"
 SESSIONIZE_GAP_MIN = 30
 
 
-def _tumble_column(c: Column) -> Column:
+def _tumble_sql(x: str) -> str:
     # hour-start epoch SECONDS: compact, and exactly representable in the
     # dialect's double-typed numbers forever (epoch MICROS ~1.7e15 today
     # would also fit 2^53, but only until ~2255 — and hour buckets don't
     # need sub-second resolution anyway). Pure epoch arithmetic —
-    # date_trunc would bucket in the session's local timezone.
-    # cast("timestamp") is a no-op on TimestampType and makes NTZ inputs
+    # date_trunc would bucket in the session's local timezone. The
+    # TIMESTAMP cast is a no-op on TimestampType and makes NTZ inputs
     # legal under the engine's UTC session contract (sources/tables.py).
-    from pyspark.sql import functions as F
-
-    return F.floor(
-        F.unix_micros(c.cast("timestamp")) / F.lit(TUMBLE_UNIT_US)
-    ) * F.lit(TUMBLE_UNIT_US // 1_000_000)
-
-
-def _tumble_sql(x: str) -> str:
     return (
         f"(floor(unix_micros(CAST({x} AS TIMESTAMP)) / {TUMBLE_UNIT_US}) "
         f"* {TUMBLE_UNIT_US // 1_000_000})"
     )
-
-
-def _session_order(c: Column):
-    from pyspark.sql import functions as F
-
-    return [c.cast("timestamp").asc(), F.col(SESSIONIZE_TIEBREAK).asc()]
-
-
-def _sessionize_new_flag(c: Column) -> Column:
-    # stage column: 1 when this row starts a new session (first event of
-    # the key, or gap to the previous event exceeds the threshold)
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy(SESSIONIZE_KEY).orderBy(*_session_order(c))
-    prev = F.lag(c.cast("timestamp")).over(w)
-    gap = F.lit(SESSIONIZE_GAP_MIN * 60 * 1_000_000)
-    return (
-        prev.isNull()
-        | ((F.unix_micros(c.cast("timestamp")) - F.unix_micros(prev)) > gap)
-    ).cast("int")
-
-
-def _sessionize_final(c: Column, staged: Dict[str, Column]) -> Column:
-    # running sum of new-session flags = 1-based session id; same window
-    # spec as the stage, so the physical plan is ONE shuffle + one sort
-    # feeding two chained Window operators
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = (
-        Window.partitionBy(SESSIONIZE_KEY)
-        .orderBy(*_session_order(c))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return F.sum(staged["new_s"]).over(w)
 
 
 def _sessionize_window_sql(x: str) -> str:
@@ -497,6 +347,8 @@ def _sessionize_window_sql(x: str) -> str:
 
 
 def _sessionize_new_flag_sql(x: str) -> str:
+    # stage column: 1 when this row starts a new session (first event of
+    # the key, or gap to the previous event exceeds the threshold)
     w = _sessionize_window_sql(x)
     ts = f"unix_micros(CAST({x} AS TIMESTAMP))"
     prev = f"unix_micros(lag(CAST({x} AS TIMESTAMP)) OVER ({w}))"
@@ -508,6 +360,9 @@ def _sessionize_new_flag_sql(x: str) -> str:
 
 
 def _sessionize_final_sql(x: str, staged: Dict[str, str]) -> str:
+    # running sum of new-session flags = 1-based session id; same window
+    # spec as the stage, so the physical plan is ONE shuffle + one sort
+    # feeding two chained Window operators
     return (
         f"SUM(`{staged['new_s']}`) OVER ({_sessionize_window_sql(x)} "
         "ROWS UNBOUNDED PRECEDING)"
@@ -538,13 +393,8 @@ def _image_dhash_udf():
     return pandas_udf(_kernel, "long")
 
 
-def _image_dhash_column(c: Column) -> Column:
-    return _image_dhash_udf()(c)
-
-
 def _image_dhash_sql(x: str) -> str:
-    # the one emitted expression that is not pure built-in SQL: it names
-    # the session UDF register_sql_functions() installs
+    # names the session UDF register_sql_functions() installs
     return f"ifrit_image_dhash({x})"
 
 
@@ -573,111 +423,86 @@ def _nfc_udf():
     return pandas_udf(_kernel, "string")
 
 
-def _nfc_column(c: Column) -> Column:
-    return _nfc_udf()(c)
-
-
 def _nfc_sql(x: str) -> str:
     # names the session UDF register_sql_functions() installs (the
     # IMAGE_DHASH convention)
     return f"ifrit_nfc({x})"
 
 
-def register_sql_functions(spark) -> None:
-    """Install the session UDFs the Spark-SQL backend's emitted text can
-    reference (`ifrit_image_dhash` for IMAGE_DHASH, `ifrit_nfc` for
-    NFC). Required only before spark.sql() on emitted queries that use
-    them; the DataFrame backend resolves everything in-process."""
-    spark.udf.register("ifrit_image_dhash", _image_dhash_udf())
-    spark.udf.register("ifrit_nfc", _nfc_udf())
+def register_sql_functions(spark, names: Optional[Iterable[str]] = None) -> None:
+    """Install the session UDFs rendered SQL can reference
+    (`ifrit_image_dhash` for IMAGE_DHASH, `ifrit_nfc` for NFC) — for the
+    dialect functions in `names`, or all of them. `planner.build`
+    registers what each statement uses; call this only before running
+    `to_spark_sql` text through spark.sql() by hand."""
+    for fn in EXT_FUNCTIONS.values():
+        if fn.udf is not None and (names is None or fn.name in names):
+            spark.udf.register(f"ifrit_{fn.name.lower()}", fn.udf())
 
 
 @dataclass(frozen=True)
 class ExtFn:
-    """One dialect extension function: name, result schema, and the two
-    lock-step backends (Column builder / Spark-SQL renderer).
-
-    Scalars: `column(arg) -> Column`, `sql(x) -> str`.
+    """One dialect extension function: name, result schema, and its Spark
+    SQL renderer `sql(x) -> str` over a rendered argument `x`.
 
     Analytic fns (`analytic=True`): window-backed, projection-mode only
-    (never WHERE / GROUP BY / grouped SELECT). `stages` lists intermediate
-    columns ((name, builder(arg) -> Column), ...) the planner materializes
-    before the final projection (Spark rejects window-inside-window in one
-    expression); `stages_sql` is the SQL twin; `column(arg, staged) ->
-    Column` / `sql(x, staged) -> str` then reference them. `requires`
-    names document fields the fixed window geometry reads (partition key,
-    tiebreak) — the analyzer checks they exist."""
+    (never WHERE / GROUP BY / grouped SELECT). `stages_sql` lists
+    intermediate columns ((name, renderer(x) -> str), ...) rendered one
+    subquery level below the final projection (Spark rejects
+    window-inside-window in one expression); `sql(x, staged) -> str` then
+    references them by name. `requires` names document fields the fixed
+    window geometry reads (partition key, tiebreak) — the analyzer checks
+    they exist. `udf` builds the pandas_udf the rendering calls as
+    `ifrit_<name>` (see register_sql_functions)."""
 
     name: str
     result: Schema
-    column: Callable[..., Column]
     sql: Callable[..., str]
     groupable: bool = True  # usable as a GROUP BY key (primitives only)
     arg_kinds: tuple = ("string",)  # accepted argument schema kinds
     analytic: bool = False
-    stages: tuple = ()  # ((stage_name, builder(arg)->Column), ...)
     stages_sql: tuple = ()  # ((stage_name, renderer(x)->str), ...)
     requires: tuple = ()  # document fields the window geometry reads
+    udf: Optional[Callable[[], Any]] = None  # pandas_udf factory
 
 
 EXT_FUNCTIONS: Dict[str, ExtFn] = {
     fn.name: fn
     for fn in (
-        ExtFn(
-            "TOKEN_COUNT",
-            Schema.number(),
-            partial(_text_column, "token_count"),
-            _token_count_sql,
-        ),
-        ExtFn(
-            "QUALITY", Schema.number(), partial(_text_column, "quality"), _quality_sql
-        ),
-        ExtFn(
-            "LANG_ID", Schema.string(), partial(_text_column, "lang_id"), _lang_id_sql
-        ),
-        ExtFn(
-            "FINGERPRINT",
-            Schema.string(),
-            partial(_text_column, "fingerprint"),
-            _fingerprint_sql,
-        ),
+        ExtFn("TOKEN_COUNT", Schema.number(), _token_count_sql),
+        ExtFn("QUALITY", Schema.number(), _quality_sql),
+        ExtFn("LANG_ID", Schema.string(), _lang_id_sql),
+        ExtFn("FINGERPRINT", Schema.string(), _fingerprint_sql),
         ExtFn(
             "CHUNK",
             Schema.array(Schema.string()),
-            partial(
-                _text_column, "chunk_array",
-                chunk_tokens=CHUNK_TOKENS, overlap=CHUNK_OVERLAP,
-            ),
             _chunk_sql,
             groupable=False,  # array-typed result is not a valid group key
         ),
         ExtFn(
             "SPLIT",
             Schema.string(),
-            _split_column,
             _split_sql,
             # an id can be numeric or string — the draw casts to string
             arg_kinds=("string", "number"),
         ),
-        ExtFn("REDACT", Schema.string(), _redact_column, _redact_sql),
-        ExtFn("HTMLTEXT", Schema.string(), _htmltext_column, _htmltext_sql),
+        ExtFn("REDACT", Schema.string(), _redact_sql),
+        ExtFn("HTMLTEXT", Schema.string(), _htmltext_sql),
         ExtFn(
             "VECTORIZE",
             # dense dim-16 hashing-trick vector (signed token counts) —
-            # operators/vectorize.vectorize_expr; the Python operator
+            # operators/vectorize.vectorize_sql; the Python operator
             # feature_hash_embed takes dim/normalize as parameters
             Schema.array(Schema.number()),
-            _vectorize_column,
             _vectorize_sql,
             groupable=False,  # array-typed result is not a valid group key
         ),
         ExtFn(
             "QUALITY_SCORE",
             # integer linear-model margin over hashed features (keep ≡
-            # margin ≥ 0) — operators/vectorize.hash_margin_expr; a
+            # margin ≥ 0) — operators/vectorize.hash_margin_sql; a
             # LEARNED model goes through linear_hash_score
             Schema.number(),
-            _quality_score_column,
             _quality_score_sql,
         ),
         ExtFn(
@@ -690,37 +515,35 @@ EXT_FUNCTIONS: Dict[str, ExtFn] = {
             # default arg kind. Groupable: GROUP BY IMAGE_DHASH(payload)
             # is the perceptual exact-dedup move.
             Schema.number(),
-            _image_dhash_column,
             _image_dhash_sql,
+            udf=_image_dhash_udf,
         ),
         ExtFn(
             "GOPHER",
             # combined Gopher rule-set pass/fail at the paper's default
-            # thresholds (operators/text_analysis.gopher_pass_expr) — a
+            # thresholds (operators/text_analysis.gopher_pass_sql) — a
             # boolean scalar, so it composes as `WHERE GOPHER(text) =
             # true` (the bare-predicate form stays boolean-FIELD-only)
             # and as a GROUP BY key for pass/fail corpus splits; the
             # per-rule audit columns go through gopher_quality_flags
             Schema.boolean(),
-            _gopher_column,
             _gopher_sql,
         ),
         ExtFn(
             "C4PASS",
             # C4 page-level pass/fail (Raffel et al. 2020 §2.2 line +
             # page rules at the module defaults —
-            # operators/text_cleaning.c4_pass_expr): boolean scalar, so
+            # operators/text_cleaning.c4_pass_sql): boolean scalar, so
             # it composes as a WHERE operand and a GROUP BY key exactly
             # like GOPHER; the per-line audit path is c4_line_filter
             Schema.boolean(),
-            _c4pass_column,
             _c4pass_sql,
         ),
         ExtFn(
             "MINHASH",
             # full 16-lane MinHash signature of the normalized,
             # 3-word-shingled text as ONE ':'-joined hex string
-            # (functions/hashing.minhash_hexsig — the same lanes the
+            # (functions/hashing.minhash_hexsig_sql — the same lanes the
             # operators/dedup b=8,r=2 LSH family reads, bit-identical).
             # A string scalar, so it GROUPS: `SELECT MIN(doc_id) AS keep
             # GROUP BY MINHASH(text)` is signature-exact near-dup
@@ -729,13 +552,12 @@ EXT_FUNCTIONS: Dict[str, ExtFn] = {
             # a shared constant. Banded LSH with recall control stays in
             # operators/dedup.minhash_candidate_pairs.
             Schema.string(),
-            _minhash_column,
             _minhash_sql,
         ),
         ExtFn(
             "SIMHASH",
             # 64-bit SimHash of the normalized word tokens as ONE
-            # 16-hex-digit string (functions/hashing.simhash_hex — the
+            # 16-hex-digit string (functions/hashing.simhash_hex_sql — the
             # same xxhash64-per-token sign rule the operators/dedup
             # simhash family computes, bit-identical). A string scalar,
             # so it GROUPS: `GROUP BY SIMHASH(text)` is the hamming-0
@@ -746,7 +568,6 @@ EXT_FUNCTIONS: Dict[str, ExtFn] = {
             # hamming>0 blocking stays in
             # operators/dedup.simhash_candidate_pairs.
             Schema.string(),
-            _simhash_column,
             _simhash_sql,
         ),
         ExtFn(
@@ -757,8 +578,8 @@ EXT_FUNCTIONS: Dict[str, ExtFn] = {
             # composition work; pandas_udf exception #2 (see _nfc_udf).
             # NFKC/NFD/NFKD stay in operators/text_cleaning.
             Schema.string(),
-            _nfc_column,
             _nfc_sql,
+            udf=_nfc_udf,
         ),
         ExtFn(
             "BM25",
@@ -771,21 +592,19 @@ EXT_FUNCTIONS: Dict[str, ExtFn] = {
             # relevance screen, GROUP BY BM25(text) the score-profile
             # rollup. tf is the exact normalized-token count, so blank
             # text scores 0.0 and NULL text stays NULL. Rounded to 6
-            # decimals (the suite's float convention); both backends
-            # evaluate one pinned association order.
+            # decimals (the suite's float convention), in one pinned
+            # association order.
             Schema.number(),
-            _bm25_column,
             _bm25_sql,
         ),
         ExtFn(
             "JL_PROJECT",
             # 64→16-dim ±1 random projection of a float embedding array
-            # (operators/vectorize.jlproject_expr; quantize + project in
+            # (operators/vectorize.jlproject_dialect_sql; quantize + project in
             # one scan-stage expression whose sign matrix is COMPUTED
             # from (i, j), not a literal). The only ExtFn taking an
             # ARRAY argument; array-typed result, so not groupable.
             Schema.array(Schema.number()),
-            _jlproject_column,
             _jlproject_sql,
             groupable=False,
             arg_kinds=("array",),
@@ -805,14 +624,12 @@ EXT_FUNCTIONS: Dict[str, ExtFn] = {
             # at-rest layout stay in operators/similarity (pq_codebooks,
             # pq_topk[_batch], write_ivf_pq_partitioned).
             Schema.string(),
-            _pq_encode_column,
             _pq_encode_sql,
             arg_kinds=("array",),
         ),
         ExtFn(
             "TUMBLE",
             Schema.number(),
-            _tumble_column,
             _tumble_sql,
             # timestamps surface as "string" in the 4-type dialect model
             # (schema.schema_from_struct); numeric epochs are excluded on
@@ -821,11 +638,9 @@ EXT_FUNCTIONS: Dict[str, ExtFn] = {
         ExtFn(
             "SESSIONIZE",
             Schema.number(),
-            _sessionize_final,
             _sessionize_final_sql,
             groupable=False,  # window-backed — no scan-stage group key
             analytic=True,
-            stages=(("new_s", _sessionize_new_flag),),
             stages_sql=(("new_s", _sessionize_new_flag_sql),),
             requires=(SESSIONIZE_KEY, SESSIONIZE_TIEBREAK),
         ),

@@ -46,26 +46,19 @@ def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
     return F.when(F.size(shingles) > 0, agg)
 
 
-def minhash_hexsig(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature rendered as ONE ':'-joined hex string — the
-    dialect MINHASH backend (a string scalar can be a GROUP BY key,
-    which is the signature-exact dedup move; an array cannot). Built on
-    minhash_signature, so the lanes stay bit-identical to the
-    operators/dedup family (b=8, r=2 geometry reads the same 16 lanes).
-    Empty shingle sets (blank/NULL text) yield NULL, not a shared
-    constant — content-free docs must never signature-match each other.
-    """
-    sig = minhash_signature(shingles, num_hashes)
-    return F.array_join(F.transform(sig, lambda v: F.hex(v)), ":")
-
-
 def minhash_hexsig_sql(
     x: str, num_hashes: int = 16, shingle_words: int = 3
 ) -> str:
-    """Spark-SQL twin of minhash_hexsig over a raw text operand `x`
-    (normalize → word-shingle → 16-lane fold → hex join, each step the
-    SQL rendering of the Column tree) — keeps the dialect's two
-    backends in lock-step; pinned bit-identical in tests."""
+    """MinHash signature of a raw text operand `x` rendered as ONE
+    ':'-joined hex string in Spark SQL — the dialect MINHASH (a string
+    scalar can be a GROUP BY key, which is the signature-exact dedup
+    move; an array cannot). Normalize → word-shingle → 16-lane fold →
+    hex join, each step the SQL rendering of minhash_signature over
+    functions/text.word_shingles, so the lanes stay bit-identical to the
+    operators/dedup family (b=8, r=2 geometry reads the same 16 lanes;
+    pinned in tests). Empty shingle sets (blank/NULL text) yield NULL,
+    not a shared constant — content-free docs must never
+    signature-match each other."""
     n = f"trim(regexp_replace(lower({x}), '\\\\s+', ' '))"
     grams = " ".join(["\\\\S+"] * shingle_words)
     rx = f"'(?=({grams}))(?:\\\\S+ ?)'"
@@ -176,35 +169,19 @@ def simhash_signature(toks: Column, bits: int = 64) -> Column:
     return sig
 
 
-def simhash_hex(text: Column, bits: int = 64) -> Column:
-    """64-bit SimHash of the normalized whitespace tokens rendered as ONE
-    16-hex-digit string — the dialect SIMHASH backend (a string scalar
-    can be a GROUP BY key; the MINHASH precedent applied to simhash
-    semantics). Built on simhash_signature over the SAME
-    tokens-of-normalized-text the operators/dedup simhash family hashes
-    (xxhash64 per word token, sign rule 2·count_set(k) > n_tokens —
-    bit-identical, pinned in tests), so `GROUP BY SIMHASH(text)` is
-    exactly the hamming-0 tier of that family's blocking. Blank/NULL
-    text → NULL, never a shared constant (content-free docs must not
-    signature-match each other)."""
-    from purescript_ifrit_spark.functions import text as X
-
-    n = X.normalize_text(text)
-    sig = simhash_signature(F.split(n, " "), bits)
-    return F.when(
-        F.length(n) > 0, F.format_string(f"%0{bits // 4}X", sig)
-    )
-
-
 def simhash_hex_sql(x: str, bits: int = 64) -> str:
-    """Spark-SQL twin of simhash_hex over a raw text operand `x`
-    (normalize → tokenize → 64-lane sign fold → %016X format, each step
-    the SQL rendering of the Column tree) — keeps the dialect's two
-    backends in lock-step; pinned bit-identical in tests. The fold and
+    """64-bit SimHash of the normalized whitespace tokens of a raw text
+    operand `x`, rendered as ONE 16-hex-digit string in Spark SQL — the
+    dialect SIMHASH (a string scalar can be a GROUP BY key). Normalize →
+    tokenize → 64-lane sign fold → %016X format: the same xxhash64 per
+    word token and sign rule (2·count_set(k) > n_tokens) as
+    simhash_signature and the operators/dedup simhash family —
+    bit-identical, pinned in tests — so `GROUP BY SIMHASH(text)` is
+    exactly the hamming-0 tier of that family's blocking. The fold and
     the collapse use generic HOFs over sequence(0, bits-1) instead of
-    the Column form's static unroll: value-identical (the pinned
-    contract is values, not plan text) and the whole expression parses
-    JVM-side in one call (the fresh-plan py4j rule)."""
+    simhash_signature's static unroll: value-identical, and the whole
+    expression parses JVM-side in one call. Blank/NULL text → NULL,
+    never a shared constant."""
     n = f"trim(regexp_replace(lower({x}), '\\\\s+', ' '))"
     last = bits - 1
     counters = (

@@ -1703,9 +1703,9 @@ def pack_text(
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 # the paper's default thresholds, consumed by gopher_quality_flags'
-# keyword defaults, gopher_pass_expr, gopher_pass_sql AND the DuckDB
+# keyword defaults, gopher_pass_sql (the dialect GOPHER) AND the DuckDB
 # oracles (suite/text._gopher_oracle) — one definition so a threshold
-# tweak cannot leave one of the four surfaces behind
+# tweak cannot leave one of the three surfaces behind
 GOPHER_DEFAULTS = {
     "min_words": 50,
     "max_words": 100_000,
@@ -1777,9 +1777,8 @@ def gopher_quality_flags(
 
 def _gopher_parts(raw):
     """The five Gopher rule measurements as Column expressions over one
-    raw-text column — shared by gopher_quality_flags (the report) and
-    gopher_pass_expr (the dialect GOPHER scalar), so the two surfaces
-    cannot drift."""
+    raw-text column (gopher_pass_sql renders the same arithmetic for the
+    dialect GOPHER scalar)."""
     toks = X.tokens(raw)
     norm = X.normalize_text(raw)
     blank = F.length(norm) == 0
@@ -1828,27 +1827,16 @@ def _gopher_combine(
     )
 
 
-def gopher_pass_expr(raw):
-    """The combined Gopher pass/fail at the DEFAULT thresholds as one
-    scan-stage Column — the dialect GOPHER(f) kernel (parameterized
-    thresholds go through gopher_quality_flags)."""
-    d = GOPHER_DEFAULTS
-    return _gopher_combine(
-        *_gopher_parts(raw),
-        d["min_words"], d["max_words"], d["min_mean_word_len"],
-        d["max_mean_word_len"], d["max_symbol_ratio"],
-        d["min_alpha_frac"], d["min_stopwords"],
-    )
-
-
 def gopher_pass_sql(x: str) -> str:
-    """Spark-SQL twin of gopher_pass_expr (the dialect GOPHER scalar):
-    same rule arithmetic and the same nonspace-character identity for
-    mean word length (sum of token lengths == length of the normalized
-    text minus its n−1 separators) — value-identical, pinned by the
-    backend-equivalence tests including a planted PASSING document (the
-    sf corpus fails every doc on word count, which once masked an
-    inverted identity here)."""
+    """The combined Gopher pass/fail at the DEFAULT thresholds as one Spark
+    SQL boolean — the dialect GOPHER(f) scalar (parameterized thresholds
+    go through gopher_quality_flags). Same rule arithmetic as
+    _gopher_parts and the same nonspace-character identity for mean word
+    length (sum of token lengths == length of the normalized text minus
+    its n−1 separators) — value-identical to gopher_quality_flags, pinned
+    in tests including a planted PASSING document (the sf corpus fails
+    every doc on word count, which once masked an inverted identity
+    here)."""
     d = GOPHER_DEFAULTS
     n = f"trim(regexp_replace(lower({x}), '\\\\s+', ' '))"
     toks = f"split({n}, ' ')"

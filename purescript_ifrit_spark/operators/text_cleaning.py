@@ -25,6 +25,8 @@ from typing import Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from purescript_ifrit_spark.plans.spark_sql import _lit as _sql_lit
+
 # (kind, pattern, replacement) — ORDER MATTERS (see module docstring)
 PII_PATTERNS: Tuple[Tuple[str, str, str], ...] = (
     ("url", r"https?://\S+", "<URL>"),
@@ -49,7 +51,7 @@ def redact_expr(c: Column) -> Column:
 
 def redact_sql(x: str) -> str:
     """Spark-SQL twin of `redact_expr` (nested regexp_replace, same
-    pattern order) — keeps the dialect's two backends in lock-step."""
+    pattern order) — the dialect REDACT rendering."""
     for _, rx, tok in PII_PATTERNS:
         lit = rx.replace("\\", "\\\\")
         x = f"regexp_replace({x}, '{lit}', '{tok}')"
@@ -191,6 +193,24 @@ def html_text_sql(x: str) -> str:
         "COALESCE(array_to_string(list_filter(list_transform("
         f"string_split({out}, chr(10)), s -> trim(s)), s -> s <> ''), "
         "chr(10)), '')"
+    )
+
+
+def html_text_spark_sql(x: str) -> str:
+    """Spark SQL twin of `html_text_expr` (same stages, same order) — the
+    dialect HTMLTEXT rendering. Unlike DuckDB, Spark string literals
+    process backslash escapes, so every pattern and replacement goes
+    through the emitter's literal escaping."""
+    out = x
+    for rx, repl in HTML_STAGES:
+        out = f"regexp_replace({out}, {_sql_lit(rx)}, {_sql_lit(repl)})"
+    for ent, repl in HTML_ENTITIES:
+        out = f"replace({out}, {_sql_lit(ent)}, {_sql_lit(repl)})"
+    hspace, nl = _sql_lit(r"[ \t\r]+"), _sql_lit("\n")
+    out = f"regexp_replace({out}, {hspace}, ' ')"
+    return (
+        f"array_join(filter(transform(split({out}, {nl}), l -> trim(l)), "
+        f"l -> l <> ''), {nl})"
     )
 
 
@@ -549,33 +569,24 @@ def c4_kept_expr(
     c: Column, min_words: int = C4_MIN_WORDS_PER_LINE
 ) -> Column:
     """The surviving (trimmed) lines of a text value under the C4 line
-    rules, as an array<string> Column — the shared kernel of
-    c4_line_filter and the dialect C4PASS function."""
+    rules, as an array<string> Column — the kernel of c4_line_filter
+    (c4_pass_sql renders the same rules for the dialect C4PASS)."""
     # NOT `F.transform(..., F.trim)`: transform inspects callable arity and
     # trim's optional second parameter makes it call trim(x, index) — which
     # strips index DIGITS, not whitespace.
     # Universal line terminators (the markdown_sections precedent): a
     # \n-only split leaves a trailing \r on CRLF corpora that F.trim
     # (spaces only) keeps — Java's `$` still matches before it while the
-    # RE2/DuckDB twins' `$` does not, so the two backends would disagree
-    # on every \r\n document.
+    # RE2/DuckDB twins' `$` does not, so the engines would disagree on
+    # every \r\n document.
     lines = F.transform(F.split(c, "\r\n|\r|\n"), lambda x: F.trim(x))
     return F.filter(lines, lambda x: _c4_keep_line(x, min_words))
 
 
-def c4_pass_expr(c: Column) -> Column:
-    """The C4 page-level pass/fail as one boolean scalar (default
-    thresholds) — the dialect C4PASS backend."""
-    return (
-        (F.size(c4_kept_expr(c)) >= C4_MIN_KEPT_LINES)
-        & ~F.lower(c).contains("lorem ipsum")
-        & ~c.contains("{")
-    )
-
-
 def c4_pass_sql(x: str) -> str:
-    """Spark-SQL twin of c4_pass_expr (same rules, same trim-first
-    contract) — keeps the dialect's two backends in lock-step."""
+    """The C4 page-level pass/fail at the default thresholds as one Spark
+    SQL boolean — the dialect C4PASS rendering (same rules and the same
+    trim-first contract as c4_kept_expr / c4_line_filter)."""
     kept = (
         f"filter(transform(split({x}, '\\r\\n|\\r|\\n'), l -> trim(l)), "
         "l -> l rlike '[.!?\"]$' "

@@ -33,36 +33,16 @@ def _bucket_and_sign(tok_col, dim: int):
 
     For the codegen'd explode+agg operators only — whole-stage codegen's
     subexpression elimination dedupes the two md5 references. The
-    interpreted HOF paths (vectorize_expr / hash_margin_expr) must NOT
-    call this per fold step: HOF lambdas re-evaluate every subtree per
-    invocation, so they go through _bs_structs, which binds the 9-char
-    md5 prefix once per token (r8 review: 2·dim·n_tokens md5 calls per
-    row down to n_tokens)."""
+    interpreted HOF renderings (vectorize_sql / hash_margin_sql) must NOT
+    repeat this per fold step: HOF lambdas re-evaluate every subtree per
+    invocation, so they go through _bs_sql, which binds the 9-char md5
+    prefix once per token (r8 review: 2·dim·n_tokens md5 calls per row
+    down to n_tokens)."""
     h8 = F.conv(F.substring(F.md5(tok_col), 1, 8), 16, 10).cast("long")
     bucket = (h8 % dim).cast("int")
     sign9 = F.conv(F.substring(F.md5(tok_col), 9, 1), 16, 10).cast("long")
     sign = F.when(sign9 % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
     return bucket, sign
-
-
-def _bs_structs(toks, dim: int):
-    """array<struct<b:int, s:long>> of (bucket, sign) per token, with the
-    md5 evaluated ONCE per token: the inner transform materializes the
-    9-hex-char prefix, the outer derives bucket and sign from that short
-    string — nested transforms evaluate the inner array once, so the
-    md5 count is n_tokens regardless of dim or fold width."""
-    pre = F.transform(toks, lambda t: F.substring(F.md5(t), 1, 9))
-    return F.transform(
-        pre,
-        lambda h: F.struct(
-            (F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-             % dim).cast("int").alias("b"),
-            F.when(
-                F.conv(F.substring(h, 9, 1), 16, 10).cast("long") % 2 == 0,
-                F.lit(1),
-            ).otherwise(F.lit(-1)).cast("long").alias("s"),
-        ),
-    )
 
 
 def feature_hash_sparse(
@@ -201,11 +181,12 @@ def linear_hash_score(
 
 
 # ---------------------------------------------------------------------------
-# scan-stage scalar twins for the dialect surface (functions/dialect_ext.py:
-# VECTORIZE / QUALITY_SCORE). Same hashing trick as the operators above,
-# re-expressed as per-row Column expressions so the query dialect can reach
-# them without a groupBy. Geometry is FIXED (the one-argument fn grammar has
-# no room for parameters); the Python operators take dim/weights/bias.
+# scan-stage scalar renderings for the dialect surface
+# (functions/dialect_ext.py: VECTORIZE / QUALITY_SCORE). Same hashing trick
+# as the operators above, re-expressed as per-row Spark SQL expressions so
+# the query dialect can reach them without a groupBy. Geometry is FIXED
+# (the one-argument fn grammar has no room for parameters); the Python
+# operators take dim/weights/bias.
 # ---------------------------------------------------------------------------
 
 VECTOR_DIM = 16  # dialect VECTORIZE / QUALITY_SCORE dimensionality
@@ -223,16 +204,18 @@ _W_OFF = 100
 
 # SQL-renderer fragments shared by vectorize_sql / hash_margin_sql — one
 # copy of the tokenization + hash recipe, so the two dialect functions can
-# never desynchronize on the SQL-emitter backend (they already share
-# _bucket_and_sign on the Column backend)
+# never desynchronize.
 def _toks_sql(x: str) -> str:
     norm = f"trim(regexp_replace(lower({x}), '\\\\s+', ' '))"
     return f"filter(split({norm}, ' '), t -> t <> '')"
 
 
 def _bs_sql(x: str, dim: int) -> str:
-    """SQL twin of _bs_structs: array<struct<b, s>> with the md5 bound
-    once per token via the nested transform."""
+    """array<struct<b, s>> of (bucket, sign) per token — _bucket_and_sign's
+    recipe with the md5 bound once per token: the inner transform
+    materializes the 9-hex-char prefix, the outer derives bucket and sign
+    from it, so the md5 count is n_tokens regardless of dim or fold
+    width."""
     return (
         f"transform(transform({_toks_sql(x)}, "
         "t -> substring(md5(t), 1, 9)), "
@@ -244,36 +227,14 @@ def _bs_sql(x: str, dim: int) -> str:
     )
 
 
-def vectorize_expr(c, dim: int = VECTOR_DIM):
-    """Per-row dense hashing-trick vector (array<double>, signed token
-    counts — the UNnormalized feature_hash_embed row). Scan-stage HOFs
-    only. O(dim·n_tokens) interpreted work per row: the convenience form
-    for dialect queries and small dims; the 100 TB path for large dims is
-    the explode+aggregate operator feature_hash_sparse/embed (equality of
-    the two pinned in tests)."""
-    toks = F.filter(X.tokens(c), lambda t: t != F.lit(""))
-    # one md5 per token (_bs_structs), then ONE fold building the whole
-    # dim-array via the index-aware transform lambda — the old
-    # per-coordinate aggregates re-evaluated the token hashes dim times
-    # (r8 review). Same (bucket, sign) recipe as the explode+agg
-    # operators; the pinned VECTORIZE == feature_hash_sparse equality
-    # holds bit-for-bit.
-    bs = _bs_structs(toks, dim)
-    vec = F.aggregate(
-        bs,
-        F.array_repeat(F.lit(0).cast("long"), dim),
-        lambda acc, p: F.transform(
-            acc,
-            lambda x, i: x + F.when(
-                p["b"] == i.cast("int"), p["s"]
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-    )
-    return F.transform(vec, lambda v: v.cast("double"))
-
-
 def vectorize_sql(x: str, dim: int = VECTOR_DIM) -> str:
-    """Spark-SQL twin of vectorize_expr (for the SQL emitter backend)."""
+    """Per-row dense hashing-trick vector (array<double>, signed token
+    counts — the UNnormalized feature_hash_embed row) as Spark SQL: one
+    md5 per token (_bs_sql), then ONE fold building the whole dim-array
+    through the index-aware transform lambda. O(dim·n_tokens) interpreted
+    work per row: the convenience form for dialect queries and small
+    dims; the 100 TB path for large dims is the explode+aggregate
+    operator feature_hash_sparse/embed (equality pinned in tests)."""
     return (
         f"transform(aggregate({_bs_sql(x, dim)}, "
         f"array_repeat(0L, {dim}), "
@@ -283,24 +244,12 @@ def vectorize_sql(x: str, dim: int = VECTOR_DIM) -> str:
     )
 
 
-def hash_margin_expr(c, dim: int = VECTOR_DIM):
+def hash_margin_sql(x: str, dim: int = VECTOR_DIM) -> str:
     """Per-row linear-model margin over hashed token features with the
     FIXED integer weights above: margin = Σ_tokens sign·w(bucket), a pure
     integer function of the text (long). keep ≡ margin ≥ 0 — the dialect
     QUALITY_SCORE form of linear_hash_score (equality with the operator
     under the same weights table pinned in tests)."""
-    toks = F.filter(X.tokens(c), lambda t: t != F.lit(""))
-    bs = _bs_structs(toks, dim)  # md5 once per token (r8 review)
-
-    def step(acc, p):
-        w = (p["b"].cast("long") * _W_MULT) % _W_MOD - _W_OFF
-        return acc + p["s"] * w
-
-    return F.aggregate(bs, F.lit(0).cast("long"), step)
-
-
-def hash_margin_sql(x: str, dim: int = VECTOR_DIM) -> str:
-    """Spark-SQL twin of hash_margin_expr."""
     w = f"((CAST(p.b AS BIGINT) * {_W_MULT}L) % {_W_MOD} - {_W_OFF})"
     return (
         f"aggregate({_bs_sql(x, dim)}, 0L, "
@@ -445,58 +394,6 @@ JL_SEED = 1
 _JL_QUANT_SQL = "CAST(floor(CAST({v} AS DOUBLE) * 1000) AS BIGINT)"
 
 
-def jlproject_expr(c) -> "F.Column":
-    """Column backend of the dialect JL_PROJECT: floor-quantize a float
-    embedding array and project 64 → 16 ±1 pseudo-random directions.
-    The sign s(i,j) is COMPUTED inside the lambda from (i, j) — the
-    expression tree is constant-size regardless of dims (no k×dim
-    literal, no py4j-per-cell chatter), unlike the centroid/band cases
-    where the constants carry information. Wrong-length vectors yield
-    NULL (the jl_project contract).
-
-    The quantized array is BOUND ONCE (X.bind_once): HOF lambdas have
-    no subexpression elimination, so an inline quantize expression
-    would re-run the 64-element transform inside every one of the 16
-    component folds (~18× the quantization work per row)."""
-    off = JL_SEED * _JLP_SEED_MULT
-
-    def comp(q, j):
-        return F.aggregate(
-            F.zip_with(
-                q,
-                F.sequence(F.lit(0), F.lit(JL_IN_DIM - 1)),
-                lambda v, i: v
-                * F.when(
-                    ((i + 1) * (j + 2) * F.lit(_JLP_MULT) + F.lit(off))
-                    % F.lit(_JLP_MOD)
-                    < F.lit(_JLP_HALF),
-                    F.lit(1).cast("long"),
-                ).otherwise(F.lit(-1).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        )
-
-    def proj(q):
-        return F.when(
-            (F.size(q) == JL_IN_DIM)
-            # null element => NULL projection (see jl_project_sql: one
-            # null poisons every component; collapsing keeps all
-            # backends equal — quantize maps null elements to null, so
-            # checking the quantized array is equivalent)
-            & ~F.exists(q, lambda x: x.isNull()),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(JL_OUT_DIM - 1)),
-                lambda j: comp(q, j),
-            ),
-        )
-
-    quant = F.transform(
-        c, lambda x: F.floor(x.cast("double") * 1000).cast("long")
-    )
-    return X.bind_once(quant, proj)
-
-
 def jl_quantize_sql(x: str) -> str:
     """The floor-quantization of a float embedding as Spark SQL — THE
     single definition every call site (dialect, suite, bench, tests)
@@ -513,11 +410,14 @@ def jl_quantize_duckdb(x: str) -> str:
 
 
 def jlproject_dialect_sql(x: str) -> str:
-    """Spark-SQL twin of jlproject_expr (same quantization, same sign
-    arithmetic, via jl_project_sql — lock-step with the Column backend,
-    pinned in test_dialect_ext). The quantized array binds once
-    (element_at(transform(array(...)))) for the same no-CSE reason as
-    the Column form."""
+    """The dialect JL_PROJECT as Spark SQL: floor-quantize a float
+    embedding array and project 64 → 16 ±1 pseudo-random directions via
+    jl_project_sql (signs COMPUTED from (i, j), so the expression is
+    constant-size regardless of dims). Value-equal to the Arrow operator
+    jl_project (pinned in test_dialect_ext). The quantized array binds
+    once (element_at(transform(array(...)))): HOF lambdas have no
+    subexpression elimination, so an inline quantize would re-run inside
+    every one of the 16 component folds."""
     proj = jl_project_sql("_qa", JL_IN_DIM, JL_OUT_DIM, JL_SEED)
     return (
         f"element_at(transform(array({jl_quantize_sql(x)}), "
@@ -545,7 +445,8 @@ PQ_DIA_K = 16  # one-hot centers per subspace
 
 
 def pq_code_expr(c) -> "F.Column":
-    """Column backend of the dialect PQ_ENCODE: the 4 nearest-center
+    """Column form of the dialect PQ_ENCODE (the reference its SQL
+    rendering pq_code_dialect_sql is tested against): the 4 nearest-center
     indices as ONE ':'-joined string (a groupable scalar — `GROUP BY
     PQ_ENCODE(embedding)` collapses a quantization cell, the
     compressed-domain dedup move). Wrong-length vectors and vectors
@@ -588,8 +489,8 @@ def pq_code_expr(c) -> "F.Column":
 def pq_code_dialect_sql(x: str) -> str:
     """Spark-SQL twin of pq_code_expr — the same frozen one-hot
     codebook, the same distance tree, the same bind-once shape
-    (element_at(transform(array(x), ...), 1)), so the two backends are
-    lock-step (pinned in test_dialect_ext)."""
+    (element_at(transform(array(x), ...), 1)); the dialect PQ_ENCODE
+    rendering, value-equal to pq_code_expr (pinned in test_dialect_ext)."""
     codes = []
     for s in range(PQ_DIA_M):
         sl = f"slice(_pa, {s * PQ_DIA_SUB + 1}, {PQ_DIA_SUB})"

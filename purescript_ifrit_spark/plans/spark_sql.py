@@ -1,22 +1,54 @@
-"""Alternative backend: AST → Spark SQL string (for spark.sql()).
+"""The dialect backend: AST → one Spark SQL query.
 
-The DataFrame builder (planner.py) is the primary backend; this emitter is
-the debugging/interop surface SURVEY §3 notes as "trivially exposable": the
-same dialect semantics rendered as one nested ANSI-ish query, so users can
-inspect, EXPLAIN, or embed the compiled form in SQL-first tooling.
+`planner.build` renders every plan here, over a temp view of the input
+DataFrame, and resolves it with one `spark.sql` call; this module is the
+only place where dialect semantics become Spark. `IfritPlan.to_spark_sql`
+exposes the same text, so users can inspect, EXPLAIN, or embed the
+compiled form in SQL-first tooling.
 
-Quirk encodings (must stay in lock-step with planner.py):
-- stage order: WHERE → ORDER BY → LIMIT → OFFSET → (project | group),
-  each as a nesting level only when needed
-- faithful OFFSET-after-LIMIT needs two levels (inner ORDER BY+LIMIT,
-  outer re-ORDER BY+OFFSET — outer re-sort keeps row selection
-  deterministic); `sane_offset` collapses to one `LIMIT n OFFSET m`
-- per-row array aggregates render as higher-order-function SQL
-- `= NULL` → IS NULL; bare boolean field → `f = true`
+Semantics preserved from the reference (stage order MongoDB.purs:134-141,
+153-160):
+
+    derived table → WHERE → ORDER BY → LIMIT → OFFSET → (project | group)
+
+each stage a nesting level only when needed. Dialect quirks carried over
+faithfully (each with a compat flag where the reference had a bug or a
+restriction):
+
+- OFFSET is applied AFTER LIMIT (`$limit` then `$skip`,
+  MongoDB.purs:132-141; golden Test.Main.purs:899-917): an inner
+  ORDER BY+LIMIT level, then an outer re-ORDER BY+OFFSET level (the outer
+  re-sort keeps row selection deterministic). `sane_offset=True` restores
+  SQL's skip-then-take as one `LIMIT n OFFSET m`.
+- In grouped statements ORDER BY/LIMIT run BEFORE the aggregation — they
+  select *which rows* are aggregated (MongoDB.purs:148-160, SURVEY §2.5 O4).
+- MIN/MAX over nested array fields implements the *intended* semantics
+  (the reference's codegen has a latent `$sub`-vs-`$$this.sub` bug,
+  MongoDB.purs:224,249 — SURVEY §2.4 B5).
+- WHERE binary conditions must compare a field with a literal
+  (field-vs-field rejected, MongoDB.purs:386-397 ErrCondition) —
+  `allow_field_comparison=True` lifts the restriction.
+- `= NULL` means MongoDB `{$eq: null}` → `IS NULL`; `!= NULL` → `IS NOT NULL`.
+- A bare boolean field predicate compiles to `f = true` (`{f: true}`,
+  MongoDB.purs:370-374); under NOT, `f = false`.
+
+Scale notes (100 TB design bar):
+
+- Filters sit below projections, so Catalyst pushes them into the parquet
+  scan; integral literals render as integers (see `_lit`) so the pushdown
+  survives.
+- Global aggregation (`GROUP BY NULL`) is an aggregate with no grouping
+  key — partial (map-side) + final aggregation, no single-key shuffle
+  hotspot.
+- ORDER BY+LIMIT becomes Spark's TakeOrderedAndProject (no full sort).
+- Per-row array aggregates are higher-order functions — JVM-side; no
+  Python UDFs in the dialect path except the two documented pandas_udf
+  extension functions (functions/dialect_ext.py).
 """
 
 from __future__ import annotations
 
+from purescript_ifrit_spark.errors import PlanError
 from purescript_ifrit_spark.plans.ast import (
     And,
     BinaryCond,
@@ -34,14 +66,23 @@ from purescript_ifrit_spark.plans.ast import (
     Statement,
 )
 
-NUMERIC_FNS = ("AVG", "MAX", "MIN", "SUM")
-
 
 def _ident(path: str) -> str:
     return ".".join(f"`{p}`" for p in path.split("."))
 
 
 def _lit(v) -> str:
+    """A literal as Spark SQL text.
+
+    The lexer stores every NUMBER as a Python float (reference parity:
+    Lexer.purs has one number token; the reference's JSON data model has
+    one number type). Rendering an integral float as `100.0` would make
+    Spark cast the FIELD side (`cast(o_orderkey as double) > 100.0`),
+    which blocks parquet predicate pushdown — at scale, a full scan
+    instead of a row-group skip. An integral value therefore renders as
+    an integer: Catalyst widens the LITERAL (or compares natively on
+    integral columns), `PushedFilters` reaches the scan, and the
+    comparison matches the DuckDB oracle's integer comparison."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -49,12 +90,34 @@ def _lit(v) -> str:
     if isinstance(v, float):
         return str(int(v)) if v.is_integer() else repr(v)
     if isinstance(v, int):
-        # programmatic ASTs may carry raw ints; render numerically like
-        # planner's F.lit, not as a quoted string
+        # programmatic ASTs may carry raw ints: render numerically
         return str(v)
     # escape backslashes BEFORE quotes: Spark's default string literals are
     # C-style, so an unescaped backslash would be re-interpreted
     return "'" + str(v).replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def _fmt_operand(o) -> str:
+    """An operand in dialect notation, for error messages."""
+    if isinstance(o, FieldOperand):
+        return o.path
+    if isinstance(o, FnOperand):
+        return f"{o.fn}({o.path})"
+    v = o.value
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, float):
+        return str(int(v)) if v.is_integer() else str(v)
+    return f'"{v}"'
+
+
+def _err_condition(desc: str) -> PlanError:
+    # parity with MongoDB.purs:467-471
+    return PlanError(
+        f"invalid condition: {desc}: should target a field of the document"
+    )
 
 
 def _operand(o) -> str:
@@ -62,13 +125,11 @@ def _operand(o) -> str:
         return _ident(o.path)
     if isinstance(o, FnOperand):
         ext = _ext_fn(o.fn)
-        if ext is None:  # unchecked path parity with the planner
-            from purescript_ifrit_spark.errors import PlanError
-
+        if ext is None:  # unchecked path (compile_unchecked)
             raise PlanError(f"unknown function {o.fn}")
-        if ext.analytic:  # lock-step with planner._field_side
-            from purescript_ifrit_spark.errors import PlanError
-
+        if ext.analytic:
+            # analyzer._analyze_operand rejects this too; compile_unchecked
+            # skips the analyzer
             raise PlanError(f"{o.fn} cannot be used in WHERE (window function)")
         return ext.sql(_ident(o.path))
     return _lit(o.value)
@@ -80,21 +141,22 @@ def _cond(c: Condition, flags: CompatFlags = CompatFlags()) -> str:
     if isinstance(c, And):
         return f"({_cond(c.lhs, flags)} AND {_cond(c.rhs, flags)})"
     if isinstance(c, Not):
+        # the reference rewrites NOT via De Morgan (MongoDB lacks a general
+        # $not, MongoDB.purs:337-345,400-444); SQL negates natively. The
+        # one carry-over: NOT f → {f: false} (MongoDB.purs:401-404)
         if isinstance(c.cond, FieldOperand):
             return f"{_ident(c.cond.path)} = false"
         return f"(NOT ({_cond(c.cond, flags)}))"
     if isinstance(c, BinaryCond):
         lhs, rhs, op = c.lhs, c.rhs, c.op
-        # lock-step with planner._compile_binary: exactly one side must be
-        # a field unless the compat flag lifts the restriction
+        # an FnOperand (WHERE QUALITY(text) > 0.5) counts as a field side:
+        # exactly one side must be a field (MongoDB.purs:386-397) unless
+        # the compat flag lifts the restriction
         if not flags.allow_field_comparison:
             lhs_field = isinstance(lhs, (FieldOperand, FnOperand))
             if lhs_field == isinstance(rhs, (FieldOperand, FnOperand)):
-                from purescript_ifrit_spark.errors import PlanError
-
-                raise PlanError(
-                    f"invalid condition: {_operand(lhs)} {op} {_operand(rhs)}"
-                    ": should target a field of the document"
+                raise _err_condition(
+                    f"{_fmt_operand(lhs)} {op} {_fmt_operand(rhs)}"
                 )
         if op in ("=", "!="):
             if isinstance(rhs, LitOperand) and rhs.value is None:
@@ -107,10 +169,11 @@ def _cond(c: Condition, flags: CompatFlags = CompatFlags()) -> str:
         return f"{_operand(lhs)} {sql_op} {_operand(rhs)}"
     if isinstance(c, FieldOperand):
         return f"{_ident(c.path)} = true"
-    raise ValueError(f"unrenderable condition {c!r}")
+    raise _err_condition(_fmt_operand(c))
 
 
 def _ext_fn(name: str):
+    """Dialect extension function registry lookup (None for reference fns)."""
     from purescript_ifrit_spark.functions.dialect_ext import EXT_FUNCTIONS
 
     return EXT_FUNCTIONS.get(name)
@@ -119,18 +182,19 @@ def _ext_fn(name: str):
 def _array_expr(sel: FnCall) -> str:
     ext = _ext_fn(sel.fn)
     if ext is not None:
-        # extension scalar — SQL twin generated by the same registry the
-        # planner uses (functions/dialect_ext.py), equivalence-tested
+        # extension scalar: a scan-stage expression over the field
         return ext.sql(_ident(sel.path))
     if sel.fn == "COUNT":
-        # full-path array (see planner._projection_column: COUNT accepts an
-        # object-nested array, numeric fns push down at the first segment)
+        # COUNT sizes the array at the FULL path (the analyzer accepts an
+        # object-nested array like a.b for COUNT; the numeric fns push down
+        # at the first segment). $reduce-add-1 ≡ $size (MongoDB.purs:201-214)
         whole = _ident(sel.path)
         return f"CASE WHEN {whole} IS NULL THEN NULL ELSE size({whole}) END"
     parts = sel.path.split(".")
     if len(parts) == 1:
         arr = _ident(sel.path)
     else:
+        # one-level push-down over array<struct>: extract the sub-field
         sub = ".".join(f"`{p}`" for p in parts[1:])
         arr = f"transform({_ident(parts[0])}, x -> x.{sub})"
     if sel.fn == "SUM":
@@ -150,11 +214,9 @@ def _projection_sql(sel, staged=None) -> str:
     ext = _ext_fn(sel.fn)
     if ext is not None and ext.analytic:
         # final window expression over the stage columns added by
-        # to_spark_sql's extra subquery level (lock-step with planner)
+        # to_spark_sql's extra subquery level
         cols = (staged or {}).get((sel.fn, sel.path))
         if cols is None:  # pragma: no cover — to_spark_sql always stages
-            from purescript_ifrit_spark.errors import PlanError
-
             raise PlanError(f"{sel.fn} requires staged window columns")
         return f"{ext.sql(_ident(sel.path), cols)} AS `{sel.output_name}`"
     return f"{_array_expr(sel)} AS `{sel.output_name}`"
@@ -162,14 +224,16 @@ def _projection_sql(sel, staged=None) -> str:
 
 def _aggregation_sql(sel) -> str:
     if isinstance(sel, Projection):
+        # bare field in grouped SELECT → $push ≡ collect_list (MongoDB.purs:290-291)
         return f"collect_list({_ident(sel.path)}) AS `{sel.output_name}`"
     assert isinstance(sel, FnCall)
     if _ext_fn(sel.fn) is not None:
-        from purescript_ifrit_spark.errors import PlanError
-
-        # lock-step with planner._aggregation_column
+        # analyzer._analyze_aggregation rejects this too: per-row scalars
+        # are not aggregations (reachable only via compile_unchecked)
         raise PlanError(f"{sel.fn} is not an aggregation function")
     if sel.fn == "COUNT":
+        # {$sum: 1} — row count per group, not null-skipping count(f)
+        # (MongoDB.purs:296-297)
         return f"COUNT(1) AS `{sel.output_name}`"
     return f"{sel.fn}({_ident(sel.path)}) AS `{sel.output_name}`"
 
@@ -212,9 +276,11 @@ def to_spark_sql(
                 rel = f"({outer})"
 
     if isinstance(stmt, Select):
-        # analytic extension fns need their stage columns one subquery
-        # level down (same reason as the planner's withColumn staging:
-        # no window-inside-window in one expression)
+        # analytic extension fns (SESSIONIZE) need their stage columns one
+        # subquery level down: Spark rejects a window function nested
+        # inside another window aggregate in one expression. Stage columns
+        # use the same window spec as the final expression — one shuffle +
+        # one sort feeding chained Window operators, never an extra exchange
         staged: dict = {}
         pre = []
         for s in stmt.projections:
@@ -231,13 +297,13 @@ def to_spark_sql(
             staged[(s.fn, s.path)] = cols
         hidden_ord = []
         if staged and order_sql:
-            # lock-step with planner.build: the window exchange destroys
-            # the inner subquery's ORDER BY; re-establish it on the final
+            # the window exchange destroys the inner subquery's ORDER BY
+            # (row SELECTION — ORDER BY + LIMIT — already happened and is
+            # unaffected); re-establish presentation order on the final
             # SELECT. Order by HIDDEN aliases of the source keys staged one
             # level down (not the bare names): SQL resolution prefers a
             # select-list alias, so `SELECT SESSIONIZE(ts) AS ts ORDER BY
-            # ts` would otherwise sort by the session id while the planner
-            # sorts by the source column (ADVICE r3).
+            # ts` would otherwise sort by the session id (ADVICE r3).
             for i, k in enumerate(stmt.order_by):
                 tmp = f"__ifrit_ord_{i}"
                 pre.append(f"{_ident(k.path)} AS `{tmp}`")
@@ -252,18 +318,23 @@ def to_spark_sql(
     assert isinstance(stmt, Group)
     aggs = ", ".join(_aggregation_sql(s) for s in stmt.projections)
     if stmt.group_by is None:
+        # GROUP BY NULL → one global group: partial+final agg, no shuffle key
         return f"SELECT {aggs}, NULL AS `_id` FROM {rel}"
     if isinstance(stmt.group_by, FnCall):
+        # engine extension: computed group key (GROUP BY FINGERPRINT(f)) —
+        # the key evaluates in the scan stage; the shuffle hashes the
+        # computed value, exactly like grouping on a stored column
         ext = _ext_fn(stmt.group_by.fn)
-        if ext is None or not ext.groupable:
-            from purescript_ifrit_spark.errors import PlanError
-
-            if ext is not None:
-                raise PlanError(
-                    f"function {stmt.group_by.fn} cannot be a GROUP BY key "
-                    "(not a scalar scan-stage expression)"
-                )
+        if ext is None:
             raise PlanError(f"unknown function {stmt.group_by.fn}")
+        if not ext.groupable:
+            # CHUNK (array-valued) and SESSIONIZE (window-backed) are no
+            # scan-stage scalar key; the analyzer rejects them too, but
+            # compile_unchecked reaches here without type-checking
+            raise PlanError(
+                f"function {stmt.group_by.fn} cannot be a GROUP BY key "
+                "(not a scalar scan-stage expression)"
+            )
         key = ext.sql(_ident(stmt.group_by.path))
     else:
         key = _ident(stmt.group_by)

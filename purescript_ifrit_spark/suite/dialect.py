@@ -216,7 +216,7 @@ _XD_TOK = (
 )
 def xd_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick vectorization reached through the DIALECT
-    (`VECTORIZE(text)` → operators/vectorize.vectorize_expr, value-equal
+    (`VECTORIZE(text)` → operators/vectorize.vectorize_sql, value-equal
     to feature_hash_sparse — pinned in test_dialect_ext)."""
     docs = load_table(spark, sf_dir, "documents")
     out = run_query(spark, docs, "SELECT doc_id, VECTORIZE(text) AS v")
@@ -241,7 +241,7 @@ def xd_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def xd_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style linear quality filter reached through the DIALECT
-    (`QUALITY_SCORE(text)` → operators/vectorize.hash_margin_expr,
+    (`QUALITY_SCORE(text)` → operators/vectorize.hash_margin_sql,
     value-equal to linear_hash_score under margin_weights — pinned in
     test_dialect_ext)."""
     docs = load_table(spark, sf_dir, "documents")
@@ -337,7 +337,7 @@ def _xd_gopher_oracle() -> str:
 @register("xd_gopher", _xd_gopher_oracle())
 def xd_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher rule-set pass/fail reached through the DIALECT
-    (`GOPHER(text)` → operators/text_analysis.gopher_pass_expr): the
+    (`GOPHER(text)` → operators/text_analysis.gopher_pass_sql): the
     oracle re-derives every rule from scratch, so a single wrongly
     passed/failed document flips a boolean and fails the value hash
     (per-rule audit values are pinned by x_gopher_quality)."""
@@ -380,7 +380,7 @@ def _xd_minhash_oracle() -> str:
 @register("xd_minhash", _xd_minhash_oracle())
 def xd_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures reached through the DIALECT (`MINHASH(text)` →
-    functions/hashing.minhash_hexsig, the 16 lanes the operators/dedup
+    functions/hashing.minhash_hexsig_sql, the 16 lanes the operators/dedup
     LSH family reads, bit-pinned in test_dialect_ext): signature-exact
     dedup groups over a disjoint-token planted corpus (cross-doc
     jaccard 0 — see the oracle note on why raw `documents` cannot work)
@@ -458,7 +458,7 @@ def _xd_simhash_oracle() -> str:
 @register("xd_simhash", _xd_simhash_oracle())
 def xd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash signatures reached through the DIALECT (`SIMHASH(text)` →
-    functions/hashing.simhash_hex, bit-identical to the operators/dedup
+    functions/hashing.simhash_hex_sql, bit-identical to the operators/dedup
     simhash family, pinned in test_dialect_ext): signature-exact dedup
     groups over the disjoint-token planted corpus with exact copies
     (doc_id%3), whitespace-mangled copies (doc_id%5 — normalize-first on
@@ -578,7 +578,7 @@ def _xd_c4_oracle() -> str:
 @register("xd_c4", _xd_c4_oracle())
 def xd_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 page-level pass/fail reached through the DIALECT
-    (`C4PASS(text)` → operators/text_cleaning.c4_pass_expr) on the
+    (`C4PASS(text)` → operators/text_cleaning.c4_pass_sql) on the
     planted lined corpus — the oracle re-derives every line and page
     rule from scratch (per-line audit values are pinned by
     x_c4_line_filter)."""
@@ -600,7 +600,7 @@ def _xd_jl_oracle() -> str:
 @register("xd_jl_project", _xd_jl_oracle())
 def xd_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JL projection reached through the DIALECT (`JL_PROJECT(embedding)`
-    → operators/vectorize.jlproject_expr — the first array-argument
+    → operators/vectorize.jlproject_dialect_sql — the first array-argument
     extension function; quantize + 64→16 projection in one scan-stage
     expression, value-equal to the Arrow operator jl_project, pinned in
     test_dialect_ext). Flat posexplode rows for the driver comparator."""
@@ -690,8 +690,8 @@ def xd_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def xd_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization codes reached through the DIALECT
-    (`PQ_ENCODE(embedding)` → operators/vectorize.pq_code_expr, the
-    frozen m=4 x k=16 one-hot codebook; lock-step with the SQL backend,
+    (`PQ_ENCODE(embedding)` → operators/vectorize.pq_code_dialect_sql,
+    the frozen m=4 x k=16 one-hot codebook; value-equal to pq_code_expr,
     pinned in test_dialect_ext): signature-exact quantization-cell
     dedup groups over planted one-hot clusters spanning ALL FOUR
     subspaces (cluster c's hot dim is 16*(c // 4) + (c % 4) + 1:

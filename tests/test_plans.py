@@ -38,8 +38,8 @@ def test_integral_filter_pushdown_on_bigint_column(spark, orders):
     100` as `cast(o_orderkey as double) > 100.0`, which kept every
     integral-column predicate OUT of PushedFilters (only IsNotNull
     reached the scan) — a full scan instead of a row-group skip at 100
-    TB. planner._lit now emits integral literals as int64, so the
-    comparison is native and the predicate lands in the parquet source."""
+    TB. plans/spark_sql._lit renders integral literals as integers, so
+    the comparison is native and the predicate lands in the parquet source."""
     df = run_query(spark, orders, "SELECT o_orderkey WHERE o_orderkey > 100")
     plan = physical(df)
     pushed = plan.split("PushedFilters")[1]
