@@ -13,8 +13,8 @@ brand-new Spark-first engine with the same dialect and semantics:
 
 Execution is delegated entirely to Spark/Catalyst: plans/spark_sql renders
 one declarative query (filter/projection/aggregate/order/limit,
-higher-order array functions) and the planner resolves it over a temp view
-of the input, so predicate pushdown, column pruning, partial aggregation
+higher-order array functions) and the planner resolves it over the input
+in one spark.sql call, so predicate pushdown, column pruning, partial aggregation
 and whole-stage codegen come for free.
 
 Beyond the reference surface it ships the large-scale training-data-pipeline

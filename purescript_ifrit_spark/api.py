@@ -38,8 +38,8 @@ class IfritPlan:
 
     def apply(self, df: DataFrame) -> DataFrame:
         """Materialize the plan over a DataFrame (lazy — no action run):
-        the `to_spark_sql` text over a temp view of `df`, resolved by one
-        spark.sql call (planner.build)."""
+        the `to_spark_sql` text over `df`, resolved by one spark.sql call
+        (planner.build; a cached `df` stays cached)."""
         from purescript_ifrit_spark import planner
 
         return planner.build(df, self.statement, self.flags)

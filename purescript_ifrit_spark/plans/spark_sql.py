@@ -48,6 +48,8 @@ Scale notes (100 TB design bar):
 
 from __future__ import annotations
 
+import math
+
 from purescript_ifrit_spark.errors import PlanError
 from purescript_ifrit_spark.plans.ast import (
     And,
@@ -88,7 +90,12 @@ def _lit(v) -> str:
     if isinstance(v, bool):
         return "true" if v else "false"
     if isinstance(v, float):
-        return str(int(v)) if v.is_integer() else repr(v)
+        # beyond int64 an integer literal would be a DECIMAL wider than
+        # Spark's 38 digits; repr() (e.g. 1e+39) reads back as a DOUBLE.
+        # A number too long for a float lexes as inf
+        if v.is_integer() and abs(v) < 2**63:
+            return str(int(v))
+        return repr(v) if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
     if isinstance(v, int):
         # programmatic ASTs may carry raw ints: render numerically
         return str(v)
@@ -190,18 +197,28 @@ def _array_expr(sel: FnCall) -> str:
         # at the first segment). $reduce-add-1 ≡ $size (MongoDB.purs:201-214)
         whole = _ident(sel.path)
         return f"CASE WHEN {whole} IS NULL THEN NULL ELSE size({whole}) END"
+    # SUM/AVG fold the sub-field extraction INTO the aggregate lambda and
+    # take size() of the BASE array: over transform(items, x -> x.qty),
+    # AVG would evaluate the transform three times per row (the fold and
+    # two size() calls; higher-order functions are CodegenFallback, so
+    # subexpression elimination never shares them). size(transform(c)) ≡
+    # size(c), and the fold visits the same elements in the same order
+    # with the same casts, so values are bit-identical. MIN/MAX keep the
+    # transform: array_min/array_max skip NULL elements, which a fold
+    # lambda would not.
     parts = sel.path.split(".")
+    base = _ident(parts[0])
     if len(parts) == 1:
-        arr = _ident(sel.path)
+        elem, arr = "x", base
     else:
         # one-level push-down over array<struct>: extract the sub-field
-        sub = ".".join(f"`{p}`" for p in parts[1:])
-        arr = f"transform({_ident(parts[0])}, x -> x.{sub})"
+        elem = "x." + ".".join(f"`{p}`" for p in parts[1:])
+        arr = f"transform({base}, x -> {elem})"
+    total = f"aggregate({base}, 0D, (s, x) -> s + CAST({elem} AS DOUBLE))"
     if sel.fn == "SUM":
-        return f"aggregate({arr}, 0D, (s, x) -> s + CAST(x AS DOUBLE))"
+        return total
     if sel.fn == "AVG":
-        total = f"aggregate({arr}, 0D, (s, x) -> s + CAST(x AS DOUBLE))"
-        return f"CASE WHEN size({arr}) > 0 THEN {total} / size({arr}) END"
+        return f"CASE WHEN size({base}) > 0 THEN {total} / size({base}) END"
     if sel.fn == "MAX":
         return f"array_max({arr})"
     return f"array_min({arr})"

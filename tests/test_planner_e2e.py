@@ -298,6 +298,49 @@ def test_string_literal_with_braces_quotes_and_backslash(spark):
     assert rows(build(df, stmt)) == [(odd,)]
 
 
+def test_connect_template_keeps_braces(spark):
+    # On Spark Connect, build passes the input as spark.sql(template, t=df);
+    # the template must survive str.format with its braces intact. The
+    # classic formatter runs the same str.format, so it checks the text.
+    from purescript_ifrit_spark.api import compile_query
+    from purescript_ifrit_spark.planner import format_template
+
+    df = spark.createDataFrame(
+        [(1, "mail ann@example.com or call 555-123-4567"), (2, "a{0}}")],
+        "doc_id long, text string",
+    )
+    name = "__ifrit_template"
+    for sql in ("SELECT doc_id, REDACT(text) AS t", "SELECT doc_id, text AS t"):
+        text = compile_query({"doc_id": "number", "text": "string"}, sql).to_spark_sql(name)
+        assert sorted(rows(spark.sql(format_template(text, name), t=df))) == sorted(
+            rows(run_query(spark, df, sql))
+        ), sql
+    assert "{" in compile_query({"text": "string"}, "SELECT REDACT(text) AS t").to_spark_sql(name)
+
+
+def test_cached_input_stays_cached(spark):
+    # spark.catalog.dropTempView uncaches every plan with the view's
+    # result, which is the input itself: build must drop its view without
+    # that, or a cached input loses its cache after one query
+    df = spark.createDataFrame([("a", True), ("b", False)], "name string, evil boolean")
+    df.cache().count()
+    try:
+        out = run_query(spark, df, "SELECT name WHERE evil")
+        assert rows(out) == [("a",)]
+        for later in (out, df.select("name")):
+            assert "InMemoryRelation" in later._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        df.unpersist()
+
+
+def test_literal_beyond_int64_compares_as_double(spark, wizards):
+    # an integral literal past int64 renders as a double, not as a DECIMAL
+    # wider than Spark's 38 digits; one too long for a float lexes as inf
+    for lit in (str(10**39), "9" * 400):
+        assert rows(q(spark, wizards, f"SELECT name WHERE profile.bio.age > {lit}")) == []
+        assert len(rows(q(spark, wizards, f"SELECT name WHERE profile.bio.age < {lit}"))) == 6
+
+
 def test_build_registers_the_udfs_a_statement_uses(spark):
     df = spark.createDataFrame(
         [(1, "cafe\u0301"), (2, "plain")], "doc_id long, text string"

@@ -228,6 +228,25 @@ def test_field_vs_field_rejected_in_sql_backend():
     )
 
 
+def test_nested_array_sum_avg_fold_the_sub_field():
+    # SUM/AVG over a nested path fold x.sub inside aggregate() and size the
+    # base array, so each row's elements are visited once; MIN/MAX keep
+    # the transform, whose NULL-skipping array_min/array_max need
+    from purescript_ifrit_spark.api import compile_query
+
+    def render(sql):
+        return compile_query(WIZARDS_SCHEMA, sql).to_spark_sql("w")
+
+    fold = "aggregate(`wands`, 0D, (s, x) -> s + CAST(x.`power` AS DOUBLE))"
+    assert render("SELECT SUM(wands.power) AS p") == f"SELECT {fold} AS `p` FROM `w`"
+    assert render("SELECT AVG(wands.power) AS p") == (
+        f"SELECT CASE WHEN size(`wands`) > 0 THEN {fold} / size(`wands`) END AS `p` FROM `w`"
+    )
+    assert render("SELECT MAX(wands.power) AS p") == (
+        "SELECT array_max(transform(`wands`, x -> x.`power`)) AS `p` FROM `w`"
+    )
+
+
 def test_backend_equivalence_randomized(spark, wizards):
     """Hypothesis-style sweep without per-example Spark overhead control:
     generate statements over the wizards schema, keep the analyzable ones,
