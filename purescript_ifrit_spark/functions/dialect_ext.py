@@ -101,7 +101,9 @@ from purescript_ifrit_spark.schema import Schema
 
 # Importing this module runs no pyspark import: the parser and analyzer
 # read EXT_FUNCTIONS' names and metadata on the compile path. Renderers
-# import their operator modules (some of which import Spark) when called.
+# import their Spark-free SQL modules (functions/*_sql.py, stopwords.py)
+# when called, so rendering any statement to SQL text imports no pyspark;
+# only the IMAGE_DHASH / NFC pandas_udf factories need Spark.
 
 # chunking geometry of the dialect CHUNK function (fixed: the one-argument
 # fn grammar has no room for parameters; the Python API takes them)
@@ -185,7 +187,7 @@ SPLIT_SALT = "v1"
 
 
 def _split_sql(x: str) -> str:
-    from purescript_ifrit_spark.operators.sampling import hash_split_sql
+    from purescript_ifrit_spark.functions.hashing_sql import hash_split_sql
 
     # CAST: numeric ids draw on their string form, like split_expr's cast
     return hash_split_sql(f"CAST({x} AS STRING)", SPLIT_WEIGHTS, SPLIT_SALT)
@@ -206,47 +208,45 @@ def _chunk_sql(x: str) -> str:
 
 
 def _redact_sql(x: str) -> str:
-    from purescript_ifrit_spark.operators.text_cleaning import redact_sql
+    from purescript_ifrit_spark.functions.text_sql import redact_sql
 
     return redact_sql(x)
 
 
 def _vectorize_sql(x: str) -> str:
-    from purescript_ifrit_spark.operators.vectorize import vectorize_sql
+    from purescript_ifrit_spark.functions.vector_sql import vectorize_sql
 
     return vectorize_sql(x)
 
 
 def _quality_score_sql(x: str) -> str:
-    from purescript_ifrit_spark.operators.vectorize import hash_margin_sql
+    from purescript_ifrit_spark.functions.vector_sql import hash_margin_sql
 
     return hash_margin_sql(x)
 
 
 def _gopher_sql(x: str) -> str:
-    from purescript_ifrit_spark.operators.text_analysis import (
-        gopher_pass_sql,
-    )
+    from purescript_ifrit_spark.functions.text_sql import gopher_pass_sql
 
     return gopher_pass_sql(x)
 
 
 def _c4pass_sql(x: str) -> str:
-    from purescript_ifrit_spark.operators.text_cleaning import c4_pass_sql
+    from purescript_ifrit_spark.functions.text_sql import c4_pass_sql
 
     return c4_pass_sql(x)
 
 
 def _minhash_sql(x: str) -> str:
-    from purescript_ifrit_spark.functions import hashing as H
+    from purescript_ifrit_spark.functions.hashing_sql import minhash_hexsig_sql
 
-    return H.minhash_hexsig_sql(x, 16, 3)
+    return minhash_hexsig_sql(x, 16, 3)
 
 
 def _simhash_sql(x: str) -> str:
-    from purescript_ifrit_spark.functions import hashing as H
+    from purescript_ifrit_spark.functions.hashing_sql import simhash_hex_sql
 
-    return H.simhash_hex_sql(x, 64)
+    return simhash_hex_sql(x, 64)
 
 
 # Frozen BM25 model (VERDICT r8 #6). The one-argument fn grammar has no
@@ -294,25 +294,19 @@ def _bm25_sql(x: str) -> str:
 
 
 def _jlproject_sql(x: str) -> str:
-    from purescript_ifrit_spark.operators.vectorize import (
-        jlproject_dialect_sql,
-    )
+    from purescript_ifrit_spark.functions.vector_sql import jlproject_dialect_sql
 
     return jlproject_dialect_sql(x)
 
 
 def _pq_encode_sql(x: str) -> str:
-    from purescript_ifrit_spark.operators.vectorize import (
-        pq_code_dialect_sql,
-    )
+    from purescript_ifrit_spark.functions.vector_sql import pq_code_dialect_sql
 
     return pq_code_dialect_sql(x)
 
 
 def _htmltext_sql(x: str) -> str:
-    from purescript_ifrit_spark.operators.text_cleaning import (
-        html_text_spark_sql,
-    )
+    from purescript_ifrit_spark.functions.text_sql import html_text_spark_sql
 
     return html_text_spark_sql(x)
 

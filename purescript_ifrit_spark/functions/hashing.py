@@ -11,6 +11,13 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# the dialect's SQL renderings are Spark-free (functions/hashing_sql.py);
+# re-exported here next to their Column forms
+from purescript_ifrit_spark.functions.hashing_sql import (  # noqa: F401
+    minhash_hexsig_sql,
+    simhash_hex_sql,
+)
+
 
 def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
     """MinHash signature: array<bigint> of length `num_hashes`.
@@ -44,39 +51,6 @@ def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
         ),
     )
     return F.when(F.size(shingles) > 0, agg)
-
-
-def minhash_hexsig_sql(
-    x: str, num_hashes: int = 16, shingle_words: int = 3
-) -> str:
-    """MinHash signature of a raw text operand `x` rendered as ONE
-    ':'-joined hex string in Spark SQL — the dialect MINHASH (a string
-    scalar can be a GROUP BY key, which is the signature-exact dedup
-    move; an array cannot). Normalize → word-shingle → 16-lane fold →
-    hex join, each step the SQL rendering of minhash_signature over
-    functions/text.word_shingles, so the lanes stay bit-identical to the
-    operators/dedup family (b=8, r=2 geometry reads the same 16 lanes;
-    pinned in tests). Empty shingle sets (blank/NULL text) yield NULL,
-    not a shared constant — content-free docs must never
-    signature-match each other."""
-    n = f"trim(regexp_replace(lower({x}), '\\\\s+', ' '))"
-    grams = " ".join(["\\\\S+"] * shingle_words)
-    rx = f"'(?=({grams}))(?:\\\\S+ ?)'"
-    sh = (
-        f"CASE WHEN {n} IS NULL OR length({n}) = 0 "
-        "THEN CAST(array() AS ARRAY<STRING>) "
-        f"WHEN size(split({n}, ' ')) >= {shingle_words} "
-        f"THEN array_distinct(regexp_extract_all({n}, {rx}, 1)) "
-        f"ELSE array({n}) END"
-    )
-    lanes = ",".join(f"xxhash64({i}, h)" for i in range(num_hashes))
-    agg = (
-        f"aggregate(transform({sh}, s -> xxhash64(s)), "
-        f"array_repeat(CAST(9223372036854775807 AS BIGINT), {num_hashes}), "
-        f"(acc, h) -> zip_with(acc, array({lanes}), (a, b) -> least(a, b)))"
-    )
-    guarded = f"CASE WHEN size({sh}) > 0 THEN {agg} END"
-    return f"array_join(transform({guarded}, v -> hex(v)), ':')"
 
 
 def minhash_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
@@ -167,43 +141,6 @@ def simhash_signature(toks: Column, bits: int = 64) -> Column:
             F.element_at(counters, k + 1) > 0, F.lit(_bit_value(k)).cast("long")
         ).otherwise(F.lit(0).cast("long"))
     return sig
-
-
-def simhash_hex_sql(x: str, bits: int = 64) -> str:
-    """64-bit SimHash of the normalized whitespace tokens of a raw text
-    operand `x`, rendered as ONE 16-hex-digit string in Spark SQL — the
-    dialect SIMHASH (a string scalar can be a GROUP BY key). Normalize →
-    tokenize → 64-lane sign fold → %016X format: the same xxhash64 per
-    word token and sign rule (2·count_set(k) > n_tokens) as
-    simhash_signature and the operators/dedup simhash family —
-    bit-identical, pinned in tests — so `GROUP BY SIMHASH(text)` is
-    exactly the hamming-0 tier of that family's blocking. The fold and
-    the collapse use generic HOFs over sequence(0, bits-1) instead of
-    simhash_signature's static unroll: value-identical, and the whole
-    expression parses JVM-side in one call. Blank/NULL text → NULL,
-    never a shared constant."""
-    n = f"trim(regexp_replace(lower({x}), '\\\\s+', ' '))"
-    last = bits - 1
-    counters = (
-        f"aggregate(split({n}, ' '), "
-        f"array_repeat(0L, {bits}), "
-        f"(acc, t) -> zip_with(acc, "
-        f"transform(sequence(0, {last}), k -> shiftright(xxhash64(t), k) & 1L), "
-        f"(c, b) -> c + IF(b = 1, 1L, -1L)))"
-    )
-    # transform-as-let: bind the counters array ONCE (embedding it in
-    # the per-bit lambda would textually replicate — and re-evaluate —
-    # the whole fold `bits` times)
-    sig = (
-        f"element_at(transform(array({counters}), "
-        f"cnt -> aggregate(sequence(0, {last}), 0L, "
-        f"(s, k) -> s + IF(element_at(cnt, k + 1) > 0, "
-        f"shiftleft(1L, k), 0L))), 1)"
-    )
-    return (
-        f"CASE WHEN {n} IS NOT NULL AND length({n}) > 0 "
-        f"THEN format_string('%0{bits // 4}X', {sig}) END"
-    )
 
 
 def hamming64(a: Column, b: Column) -> Column:

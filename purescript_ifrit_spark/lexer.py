@@ -1,4 +1,4 @@
-"""Lexer: SQL string → token list with positions.
+"""Lexer: SQL string → token stream.
 
 Faithful re-expression of the reference lexer (src/Ifrit/Lexer.purs):
 
@@ -16,12 +16,18 @@ Faithful re-expression of the reference lexer (src/Ifrit/Lexer.purs):
   double-quoted over charset [a-zA-Z0-9_.], words over the same charset
   (Lexer.purs:198-229)
 - error parity: "invalid token '<char>' at position <pos>"
+
+`tokenize` returns a `Tokens` stream: parallel `kinds` and `values` lists
+ending with EOF, filled from one regex scan of the source. Positions are
+not kept while lexing; indexing or iterating the stream yields `Token`s
+whose positions are computed once, on demand, by a second scan of the same
+regex. Error messages and tests are their only readers.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Any, List
+from typing import Any, Iterator, List, Optional
 
 from purescript_ifrit_spark.errors import invalid_token
 
@@ -41,9 +47,9 @@ EOF = "eof"
 
 
 class Token:
-    """Slotted value object (NOT a dataclass: token construction is the
-    lexer's hot path — a frozen dataclass pays object.__setattr__ per
-    field; __slots__ assignment is ~3× cheaper)."""
+    """One token with its source position and length: what indexing or
+    iterating a `Tokens` stream yields. The parser never builds one on a
+    successful parse."""
 
     __slots__ = ("kind", "value", "pos", "_length")
 
@@ -94,93 +100,110 @@ _WORDS = {
     "NOT": (UNARY, "NOT"),
     "true": (BOOLEAN, True),
     "false": (BOOLEAN, False),
-    # GROUP / ORDER start a two-word keyword: kind None marks an entry whose
-    # value must match at the run's position (no match: the run is a WORD)
-    "GROUP": (None, re.compile(r"GROUP\s+BY(?![a-zA-Z0-9_.])").match),
-    "ORDER": (None, re.compile(r"ORDER\s+BY(?![a-zA-Z0-9_.])").match),
 }
 
-# NUMBER is tried before the word run, as in the reference's rule order
-# (only a run starting with a digit or "." can match it); group 1 set
-# means the NUMBER alternative won
-_NUMBER_OR_RUN = re.compile(r"([0-9]*\.?[0-9]+)|[a-zA-Z0-9_.]+")
-_STRING = re.compile(r'"[a-zA-Z0-9_.]+"')
-# operators and punctuation: two-character operators are looked up first.
-# `<=` / `>=` are the documented fix, SURVEY.md §2.3 F3.
+# operators and punctuation. `<=` / `>=` are the documented fix,
+# SURVEY.md §2.3 F3.
 _SYMBOLS = {
     "!=": BINARY, "<=": BINARY, ">=": BINARY,
     "=": BINARY, "<": BINARY, ">": BINARY,
     ")": PAREN_CLOSE, "(": PAREN_OPEN, ",": COMMA,
 }
 
-_WS = re.compile(r"\s*")
-# ASCII whitespace for the inline fast-path skip below; non-ASCII \s
-# matches (NBSP etc.) take the _WS regex fallback
-_WS_CHARS = " \t\n\r\x0b\x0c"
+# One token per match: leading whitespace, then exactly one group, in the
+# reference's rule order (Lexer.purs:176-229). Only GROUP/ORDER BY spans
+# whitespace, so it comes before the word run; NUMBER comes before the run
+# because only a run starting with a digit or "." can match it. Every
+# non-whitespace character starts some alternative, so the matches tile the
+# source up to its trailing whitespace.
+_INVALID = 6
+_SCAN = re.compile(
+    r"\s*(?:"
+    r"((?:GROUP|ORDER)\s+BY)(?![a-zA-Z0-9_.])"
+    r"|([0-9]*\.?[0-9]+)"
+    r"|([a-zA-Z0-9_.]+)"
+    r'|("[a-zA-Z0-9_.]+")'
+    r"|(!=|<=|>=|[=<>(),])"
+    r"|(\S))"
+)
 
 
-def tokenize(source: str) -> List[Token]:
+class Tokens:
+    """The token stream of one source: `kinds[i]` and `values[i]` describe
+    token i, and the last token is EOF. `len()` counts EOF. Indexing or
+    iterating yields `Token`s; their positions come from one `finditer`
+    over the source, run on first use and kept."""
+
+    __slots__ = ("source", "kinds", "values", "_tokens")
+
+    def __init__(self, source: str, kinds: List[str], values: List[Any]):
+        self.source = source
+        self.kinds = kinds
+        self.values = values
+        self._tokens: Optional[List[Token]] = None
+
+    def __len__(self) -> int:
+        return len(self.kinds)
+
+    def __getitem__(self, i):
+        return self._positioned()[i]
+
+    def __iter__(self) -> Iterator[Token]:
+        return iter(self._positioned())
+
+    def _positioned(self) -> List[Token]:
+        if self._tokens is None:
+            tokens = []
+            for kind, value, m in zip(
+                self.kinds, self.values, _SCAN.finditer(self.source)
+            ):
+                start = m.start(m.lastindex)
+                tokens.append(Token(kind, value, start, m.end() - start))
+            tokens.append(Token(EOF, None, len(self.source)))
+            self._tokens = tokens
+        return self._tokens
+
+
+def tokenize(source: str) -> Tokens:
     """Tokenize; appends EOF. Raises LexError with reference-parity message.
 
-    Word first: at each position one regex takes a NUMBER or the maximal
-    run of word characters, and one dict lookup classifies the run as a
-    keyword, function, NOT or boolean, else a WORD. Strings, operators and
-    punctuation are handled by their first character. Whitespace is skipped
-    inline (typical gaps are one space); non-ASCII whitespace falls back to
-    the `\\s*` regex. tests/test_lexer.py checks the token stream against a
-    rule-by-rule lexer in the reference's order (Lexer.purs:176-229)."""
-    tokens: List[Token] = []
-    append = tokens.append
-    run_match = _NUMBER_OR_RUN.match
+    One `findall` pass of `_SCAN` splits the source into tokens; the loop
+    only classifies them. A word run is looked up in `_WORDS` (keyword,
+    function, NOT or boolean), else it is a WORD. tests/test_lexer.py
+    checks the stream against a rule-by-rule lexer in the reference's order
+    (Lexer.purs:176-229)."""
+    kinds: List[str] = []
+    values: List[Any] = []
+    kind = kinds.append
+    value = values.append
     words_get = _WORDS.get
-    pos = 0
-    n = len(source)
-    while True:
-        while pos < n and source[pos] in _WS_CHARS:
-            pos += 1
-        if pos >= n:
-            append(Token(EOF, None, pos))
-            return tokens
-        m = run_match(source, pos)
-        if m is not None:
-            end = m.end()
-            raw = m.group()
-            if m.lastindex:
-                append(Token(NUMBER, float(raw), pos, end - pos))
+    for two_word, number, run, string, symbol, bad in _SCAN.findall(source):
+        if run:
+            hit = words_get(run)
+            if hit is None:
+                kind(WORD)
+                value(run)
             else:
-                hit = words_get(raw)
-                if hit is None:
-                    append(Token(WORD, raw, pos, end - pos))
-                elif hit[0] is not None:
-                    append(Token(hit[0], hit[1], pos, end - pos))
-                else:
-                    pair = hit[1](source, pos)
-                    if pair is None:
-                        append(Token(WORD, raw, pos, end - pos))
-                    else:
-                        end = pair.end()
-                        append(Token(KEYWORD, raw + "BY", pos, end - pos))
-            pos = end
-            continue
-        c = source[pos]
-        sym = source[pos:pos + 2]
-        kind = _SYMBOLS.get(sym)
-        if kind is None:
-            sym = c
-            kind = _SYMBOLS.get(c)
-        if kind is not None:
-            append(Token(kind, sym, pos, len(sym)))
-            pos += len(sym)
-            continue
-        if c == '"':
-            m = _STRING.match(source, pos)
-            if m is not None:
-                end = m.end()
-                append(Token(STRING, source[pos + 1:end - 1], pos, end - pos))
-                pos = end
-                continue
-        # rare path: \s covers non-ASCII whitespace the inline skip does not
-        ws_end = _WS.match(source, pos).end()
-        if ws_end == pos:
-            raise invalid_token(c, pos)
-        pos = ws_end
+                kind(hit[0])
+                value(hit[1])
+        elif symbol:
+            kind(_SYMBOLS[symbol])
+            value(symbol)
+        elif number:
+            kind(NUMBER)
+            value(float(number))
+        elif string:
+            kind(STRING)
+            value(string[1:-1])
+        elif two_word:
+            kind(KEYWORD)
+            value("GROUPBY" if two_word[0] == "G" else "ORDERBY")
+        else:
+            pos = next(
+                m.start(_INVALID) for m in _SCAN.finditer(source)
+                if m.lastindex == _INVALID
+            )
+            raise invalid_token(bad, pos)
+    kind(EOF)
+    value(None)
+    return Tokens(source, kinds, values)

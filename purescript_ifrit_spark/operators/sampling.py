@@ -21,12 +21,11 @@ from typing import Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_SPACE = 16**8  # the md5-prefix draw space
-
-
-def _hex_cut(fraction: float) -> str:
-    """The 8-char lowercase hex cutpoint h such that P(draw < h) = fraction."""
-    return format(min(int(fraction * _SPACE), _SPACE - 1), "08x")
+from purescript_ifrit_spark.functions.hashing_sql import (  # noqa: F401
+    _SPACE,
+    _hex_cut,
+    hash_split_sql,
+)
 
 
 def _cut_or_all(fraction: float) -> str:
@@ -88,41 +87,6 @@ def hash_split(
     last split absorbs rounding. Appending data never reassigns existing
     rows; changing `salt` re-rolls every assignment."""
     return df.withColumn(out_col, split_expr(F.col(id_col), weights, salt))
-
-
-def hash_split_sql(
-    id_expr: str,
-    weights: Sequence[Tuple[str, float]] = (("train", 0.98), ("val", 0.01), ("test", 0.01)),
-    salt: str = "v1",
-) -> str:
-    """The ANSI-SQL twin of `hash_split` (same cutpoints, same md5 draw) —
-    runnable by DuckDB/Spark SQL alike; used by the driver oracle."""
-    if not weights:
-        raise ValueError("weights must name at least one split")
-    for name, w in weights:
-        if w <= 0:
-            raise ValueError(
-                f"split weight for {name!r} must be positive (got {w})"
-            )
-    total = sum(w for _, w in weights)
-    if not 0.999 <= total <= 1.001:
-        raise ValueError(f"split weights must sum to 1 (got {total})")
-
-    def q(s: str) -> str:
-        return s.replace("'", "''")  # SQL string-literal escaping
-
-    tail = f"'{q(weights[-1][0])}'"
-    if len(weights) == 1:
-        # r8 review: zero WHEN clauses ("CASE ELSE ... END") is a parse
-        # error on both engines; the Python twin's single-split answer
-        # is the bare tail literal
-        return tail
-    draw = f"substr(md5({id_expr} || ':{salt}'), 1, 8)"
-    cum, whens = 0.0, []
-    for name, w in weights[:-1]:
-        cum += w
-        whens.append(f"WHEN {draw} < '{_hex_cut(cum)}' THEN '{q(name)}'")
-    return "CASE " + " ".join(whens) + f" ELSE {tail} END"
 
 
 def hash_sample(

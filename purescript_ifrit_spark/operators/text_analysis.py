@@ -19,6 +19,11 @@ from purescript_ifrit_spark.functions.text import (  # noqa: F401
     LANG_MARKERS,
     lang_id,
 )
+from purescript_ifrit_spark.functions.text_sql import (  # noqa: F401
+    GOPHER_DEFAULTS,
+    GOPHER_STOPWORDS,
+    gopher_pass_sql,
+)
 
 
 def _quality_staged(
@@ -1700,23 +1705,6 @@ def pack_text(
     )
 
 
-GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
-
-# the paper's default thresholds, consumed by gopher_quality_flags'
-# keyword defaults, gopher_pass_sql (the dialect GOPHER) AND the DuckDB
-# oracles (suite/text._gopher_oracle) — one definition so a threshold
-# tweak cannot leave one of the three surfaces behind
-GOPHER_DEFAULTS = {
-    "min_words": 50,
-    "max_words": 100_000,
-    "min_mean_word_len": 3.0,
-    "max_mean_word_len": 10.0,
-    "max_symbol_ratio": 0.1,
-    "min_alpha_frac": 0.8,
-    "min_stopwords": 2,
-}
-
-
 def gopher_quality_flags(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1824,51 +1812,6 @@ def _gopher_combine(
         & (symbol_ratio <= max_symbol_ratio)
         & (alpha_frac >= min_alpha_frac)
         & (n_stop >= min_stopwords)
-    )
-
-
-def gopher_pass_sql(x: str) -> str:
-    """The combined Gopher pass/fail at the DEFAULT thresholds as one Spark
-    SQL boolean — the dialect GOPHER(f) scalar (parameterized thresholds
-    go through gopher_quality_flags). Same rule arithmetic as
-    _gopher_parts and the same nonspace-character identity for mean word
-    length (sum of token lengths == length of the normalized text minus
-    its n−1 separators) — value-identical to gopher_quality_flags, pinned
-    in tests including a planted PASSING document (the sf corpus fails
-    every doc on word count, which once masked an inverted identity
-    here)."""
-    d = GOPHER_DEFAULTS
-    n = f"trim(regexp_replace(lower({x}), '\\\\s+', ' '))"
-    toks = f"split({n}, ' ')"
-    nw = (
-        f"CAST(CASE WHEN length({n}) = 0 THEN 0 "
-        f"ELSE size({toks}) END AS BIGINT)"
-    )
-    sum_len = f"(length({n}) - greatest({nw} - 1, 0))"
-    mwl = (
-        f"CASE WHEN {nw} > 0 THEN CAST({sum_len} AS DOUBLE) / {nw} "
-        "ELSE 0.0D END"
-    )
-    dots = "'" + "\\\\." * 3 + "'"
-    sy = (
-        f"(length({x}) - length(replace({x}, '#', '')) "
-        f"+ size(split({x}, {dots})) - 1)"
-    )
-    syr = f"CASE WHEN {nw} > 0 THEN CAST({sy} AS DOUBLE) / {nw} ELSE 0.0D END"
-    na = (
-        f"CASE WHEN length({n}) = 0 THEN 0 "
-        f"ELSE size(filter({toks}, w -> w rlike '[a-z]')) END"
-    )
-    af = f"CASE WHEN {nw} > 0 THEN CAST({na} AS DOUBLE) / {nw} ELSE 0.0D END"
-    stops = ", ".join(f"'{s}'" for s in GOPHER_STOPWORDS)
-    ns = f"size(array_intersect(array_distinct({toks}), array({stops})))"
-    return (
-        f"({nw} >= {d['min_words']} AND {nw} <= {d['max_words']} "
-        f"AND ({mwl}) >= {d['min_mean_word_len']}D "
-        f"AND ({mwl}) <= {d['max_mean_word_len']}D "
-        f"AND ({syr}) <= {d['max_symbol_ratio']}D "
-        f"AND ({af}) >= {d['min_alpha_frac']}D "
-        f"AND {ns} >= {d['min_stopwords']})"
     )
 
 

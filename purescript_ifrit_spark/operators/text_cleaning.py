@@ -20,19 +20,25 @@ stage.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Tuple
+from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from purescript_ifrit_spark.plans.spark_sql import _lit as _sql_lit
-
-# (kind, pattern, replacement) — ORDER MATTERS (see module docstring)
-PII_PATTERNS: Tuple[Tuple[str, str, str], ...] = (
-    ("url", r"https?://\S+", "<URL>"),
-    ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    ("phone", r"\+?\d[\d\-\s()]{6,}\d", "<PHONE>"),
+# the pattern tables, thresholds and SQL renderings are Spark-free
+# (functions/text_sql.py); re-exported here for the operator-layer API
+from purescript_ifrit_spark.functions.text_sql import (  # noqa: F401
+    C4_MIN_KEPT_LINES,
+    C4_MIN_WORDS_PER_LINE,
+    C4_TERMINAL_RX,
+    HTML_ENTITIES,
+    HTML_STAGES,
+    PII_PATTERNS,
+    c4_pass_sql,
+    html_text_spark_sql,
+    redact_sql,
 )
+
 
 # line-level boilerplate markers (case-insensitive, unanchored)
 BOILERPLATE_RX = (
@@ -47,15 +53,6 @@ def redact_expr(c: Column) -> Column:
     for _, rx, tok in PII_PATTERNS:
         c = F.regexp_replace(c, rx, tok)
     return c
-
-
-def redact_sql(x: str) -> str:
-    """Spark-SQL twin of `redact_expr` (nested regexp_replace, same
-    pattern order) — the dialect REDACT rendering."""
-    for _, rx, tok in PII_PATTERNS:
-        lit = rx.replace("\\", "\\\\")
-        x = f"regexp_replace({x}, '{lit}', '{tok}')"
-    return x
 
 
 def redact_pii(
@@ -118,38 +115,6 @@ def clean_text(
     return redact_pii(df, out_col)
 
 
-# HTML extraction stages, IN ORDER (each runs on the previous stage's
-# output — the oracle mirrors them stage by stage). Java∩RE2 subset:
-# (?is) flags and non-greedy repetition are in both; no lookaround.
-HTML_STAGES: Tuple[Tuple[str, str], ...] = (
-    # script/style/noscript blocks vanish wholesale (content is code)
-    (r"(?is)<script\b[^>]*>.*?</script>", " "),
-    (r"(?is)<style\b[^>]*>.*?</style>", " "),
-    (r"(?is)<noscript\b[^>]*>.*?</noscript>", " "),
-    # HTML comments
-    (r"(?s)<!--.*?-->", " "),
-    # block-level boundaries become newlines so visible-text line structure
-    # survives for the downstream line-level boilerplate filter
-    (r"(?i)<(br|/p|/div|/li|/h[1-6]|/tr|/table|/section|/article)\b[^>]*>", "\n"),
-    # every remaining tag is a word separator
-    (r"<[^>]+>", " "),
-)
-
-# common entities, applied after tag removal. &amp; decodes LAST: decoding
-# it earlier turns the escaped-escape '&amp;lt;' (which renders as the
-# literal text '&lt;') into '&lt;' and a later pass double-decodes it to
-# '<' — the single-pass contract is each source entity decodes exactly
-# once. (Tag re-introduction is not a concern: stripping already ran.)
-HTML_ENTITIES: Tuple[Tuple[str, str], ...] = (
-    ("&nbsp;", " "),
-    ("&quot;", '"'),
-    ("&#39;", "'"),
-    ("&lt;", "<"),
-    ("&gt;", ">"),
-    ("&amp;", "&"),
-)
-
-
 def html_text_expr(c: Column) -> Column:
     """Visible text of an HTML column as one codegen'd projection: drop
     script/style/comment blocks, turn block boundaries into newlines,
@@ -193,24 +158,6 @@ def html_text_sql(x: str) -> str:
         "COALESCE(array_to_string(list_filter(list_transform("
         f"string_split({out}, chr(10)), s -> trim(s)), s -> s <> ''), "
         "chr(10)), '')"
-    )
-
-
-def html_text_spark_sql(x: str) -> str:
-    """Spark SQL twin of `html_text_expr` (same stages, same order) — the
-    dialect HTMLTEXT rendering. Unlike DuckDB, Spark string literals
-    process backslash escapes, so every pattern and replacement goes
-    through the emitter's literal escaping."""
-    out = x
-    for rx, repl in HTML_STAGES:
-        out = f"regexp_replace({out}, {_sql_lit(rx)}, {_sql_lit(repl)})"
-    for ent, repl in HTML_ENTITIES:
-        out = f"replace({out}, {_sql_lit(ent)}, {_sql_lit(repl)})"
-    hspace, nl = _sql_lit(r"[ \t\r]+"), _sql_lit("\n")
-    out = f"regexp_replace({out}, {hspace}, ' ')"
-    return (
-        f"array_join(filter(transform(split({out}, {nl}), l -> trim(l)), "
-        f"l -> l <> ''), {nl})"
     )
 
 
@@ -551,9 +498,6 @@ def filter_blocked_domains(
 # 100 TB design: pure higher-order array functions over split lines —
 # zero shuffle, zero Python, one whole-stage-codegen'd pass over the
 # text bytes, exactly like the redaction chain above.
-C4_TERMINAL_RX = r'[.!?"]$'
-C4_MIN_WORDS_PER_LINE = 3
-C4_MIN_KEPT_LINES = 3
 
 
 def _c4_keep_line(x: Column, min_words: int) -> Column:
@@ -581,24 +525,6 @@ def c4_kept_expr(
     # every \r\n document.
     lines = F.transform(F.split(c, "\r\n|\r|\n"), lambda x: F.trim(x))
     return F.filter(lines, lambda x: _c4_keep_line(x, min_words))
-
-
-def c4_pass_sql(x: str) -> str:
-    """The C4 page-level pass/fail at the default thresholds as one Spark
-    SQL boolean — the dialect C4PASS rendering (same rules and the same
-    trim-first contract as c4_kept_expr / c4_line_filter)."""
-    kept = (
-        f"filter(transform(split({x}, '\\r\\n|\\r|\\n'), l -> trim(l)), "
-        "l -> l rlike '[.!?\"]$' "
-        f"AND size(filter(split(l, ' '), w -> w != '')) >= "
-        f"{C4_MIN_WORDS_PER_LINE} "
-        "AND NOT contains(lower(l), 'javascript'))"
-    )
-    return (
-        f"(size({kept}) >= {C4_MIN_KEPT_LINES} "
-        f"AND NOT contains(lower({x}), 'lorem ipsum') "
-        f"AND NOT contains({x}, '{{'))"
-    )
 
 
 def c4_line_filter(

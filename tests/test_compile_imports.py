@@ -38,15 +38,29 @@ compile_query(
     {"doc_id": "number", "text": "string"},
     "SELECT MIN(doc_id) AS keep GROUP BY FINGERPRINT(text)",
 )
-# rendering the extension functions whose SQL reads the stopword and
-# language-marker tables
-for sql in (
-    "SELECT doc_id, TOKEN_COUNT(text) AS n WHERE QUALITY(text) > 0.5",
-    "SELECT doc_id, LANG_ID(text) AS lang",
-):
-    compile_query({"doc_id": "number", "text": "string"}, sql).to_spark_sql(
-        "docs"
-    )
+# rendering every extension function, each over a field of a kind it
+# accepts (SESSIONIZE also reads user_id and event_id)
+from purescript_ifrit_spark.functions.dialect_ext import EXT_FUNCTIONS
+
+FIELD_OF_KIND = {"string": "text", "number": "doc_id", "array": "embedding"}
+EXT_SCHEMA = {
+    "doc_id": "number",
+    "text": "string",
+    "embedding": ["number"],
+    "user_id": "number",
+    "event_id": "number",
+}
+for name, fn in EXT_FUNCTIONS.items():
+    field = FIELD_OF_KIND[fn.arg_kinds[0]]
+    text = compile_query(
+        EXT_SCHEMA, f"SELECT doc_id, {name}({field}) AS out"
+    ).to_spark_sql("docs")
+    assert text.startswith("SELECT"), (name, text)
+    assert not [m for m in sys.modules if m.split(".")[0] == "pyspark"], name
+compile_query(
+    {"doc_id": "number", "text": "string"},
+    "SELECT doc_id WHERE QUALITY(text) > 0.5",
+).to_spark_sql("docs")
 print(sorted(m for m in sys.modules if m.split(".")[0] == "pyspark"))
 '''
 

@@ -215,11 +215,23 @@ def _fuzz_source(rng):
     return "".join(parts)
 
 
+def _stream(lex, source):
+    """The parser's view: the parallel kind / value lists."""
+    try:
+        toks = lex(source)
+    except LexError as e:
+        return ("LexError", str(e))
+    if isinstance(toks, L.Tokens):
+        return toks.kinds, [(type(v), v) for v in toks.values]
+    return [t.kind for t in toks], [(type(t.value), t.value) for t in toks]
+
+
 def test_tokenize_matches_rule_by_rule_reference_on_fuzz():
     rng = random.Random(20261019)
     for _ in range(100_000):
         src = _fuzz_source(rng)
         assert _outcome(L.tokenize, src) == _outcome(reference_tokenize, src), src
+        assert _stream(L.tokenize, src) == _stream(reference_tokenize, src), src
 
 
 def test_tokenize_matches_rule_by_rule_reference_on_edge_cases():
@@ -236,3 +248,86 @@ def test_function_names_match_the_extension_registry():
     reference = {"AVG", "COUNT", "MAX", "MIN", "SUM"}
     assert set(L._FUNCTIONS) == reference | set(EXT_FUNCTIONS)
     assert len(L._FUNCTIONS) == len(set(L._FUNCTIONS))
+
+
+# -- work counts: one scan per tokenize call, no Token on the success path ----
+
+_SCHEMA = {
+    "age": "number",
+    "class": "string",
+    "is_master": "boolean",
+    "bonus": ["number"],
+    "spells": [{"power": "number"}],
+}
+# the five shapes of the reference's test/benchmark.js, and a 252-token
+# program of the benchmark's large class (perfbench/programs.py, seed 1)
+_COUNTED_PROGRAMS = (
+    "SELECT age",
+    "SELECT class AS klass, COUNT(bonus)",
+    "SELECT AVG(age) GROUP BY class",
+    "SELECT is_master WHERE (age > 14 AND age < 20)",
+    "SELECT AVG(power) AS avg_pow FROM "
+    "(SELECT AVG(spells.power) AS power, age) WHERE age > 18 GROUP BY NULL",
+    "SELECT out3, SUM(spells), out3 AS out4, COUNT(out2), AVG(age) AS out5, "
+    "COUNT(out1), spells AS out6, COUNT(spells) AS out7, spells AS out8 FROM "
+    "(SELECT bonus, age, COUNT(spells), is_master AS out1, COUNT(bonus) AS out2, "
+    "COUNT(bonus) AS out3 WHERE (((((age < 36.5) AND (spells != NULL)) OR "
+    "((spells = NULL) AND (is_master = true))) OR ((NOT (class = \"wizard\")) OR "
+    "((is_master) AND (spells = NULL)))) OR ((age < 24.5) AND (class != NULL))) "
+    "AND (class = NULL) LIMIT 193) WHERE ((NOT (((bonus != NULL) AND (out1)) OR "
+    "(spells > 30))) AND (NOT (out2 != 10.5))) OR ((((3.5 > out2) OR "
+    "(bonus != NULL)) OR ((age > 81.5) AND (out3 > 34))) OR (((NOT out1) OR "
+    "(28.5 < out3)) OR (out3 = 68.5))) GROUP BY out1 ORDER BY out3 DESC, "
+    "spells DESC LIMIT 471 OFFSET 20",
+)
+
+
+class _CountingScan:
+    """Stands in for lexer._SCAN and counts every pass over a source."""
+
+    def __init__(self, rx):
+        self.rx = rx
+        self.scans = 0
+
+    def findall(self, source):
+        self.scans += 1
+        return self.rx.findall(source)
+
+    def finditer(self, source):
+        self.scans += 1
+        return self.rx.finditer(source)
+
+
+def test_compile_scans_once_and_builds_no_token(monkeypatch):
+    from purescript_ifrit_spark import compile_query
+
+    assert len(L.tokenize(_COUNTED_PROGRAMS[-1])) == 252
+    built = []
+    token_init = L.Token.__init__
+
+    def counting_init(self, *args, **kwargs):
+        built.append(args)
+        token_init(self, *args, **kwargs)
+
+    scan = _CountingScan(L._SCAN)
+    tokenize_calls = []
+    tokenize = L.tokenize
+
+    def counting_tokenize(source):
+        tokenize_calls.append(source)
+        return tokenize(source)
+
+    monkeypatch.setattr(L.Token, "__init__", counting_init)
+    monkeypatch.setattr(L, "_SCAN", scan)
+    monkeypatch.setattr(L, "tokenize", counting_tokenize)
+    for sql in _COUNTED_PROGRAMS:
+        compile_query(_SCHEMA, sql)
+    assert len(tokenize_calls) == len(_COUNTED_PROGRAMS)
+    assert scan.scans == len(tokenize_calls)
+    assert built == []
+    # a position is computed on demand, by one more scan
+    toks = tokenize(_COUNTED_PROGRAMS[0])
+    assert [t.pos for t in toks] == [0, 7, 10]
+    assert [t.pos for t in toks] == [0, 7, 10]
+    assert scan.scans == len(_COUNTED_PROGRAMS) + 2
+    assert len(built) == 3

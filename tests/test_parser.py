@@ -143,3 +143,53 @@ def test_error_clause_out_of_order():
 def test_error_empty():
     with pytest.raises(ParseError):
         parse_sql("")
+
+
+# -- error positions: each parser error site, after a string literal, after
+# GROUP\tBY, and after an NBSP or a tab. The parser asks the token stream
+# for a position only on these paths, so each golden also checks it against
+# the rule-by-rule reference lexer's position for the offending token.
+
+_POSITION_GOLDENS = [
+    # (source, index of the offending token, expected message)
+    ('SELECT a WHERE b = "x.y" c', 6, "unexpected token: c at position 25"),
+    ("SELECT COUNT(a) GROUP\tBY 14", 6, "unexpected token: 14 at position 25"),
+    ("SELECT a\xa0b", 2, "unexpected token: b at position 9"),
+    (
+        'SELECT a WHERE (b = "x" c', 7,
+        "unbalanced parenthesis expression: expected `)` but got: c at position 24",
+    ),
+    (
+        "SELECT COUNT(a) GROUP\tBY FINGERPRINT(t u", 9,
+        "unbalanced parenthesis expression: expected `)` but got: u at position 39",
+    ),
+    (
+        "SELECT (a\tb", 3,
+        "unbalanced parenthesis expression: expected `)` but got: b at position 10",
+    ),
+    (
+        'SELECT a WHERE b = "x" AND QUALITY(14) > 1', 9,
+        "QUALITY has an invalid argument at position 35",
+    ),
+    (
+        "SELECT COUNT(a) GROUP\tBY FINGERPRINT(t, u)", 9,
+        "FINGERPRINT has an invalid argument at position 38",
+    ),
+    ('SELECT\xa0AVG(\t"x")', 3, "AVG has an invalid argument at position 12"),
+    ('SELECT a WHERE b = "x" LIMIT 1.5', 7, "LIMIT must be an integer at position 29"),
+    (
+        'SELECT COUNT(a) GROUP\tBY b OFFSET "z"', 8,
+        "OFFSET must be an integer at position 34",
+    ),
+    ("SELECT a LIMIT\xa0x", 3, "LIMIT must be an integer at position 15"),
+]
+
+
+@pytest.mark.parametrize("src, bad, message", _POSITION_GOLDENS)
+def test_error_position_goldens(src, bad, message):
+    from tests.test_lexer import reference_tokenize
+
+    with pytest.raises(ParseError) as e:
+        parse_sql(src)
+    assert str(e.value) == message
+    assert message.endswith(f" at position {reference_tokenize(src)[bad].pos}")
