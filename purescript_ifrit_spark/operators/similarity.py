@@ -19,9 +19,14 @@ Four tiers (SURVEY.md §2.7 extension; no reference counterpart):
    the rerank working set is bytes, not vectors. Compose with IVF: prune
    cells, ADC-rank the survivors, exact-check only the final handful.
 
-The pairwise/batched kernel uses an Arrow-vectorized Pandas UDF (numpy
-matmul per batch) — the documented fast path when built-ins can't express
-a matrix product efficiently.
+Each tier has a single-query form (a JVM-only TakeOrdered plan) and a
+batch form. All six batch forms (cosine, LSH, IVF, PQ, IVF-PQ residual,
+exact L2) run ONE kernel, `_topk_per_query`: an Arrow mapInPandas of
+`_make_topk_worker`'s tie-exact partial top-k, then `_rank_per_query`'s
+per-query window. A tier only says how it scores a block of rows against
+the queries that probe it (numpy matmul or LUT gathers per batch — the
+documented fast path when built-ins can't express a matrix product
+efficiently); the IVF tiers share one probe rule, `_probe_cells_batch`.
 """
 
 from __future__ import annotations
@@ -84,15 +89,195 @@ def cosine_topk(
     )
 
 
-def _check_batch_ids(qm: "np.ndarray", qids: "np.ndarray") -> None:
-    """Every batch ANN entry point takes parallel (queries, query_ids);
-    a shorter id list used to raise IndexError inside executors at
-    qids[qi], and a longer one silently ignored the extra ids (r12,
-    ADVICE r11). Fail fast on the driver instead."""
+def _query_batch(
+    queries: "np.ndarray", query_ids: Sequence[int]
+) -> "tuple[np.ndarray, np.ndarray]":
+    """(Q, dim) float64 query matrix and (Q,) int64 ids for a batch ANN
+    entry point, checked on the driver: a non-2-D `queries` (e.g. `[]`)
+    would fail as a raw numpy AxisError/IndexError, a shorter id list
+    as an IndexError inside executors at qids[qi], and a longer one
+    would be silently truncated (r12, ADVICE r11) — each raises a named
+    ValueError here instead. A (0, dim) batch is valid and yields an
+    empty frame."""
+    qm = np.asarray(queries, dtype=np.float64)
+    if qm.ndim != 2:
+        raise ValueError(
+            "queries must be a 2-D (n_queries, dim) matrix "
+            f"(got shape {qm.shape})"
+        )
+    qids = np.asarray(list(query_ids), dtype=np.int64)
     if len(qids) != len(qm):
         raise ValueError(
             f"query_ids length {len(qids)} != queries length {len(qm)}"
         )
+    return qm, qids
+
+
+def _make_topk_worker(
+    k: int, qids: "np.ndarray", id_col: str, score: str, blocks
+):
+    """The one worker-local partial top-k every batch ANN tier runs
+    (r10 contract; a by-value factory like multimodal's
+    `_make_ppm_decoder`: the returned closure calls nothing at module
+    level, so executors never import the package).
+
+    `blocks(pdf)` yields `(ids, qidx, lower)` per Arrow batch: a block
+    of rows, the indices into `qids` of the queries that score it, and
+    the (rows, queries) matrix of lower-is-better scores (−sim for
+    cosine, the distance for L2/ADC). Each block reduces to its LOCAL
+    per-query top-k before anything leaves Python: top-k of a union is
+    the top-k of per-part top-ks, so the global window over the
+    partials returns exactly the answer over every scored (row, query)
+    pair. Ties are exact — each block ranks by the same (score, id asc)
+    total order the final window uses, including every row tied with
+    the k-th score, so duplicate vectors or codes cannot flip the
+    returned set. Emits (query_id, id, score) with score = −lower for
+    `score="sim"`, else lower."""
+    sign = -1.0 if score == "sim" else 1.0
+
+    def partial_topk(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            out_q, out_i, out_s = [], [], []
+            for ids, qidx, lower in blocks(pdf):
+                n = min(k, len(ids))
+                # k-th best score per query in one vectorized pass;
+                # candidates = everything at or above it (ties included)
+                kth = np.partition(lower, n - 1, axis=0)[n - 1]
+                for jj, qi in enumerate(qidx):
+                    cand = np.nonzero(lower[:, jj] <= kth[jj])[0]
+                    order = cand[np.lexsort((ids[cand], lower[cand, jj]))][:n]
+                    out_q.append(np.full(n, qids[qi]))
+                    out_i.append(ids[order])
+                    out_s.append(sign * lower[order, jj])
+            if out_q:
+                yield pd.DataFrame(
+                    {
+                        "query_id": np.concatenate(out_q),
+                        id_col: np.concatenate(out_i),
+                        score: np.concatenate(out_s),
+                    }
+                )
+
+    return partial_topk
+
+
+def _rank_per_query(
+    frame: DataFrame, id_col: str, score: str, k: int
+) -> DataFrame:
+    """Top-k rows per query_id by (sim desc | dist asc, id asc) — the
+    one ranking window of the batch ANN family (a WindowGroupLimit
+    window in the physical plan)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc() if score == "sim" else F.col(score).asc(),
+        F.col(id_col).asc(),
+    )
+    return (
+        frame.withColumn("_rank", F.row_number().over(w))
+        .filter(F.col("_rank") <= int(k))
+        .select("query_id", F.col(id_col), score)
+    )
+
+
+def _topk_per_query(
+    src: DataFrame, id_col: str, score: str, k: int, qids: "np.ndarray", blocks
+) -> DataFrame:
+    """The batch ANN kernel: ONE Arrow mapInPandas of `_make_topk_worker`
+    over `src`, then the per-query window. The one exchange carries the
+    partials only (k rows per query per block)."""
+    out_schema = (
+        f"query_id long, {id_col} {dict(src.dtypes)[id_col]}, {score} double"
+    )
+    partial = src.mapInPandas(
+        _make_topk_worker(int(k), qids, id_col, score, blocks), out_schema
+    )
+    return _rank_per_query(partial, id_col, score, k)
+
+
+def _queries_by_group(groups) -> dict:
+    """{group: indices of the queries probing it} from per-query group
+    lists (probed cells or buckets) — shipped in the worker closure."""
+    out: dict = {}
+    for qi, gs in enumerate(groups):
+        for g in gs:
+            out.setdefault(int(g), []).append(qi)
+    return {g: np.asarray(v) for g, v in out.items()}
+
+
+def _make_cosine_blocks(
+    id_col: str, vec_col: str, qm: "np.ndarray", group_to_q: dict,
+    key_col: str, row_keys,
+):
+    """Block source for the pruned cosine tiers (LSH buckets, IVF
+    cells): each row's group is the stored `key_col` when the batch
+    carries it, else `row_keys(rows)`; rows in unprobed groups drop,
+    and every remaining group block matmuls against only ITS probing
+    queries — each (row, query) pair with the row in a probed group of
+    that query is scored exactly once."""
+    qnorm = np.linalg.norm(qm, axis=1)
+    qnorm[qnorm == 0] = 1.0
+
+    def blocks(pdf):
+        import numpy as np
+
+        m_all = np.stack(pdf[vec_col].to_numpy())
+        ids_all = pdf[id_col].to_numpy()
+        if key_col in pdf.columns:
+            keys = pdf[key_col].to_numpy()
+        else:
+            keys = row_keys(m_all)
+        norms = np.linalg.norm(m_all, axis=1)
+        norms[norms == 0] = 1.0
+        for g in np.unique(keys):
+            qs = group_to_q.get(int(g))
+            if qs is None:
+                continue
+            sel = keys == g
+            yield ids_all[sel], qs, -(
+                (m_all[sel] @ qm[qs].T)
+                / norms[sel][:, None]
+                / qnorm[qs][None, :]
+            )
+
+    return blocks
+
+
+def _probe_cells_batch(
+    qm: "np.ndarray", cents: "np.ndarray", nprobe: int
+) -> "np.ndarray":
+    """Per-query probed cells: the (Q, nprobe) STABLE argsort of squared
+    centroid distances — equal distances probe the lowest cell first,
+    the tie rule of row assignment (JVM array_position, Arrow argmin).
+    ONE implementation for every IVF probe site (ivf_topk,
+    ivf_topk_batch, ivf_pq_topk, the residual tiers): with duplicate
+    centroids (ivf_centroids emits them when its sample holds fewer
+    distinct vectors than nlist) an unstable sort can probe the EMPTY
+    copy cell and return 0 rows; and ivf_pq_rerank_batch's rerank-side
+    cell filter is only a semantic no-op while it selects EXACTLY the
+    cells its shortlist stage probes (r14 review fix)."""
+    d2 = ((cents[None, :, :] - qm[:, None, :]) ** 2).sum(-1)  # (Q, nlist)
+    return np.argsort(d2, axis=1, kind="stable")[
+        :, : min(int(nprobe), len(cents))
+    ]
+
+
+def _sample_queries(
+    qm: "np.ndarray", qids: "np.ndarray", n_sample: int, seed: int
+) -> "tuple[np.ndarray, list]":
+    """The seeded recall sample: min(n_sample, Q) queries, in query
+    order. ONE rule for ann_recall_estimate and ann_advise — the
+    precomputed `truth=` contract between them is exact-sampling
+    identity."""
+    rng = np.random.RandomState(seed)
+    take = min(int(n_sample), len(qids))
+    idx = np.sort(rng.choice(len(qids), size=take, replace=False))
+    return qm[idx], [int(q) for q in qids[idx]]
 
 
 def cosine_topk_batch(
@@ -108,71 +293,32 @@ def cosine_topk_batch(
 
     The query matrix is broadcast (numpy, via closure) and each Arrow
     batch does ONE matmul, then reduces to its LOCAL per-query top-k
-    INSIDE the worker before anything leaves Python (r10, measured at
-    100x: the previous shape posexploded the full rows x queries sim
-    matrix — 200M rows for 200k vectors x 1k queries — through
-    Arrow/serde just to discard all but k per query in the window; the
-    partial top-k emits batches x queries x k rows instead, ~1000x
-    fewer). top-k of a union is the top-k of per-part top-ks, so the
-    global window over the partials returns exactly the brute-force
-    answer; ties are handled exactly — each batch ranks by the same
-    (sim desc, id asc) total order the final window uses, including
-    every row tied with the k-th similarity, so duplicate embeddings
-    cannot flip the returned set. The one exchange carries the partials
-    only (k rows per query per batch) and the final per-query top-k is
-    a WindowGroupLimit window."""
-    from pyspark.sql import Window
-
+    INSIDE the worker (`_make_topk_worker`) before anything leaves
+    Python (r10, measured at 100x: the previous shape posexploded the
+    full rows x queries sim matrix — 200M rows for 200k vectors x 1k
+    queries — through Arrow/serde just to discard all but k per query
+    in the window; the partial top-k emits batches x queries x k rows
+    instead, ~1000x fewer). The one exchange carries the partials only
+    and the final per-query top-k is a WindowGroupLimit window."""
     if k <= 0:
         raise ValueError(f"k must be positive (got {k})")
-    qm = np.asarray(queries, dtype=np.float64)  # (Q, dim)
+    qm, qids = _query_batch(queries, query_ids)  # (Q, dim)
     qnorm = np.linalg.norm(qm, axis=1)
     qnorm[qnorm == 0] = 1.0
-    qids = np.asarray(list(query_ids), dtype=np.int64)
-    _check_batch_ids(qm, qids)
-    kk = int(k)
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"query_id long, {id_col} {id_type}, sim double"
+    allq = np.arange(len(qm))
 
-    def partial_topk(batches):
+    def blocks(pdf):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.stack(pdf[vec_col].to_numpy())  # (B, dim)
-            norms = np.linalg.norm(m, axis=1)
-            norms[norms == 0] = 1.0
-            neg = -((m @ qm.T) / norms[:, None] / qnorm[None, :])  # (B, Q)
-            ids = pdf[id_col].to_numpy()
-            n = min(kk, len(pdf))
-            # k-th best similarity per query in one vectorized pass;
-            # candidates = everything at or above it (ties included)
-            kth = np.partition(neg, n - 1, axis=0)[n - 1]  # (Q,)
-            out_q, out_i, out_s = [], [], []
-            for j in range(neg.shape[1]):
-                cand = np.nonzero(neg[:, j] <= kth[j])[0]
-                order = cand[np.lexsort((ids[cand], neg[cand, j]))][:n]
-                out_q.append(np.full(n, qids[j]))
-                out_i.append(ids[order])
-                out_s.append(-neg[order, j])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_i),
-                    "sim": np.concatenate(out_s),
-                }
-            )
+        m = np.stack(pdf[vec_col].to_numpy())  # (B, dim)
+        norms = np.linalg.norm(m, axis=1)
+        norms[norms == 0] = 1.0
+        yield pdf[id_col].to_numpy(), allq, -(
+            (m @ qm.T) / norms[:, None] / qnorm[None, :]
+        )
 
-    partial = df.select(id_col, vec_col).mapInPandas(partial_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        partial.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= kk)
-        .select("query_id", F.col(id_col), "sim")
+    return _topk_per_query(
+        df.select(id_col, vec_col), id_col, "sim", k, qids, blocks
     )
 
 
@@ -551,9 +697,10 @@ def lsh_topk_batch(
     per-plane fold is n_planes·dim interpreted lambda ops per row —
     the measured 100× bottleneck shape), drops rows in unprobed
     buckets, matmuls every remaining bucket block against only ITS
-    probing queries, and reduces to the worker-local tie-exact
-    (sim desc, id asc) per-query top-k. One query-keyed exchange of
-    k·batches rows per query, WindowGroupLimit window, no explode.
+    probing queries (`_make_cosine_blocks`), and reduces to the shared
+    tie-exact partial top-k (`_make_topk_worker`). One query-keyed
+    exchange of k·batches rows per query, WindowGroupLimit window, no
+    explode.
 
     Returns the exact cosine top-k OVER THE PROBED BUCKETS (the LSH
     approximation is the bucket choice, never the rerank). Boundary
@@ -574,93 +721,37 @@ def lsh_topk_batch(
         raise ValueError(
             f"probe_hamming must be >= 0 (got {probe_hamming})"
         )
-    from pyspark.sql import Window
-
     pm = np.asarray(planes, dtype=np.float64)  # (P, dim)
     n_planes = len(pm)
-    qm = np.asarray(queries, dtype=np.float64)  # (Q, dim)
-    qids = np.asarray(list(query_ids), dtype=np.int64)
-    _check_batch_ids(qm, qids)
+    qm, qids = _query_batch(queries, query_ids)  # (Q, dim)
     qdots = qm @ pm.T  # (Q, P)
     weights = 1 << np.arange(n_planes, dtype=np.int64)
     qsig = ((qdots >= 0).astype(np.int64) @ weights)  # (Q,)
-    flip_masks = [0]
-    for h in range(1, probe_hamming + 1):
-        for bits in combinations(range(n_planes), h):
-            m = 0
-            for b in bits:
-                m |= 1 << b
-            flip_masks.append(m)
-    bucket_to_q: dict = {}
-    for qi in range(len(qm)):
-        for m in flip_masks:
-            bucket_to_q.setdefault(int(qsig[qi]) ^ m, []).append(qi)
-    bucket_to_q = {b: np.asarray(v) for b, v in bucket_to_q.items()}
-    qnorm = np.linalg.norm(qm, axis=1)
-    qnorm[qnorm == 0] = 1.0
-    kk = int(k)
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"query_id long, {id_col} {id_type}, sim double"
-    probed = [int(b) for b in bucket_to_q]
+    flip_masks = [  # lsh_topk's probe order: distance 0, 1, ... bits
+        sum(1 << b for b in bits)
+        for h in range(probe_hamming + 1)
+        for bits in combinations(range(n_planes), h)
+    ]
+    bucket_to_q = _queries_by_group(
+        [[int(s) ^ m for m in flip_masks] for s in qsig]
+    )
 
     if bucket_col is not None:
-        src = df.filter(F.col(bucket_col).isin(probed)).select(
+        src = df.filter(F.col(bucket_col).isin(list(bucket_to_q))).select(
             id_col, vec_col, F.col(bucket_col).cast("long").alias("_bkt")
         )
     else:
         src = df.select(id_col, vec_col)
 
-    def partial_topk(batches):
+    def signatures(m):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m_all = np.stack(pdf[vec_col].to_numpy())
-            ids_all = pdf[id_col].to_numpy()
-            if "_bkt" in pdf.columns:
-                sigs = pdf["_bkt"].to_numpy()
-            else:
-                sigs = ((m_all @ pm.T) >= 0).astype(np.int64) @ weights
-            norms = np.linalg.norm(m_all, axis=1)
-            norms[norms == 0] = 1.0
-            out_q, out_i, out_s = [], [], []
-            for b in np.unique(sigs):
-                qs = bucket_to_q.get(int(b))
-                if qs is None:
-                    continue
-                sel = sigs == b
-                m, ids = m_all[sel], ids_all[sel]
-                neg = -(
-                    (m @ qm[qs].T) / norms[sel][:, None] / qnorm[qs][None, :]
-                )
-                n = min(kk, len(ids))
-                kth = np.partition(neg, n - 1, axis=0)[n - 1]
-                for jj, qi in enumerate(qs):
-                    cand = np.nonzero(neg[:, jj] <= kth[jj])[0]
-                    order = cand[np.lexsort((ids[cand], neg[cand, jj]))][:n]
-                    out_q.append(np.full(n, qids[qi]))
-                    out_i.append(ids[order])
-                    out_s.append(-neg[order, jj])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        id_col: np.concatenate(out_i),
-                        "sim": np.concatenate(out_s),
-                    }
-                )
+        return ((m @ pm.T) >= 0).astype(np.int64) @ weights
 
-    partial = src.mapInPandas(partial_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
+    blocks = _make_cosine_blocks(
+        id_col, vec_col, qm, bucket_to_q, "_bkt", signatures
     )
-    return (
-        partial.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= kk)
-        .select("query_id", F.col(id_col), "sim")
-    )
+    return _topk_per_query(src, id_col, "sim", k, qids, blocks)
 
 
 def label_centroids(
@@ -891,8 +982,8 @@ def ivf_topk(
 ) -> DataFrame:
     """Approximate top-k probing the `nprobe` nearest IVF cells."""
     q = np.asarray(query, dtype=np.float64)
-    order = np.argsort(((centroids - q[None, :]) ** 2).sum(1))
-    cells = [int(c) for c in order[:nprobe]]
+    cents = np.asarray(centroids, dtype=np.float64)
+    cells = [int(c) for c in _probe_cells_batch(q[None, :], cents, nprobe)[0]]
     assigned = with_ivf_assignment(df, vec_col, centroids)
     cand = assigned.filter(F.col("ivf_cell").isin(cells))
     return cosine_topk(cand, id_col, vec_col, query, k)
@@ -916,25 +1007,23 @@ def ivf_topk_batch(
     query only needs its `nprobe` cells.
 
     Driver-side (metadata-sized): each query's nprobe nearest centroids
-    (the same argsort-of-L2 rule as ivf_topk, so a 1-query batch probes
-    the same cells and returns its exact ranking, test-pinned) become a
-    cell → probing-queries map shipped in the closure. Spark-side: ONE
-    Arrow mapInPandas assigns each batch's rows to cells with a
-    vectorized numpy argmin over exact (x-c)^2 sums — the same formula
-    as with_ivf_assignment, so near-equidistant rows land in the same
-    cell as the JVM path (NOT the unrolled JVM expression — at
+    (`_probe_cells_batch`, the same rule as ivf_topk, so a 1-query batch
+    probes the same cells and returns its exact ranking, test-pinned)
+    become a cell → probing-queries map shipped in the closure.
+    Spark-side: ONE Arrow mapInPandas assigns each batch's rows to cells
+    with a vectorized numpy argmin over exact (x-c)^2 sums — the same
+    formula as with_ivf_assignment, so near-equidistant rows land in the
+    same cell as the JVM path (NOT the unrolled JVM expression — at
     nlist·dim interpreted lambda ops per row that assignment dominated
     the whole query at 100×: 101 s vs 6 s measured, SCALE.md; the
     memory rule that >10 ops/element belongs in Arrow), drops rows in
     unprobed cells, then matmuls every remaining cell block against
-    only ITS probing queries' submatrix, reducing to the worker-local
-    per-query top-k with the same tie-exact (sim desc, id asc)
-    reduction as cosine_topk_batch — each (row, query) pair with the
-    row in a probed cell of that query is scored exactly once, so the
-    union of partials contains the exact top-k OVER THE PROBED CELLS
-    (the IVF approximation is the cell choice, never the reduction).
-    One query-keyed exchange of k·batches rows per query,
-    WindowGroupLimit window, no explode.
+    only ITS probing queries' submatrix (`_make_cosine_blocks`),
+    reducing with the shared tie-exact partial top-k
+    (`_make_topk_worker`) — so the union of partials contains the exact
+    top-k OVER THE PROBED CELLS (the IVF approximation is the cell
+    choice, never the reduction). One query-keyed exchange of
+    k·batches rows per query, WindowGroupLimit window, no explode.
 
     `cell_col` is the at-rest fast path: persist the assignment once
     (`with_ivf_assignment` at write time) and partition/bucket the
@@ -958,96 +1047,37 @@ def ivf_topk_batch(
         raise ValueError(f"k must be positive (got {k})")
     if nprobe <= 0:
         raise ValueError(f"nprobe must be positive (got {nprobe})")
-    from pyspark.sql import Window
-
-    qm = np.asarray(queries, dtype=np.float64)  # (Q, dim)
-    qids = np.asarray(list(query_ids), dtype=np.int64)
-    _check_batch_ids(qm, qids)
+    qm, qids = _query_batch(queries, query_ids)  # (Q, dim)
     cents = np.asarray(centroids, dtype=np.float64)
-    d2 = ((cents[None, :, :] - qm[:, None, :]) ** 2).sum(-1)  # (Q, nlist)
-    probe = np.argsort(d2, axis=1)[:, : min(nprobe, len(cents))]
-    cell_to_q: dict = {}
-    for qi in range(len(qm)):
-        for c in probe[qi]:
-            cell_to_q.setdefault(int(c), []).append(qi)
-    cell_to_q = {c: np.asarray(v) for c, v in cell_to_q.items()}
-    qnorm = np.linalg.norm(qm, axis=1)
-    qnorm[qnorm == 0] = 1.0
-    kk = int(k)
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"query_id long, {id_col} {id_type}, sim double"
-    probed_cells = [int(c) for c in cell_to_q]
+    cell_to_q = _queries_by_group(_probe_cells_batch(qm, cents, nprobe))
 
     if cell_col is not None:
-        src = df.filter(F.col(cell_col).isin(probed_cells)).select(
+        src = df.filter(F.col(cell_col).isin(list(cell_to_q))).select(
             id_col, vec_col, F.col(cell_col).cast("int").alias("_cell")
         )
     else:
         src = df.select(id_col, vec_col)
 
-    def partial_topk(batches):
+    def nearest_cells(m):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m_all = np.stack(pdf[vec_col].to_numpy())
-            ids_all = pdf[id_col].to_numpy()
-            if "_cell" in pdf.columns:
-                cells = pdf["_cell"].to_numpy()
-            else:
-                # full (x - c)^2 sums, NOT the |c|^2 - 2 x.c expansion:
-                # algebraically equal but numerically different, and the
-                # expansion can flip near-equidistant rows into a
-                # different cell than with_ivf_assignment's JVM formula
-                # (r10 ADVICE) — breaking the docstring's 1-query-batch
-                # ≡ ivf_topk claim. One vectorized pass per centroid
-                # (nlist is small by construction) keeps memory at
-                # rows × dim; first-occurrence argmin matches
-                # array_position's tie rule.
-                d2 = np.empty((len(m_all), len(cents)), dtype=np.float64)
-                for j in range(len(cents)):
-                    d2[:, j] = ((m_all - cents[j]) ** 2).sum(1)
-                cells = np.argmin(d2, axis=1)
-            norms = np.linalg.norm(m_all, axis=1)
-            norms[norms == 0] = 1.0
-            out_q, out_i, out_s = [], [], []
-            for c in np.unique(cells):
-                qs = cell_to_q.get(int(c))
-                if qs is None:
-                    continue
-                sel = cells == c
-                m, ids = m_all[sel], ids_all[sel]
-                neg = -(
-                    (m @ qm[qs].T) / norms[sel][:, None] / qnorm[qs][None, :]
-                )
-                n = min(kk, len(ids))
-                kth = np.partition(neg, n - 1, axis=0)[n - 1]
-                for jj, qi in enumerate(qs):
-                    cand = np.nonzero(neg[:, jj] <= kth[jj])[0]
-                    order = cand[np.lexsort((ids[cand], neg[cand, jj]))][:n]
-                    out_q.append(np.full(n, qids[qi]))
-                    out_i.append(ids[order])
-                    out_s.append(-neg[order, jj])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        id_col: np.concatenate(out_i),
-                        "sim": np.concatenate(out_s),
-                    }
-                )
+        # full (x - c)^2 sums, NOT the |c|^2 - 2 x.c expansion:
+        # algebraically equal but numerically different, and the
+        # expansion can flip near-equidistant rows into a different
+        # cell than with_ivf_assignment's JVM formula (r10 ADVICE) —
+        # breaking the docstring's 1-query-batch ≡ ivf_topk claim. One
+        # vectorized pass per centroid (nlist is small by construction)
+        # keeps memory at rows × dim; first-occurrence argmin matches
+        # array_position's tie rule.
+        d2 = np.empty((len(m), len(cents)), dtype=np.float64)
+        for j in range(len(cents)):
+            d2[:, j] = ((m - cents[j]) ** 2).sum(1)
+        return np.argmin(d2, axis=1)
 
-    partial = src.mapInPandas(partial_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
+    blocks = _make_cosine_blocks(
+        id_col, vec_col, qm, cell_to_q, "_cell", nearest_cells
     )
-    return (
-        partial.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= kk)
-        .select("query_id", F.col(id_col), "sim")
-    )
+    return _topk_per_query(src, id_col, "sim", k, qids, blocks)
 
 
 def ann_recall_estimate(
@@ -1103,18 +1133,14 @@ def ann_recall_estimate(
         raise ValueError(f"n_sample must be positive (got {n_sample})")
     if metric not in ("cosine", "l2"):
         raise ValueError(f"unknown metric {metric!r} (cosine | l2)")
-    qm = np.asarray(queries, dtype=np.float64)
-    qids = np.asarray(list(query_ids), dtype=np.int64)
-    _check_batch_ids(qm, qids)
-    rng = np.random.RandomState(seed)
-    take = min(int(n_sample), len(qids))
-    idx = np.sort(rng.choice(len(qids), size=take, replace=False))
-    sample_ids = [int(q) for q in qids[idx]]
+    sample_q, sample_ids = _sample_queries(
+        *_query_batch(queries, query_ids), n_sample, seed
+    )
     if truth is None:
         truth_kernel = (
             cosine_topk_batch if metric == "cosine" else l2_topk_batch
         )
-        truth = truth_kernel(df, id_col, vec_col, qm[idx], sample_ids, k=k)
+        truth = truth_kernel(df, id_col, vec_col, sample_q, sample_ids, k=k)
     else:
         # r14 review fix: the precomputed-truth contract is exact-
         # sampling identity; a caller mismatch (different seed or
@@ -1141,22 +1167,14 @@ def ann_recall_estimate(
     # occupy top-k slots, silently UNDERestimating recall for exactly
     # the union-of-answers input the limit exists for. Frames already
     # at k distinct ids pass through unchanged.
-    from pyspark.sql import Window
-
     score = "sim" if metric == "cosine" else "dist"
-    aw = Window.partitionBy("query_id").orderBy(
-        F.col(score).desc() if metric == "cosine" else F.col(score).asc(),
-        F.col(id_col).asc(),
-    )
     best = F.max(score) if metric == "cosine" else F.min(score)
-    approx_ids = (
+    approx_ids = _rank_per_query(
         approx.filter(F.col("query_id").isin(sample_ids))
         .groupBy("query_id", id_col)
-        .agg(best.alias(score))
-        .withColumn("_arank", F.row_number().over(aw))
-        .filter(F.col("_arank") <= k)
-        .select("query_id", id_col)
-    )
+        .agg(best.alias(score)),
+        id_col, score, k,
+    ).select("query_id", id_col)
     hit = F.sum(
         F.when(F.col("_hit").isNotNull(), F.lit(1)).otherwise(F.lit(0))
     ).cast("long")
@@ -1610,18 +1628,17 @@ def ivf_pq_topk(
     `with_ivf_assignment`, ideally persisted via `write_ivf_partitioned`
     so the cell filter compiles to PartitionFilters and the scan reads
     only the probed cells' files) and `code_col` (from `pq_encode`).
-    The probe set is a driver-side argsort over nlist centroid
-    distances (stable — equal distances probe the lowest cell index
-    first); the ADC scan then touches (id, code) for the probed cells
-    only. At 100 TB: partition-pruned file reads × 32-fold-compressed
-    rerank rows, with `pq_topk`'s exact-recheck guidance on the final
-    k·c candidates."""
+    The probe set is `_probe_cells_batch`'s driver-side stable argsort
+    over nlist centroid distances (equal distances probe the lowest
+    cell index first); the ADC scan then touches (id, code) for the
+    probed cells only. At 100 TB: partition-pruned file reads ×
+    32-fold-compressed rerank rows, with `pq_topk`'s exact-recheck
+    guidance on the final k·c candidates."""
     cents = np.asarray(centroids, dtype=np.float64)
     q = np.asarray(list(query), dtype=np.float64)
     if nprobe < 1:
         raise ValueError(f"nprobe must be positive (got {nprobe})")
-    d2 = ((cents - q) ** 2).sum(1)
-    probe = np.argsort(d2, kind="stable")[: min(nprobe, len(cents))]
+    probe = _probe_cells_batch(q[None, :], cents, nprobe)[0]
     pruned = df.filter(F.col(cell_col).isin([int(c) for c in probe]))
     return pq_topk(pruned, id_col, code_col, query, codebooks, k)
 
@@ -1642,74 +1659,39 @@ def pq_topk_batch(
 
     Driver-side: the (Q, m, k) lookup-table tensor — query metadata,
     not data. Each Arrow batch gathers its (B, m) code matrix against
-    the LUT (m numpy gathers, no matmul) and reduces to its LOCAL
-    per-query top-k inside the worker — the cosine_topk_batch partial
-    top-k contract, ascending: every row tied with the k-th distance is
-    kept, ranked by the same (dist asc, id asc) total order the final
-    WindowGroupLimit uses, so duplicate codes cannot flip the returned
-    set. The one exchange carries k rows per query per batch."""
-    from pyspark.sql import Window
-
+    the LUT (m numpy gathers, no matmul) and reduces with the shared
+    tie-exact partial top-k (`_make_topk_worker`, dist asc, id asc), so
+    duplicate codes cannot flip the returned set. The one exchange
+    carries k rows per query per batch."""
     if k <= 0:
         raise ValueError(f"k must be positive (got {k})")
     books = np.asarray(codebooks, dtype=np.float64)
     m, nk, sub = books.shape
-    qm = np.asarray(queries, dtype=np.float64)  # (Q, dim)
-    qids = np.asarray(list(query_ids), dtype=np.int64)
-    _check_batch_ids(qm, qids)
+    qm, qids = _query_batch(queries, query_ids)  # (Q, dim)
     if qm.shape[1] != m * sub:
         raise ValueError(
             f"query dim {qm.shape[1]} != codebook dim {m * sub} "
             f"(m={m}, sub={sub})"
         )
-    luts = np.stack(
-        [((books - q.reshape(m, 1, sub)) ** 2).sum(-1) for q in qm]
-    )  # (Q, m, k)
-    kk = int(k)
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"query_id long, {id_col} {id_type}, dist double"
+    luts = (
+        (books[None, :, :, :] - qm.reshape(len(qm), m, 1, sub)) ** 2
+    ).sum(-1)  # (Q, m, k)
+    allq = np.arange(len(qm))
 
-    def partial_topk(batches):
+    def blocks(pdf):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack(pdf[code_col].to_numpy()).astype(np.int64)
-            # accumulate in (Q, B) layout — luts[:, s, codes[:, s]] is a
-            # contiguous row gather; one transpose at the end instead of
-            # m transposed copies
-            dq = np.zeros((luts.shape[0], len(pdf)), dtype=np.float64)
-            for s in range(m):
-                dq += luts[:, s, codes[:, s]]
-            d = dq.T  # (B, Q)
-            ids = pdf[id_col].to_numpy()
-            n = min(kk, len(pdf))
-            kth = np.partition(d, n - 1, axis=0)[n - 1]  # (Q,)
-            out_q, out_i, out_d = [], [], []
-            for j in range(d.shape[1]):
-                cand = np.nonzero(d[:, j] <= kth[j])[0]
-                order = cand[np.lexsort((ids[cand], d[cand, j]))][:n]
-                out_q.append(np.full(n, qids[j]))
-                out_i.append(ids[order])
-                out_d.append(d[order, j])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_i),
-                    "dist": np.concatenate(out_d),
-                }
-            )
+        codes = np.stack(pdf[code_col].to_numpy()).astype(np.int64)
+        # accumulate in (Q, B) layout — luts[:, s, codes[:, s]] is a
+        # contiguous row gather; one transpose at the end instead of
+        # m transposed copies
+        dq = np.zeros((luts.shape[0], len(pdf)), dtype=np.float64)
+        for s in range(m):
+            dq += luts[:, s, codes[:, s]]
+        yield pdf[id_col].to_numpy(), allq, dq.T  # (B, Q)
 
-    partial = df.select(id_col, code_col).mapInPandas(partial_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        partial.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= kk)
-        .select("query_id", F.col(id_col), "dist")
+    return _topk_per_query(
+        df.select(id_col, code_col), id_col, "dist", k, qids, blocks
     )
 
 
@@ -1867,8 +1849,7 @@ def ivf_pq_topk_residual(
         raise ValueError(
             f"query dim {len(q)} != codebook dim {m * sub} (m={m}, sub={sub})"
         )
-    d2 = ((cents - q) ** 2).sum(1)
-    probe = [int(c) for c in np.argsort(d2, kind="stable")[: min(nprobe, len(cents))]]
+    probe = [int(c) for c in _probe_cells_batch(q[None, :], cents, nprobe)[0]]
     # per-cell flattened LUT rows: lut[c][s*nk + j] = ||(q - cent_c)_s - books[s][j]||^2
     luts = []
     for c in probe:
@@ -1893,22 +1874,6 @@ def ivf_pq_topk_residual(
     )
 
 
-def _probe_cells_batch(
-    qm: "np.ndarray", cents: "np.ndarray", nprobe: int
-) -> "np.ndarray":
-    """Per-query probed cells for the residual IVF-PQ batch path: the
-    (Q, nprobe) stable argsort of squared centroid distances. ONE
-    implementation by design (r14 review fix): ivf_pq_rerank_batch's
-    rerank-side cell filter is only a semantic no-op while it selects
-    EXACTLY the cells its shortlist stage probes — a drift between two
-    copies of this rule would silently drop candidate rows before the
-    vector join."""
-    d2 = ((cents[None, :, :] - qm[:, None, :]) ** 2).sum(-1)  # (Q, nlist)
-    return np.argsort(d2, axis=1, kind="stable")[
-        :, : min(int(nprobe), len(cents))
-    ]
-
-
 def ivf_pq_topk_residual_batch(
     df: DataFrame,
     id_col: str,
@@ -1926,24 +1891,22 @@ def ivf_pq_topk_residual_batch(
     LUT literals grow nprobe·m·k, but here every lookup table lives in
     the closure as ONE numpy tensor and the plan stays constant-sized.
 
-    Driver-side: each query's nprobe nearest cells (stable argsort — a
-    1-query batch probes the same cells as ivf_pq_topk_residual and
-    returns its exact ranking, test-pinned) become a cell →
-    (probing-query indices, per-query LUT tensor) map; LUT[s][j] =
-    ||(q − centroid_cell)_s − books[s][j]||². Spark-side: one Arrow
-    mapInPandas over (id, cell, code) — rows in unprobed cells drop,
-    each cell block gathers its codes against only ITS probing
-    queries' LUTs (m numpy gathers, no matmul), then reduces to the
-    tie-exact worker-local per-query top-k (dist asc, id asc — the
-    pq_topk_batch contract). One exchange of k rows per query per
-    batch, WindowGroupLimit window. The union of probed cells is pushed
-    as an IN filter BELOW the Arrow stage by the operator itself (r13 —
-    the pre-r13 form delegated it to the caller, so over a
-    write_ivf_pq_partitioned layout the scan listed EVERY cell's
-    files): semantically a no-op, but it compiles to PartitionFilters
-    on the stored layout, restoring the 1/nlist file pruning."""
-    from pyspark.sql import Window
-
+    Driver-side: each query's nprobe nearest cells
+    (`_probe_cells_batch` — a 1-query batch probes the same cells as
+    ivf_pq_topk_residual and returns its exact ranking, test-pinned)
+    become a cell → (probing-query indices, per-query LUT tensor) map;
+    LUT[s][j] = ||(q − centroid_cell)_s − books[s][j]||². Spark-side:
+    one Arrow mapInPandas over (id, cell, code) — rows in unprobed cells
+    drop, each cell block gathers its codes against only ITS probing
+    queries' LUTs (m numpy gathers, no matmul), then reduces with the
+    shared tie-exact partial top-k (`_make_topk_worker`, dist asc, id
+    asc). One exchange of k rows per query per batch, WindowGroupLimit
+    window. The union of probed cells is pushed as an IN filter BELOW
+    the Arrow stage by the operator itself (r13 — the pre-r13 form
+    delegated it to the caller, so over a write_ivf_pq_partitioned
+    layout the scan listed EVERY cell's files): semantically a no-op,
+    but it compiles to PartitionFilters on the stored layout, restoring
+    the 1/nlist file pruning."""
     if k <= 0:
         raise ValueError(f"k must be positive (got {k})")
     if nprobe < 1:
@@ -1951,91 +1914,47 @@ def ivf_pq_topk_residual_batch(
     books = np.asarray(codebooks, dtype=np.float64)
     m, nk, sub = books.shape
     cents = np.asarray(centroids, dtype=np.float64)
-    qm = np.asarray(queries, dtype=np.float64)
-    qids = np.asarray(list(query_ids), dtype=np.int64)
-    _check_batch_ids(qm, qids)
+    qm, qids = _query_batch(queries, query_ids)
     if qm.shape[1] != m * sub:
         raise ValueError(
             f"query dim {qm.shape[1]} != codebook dim {m * sub} "
             f"(m={m}, sub={sub})"
         )
     probe = _probe_cells_batch(qm, cents, nprobe)
-    cell_map: dict = {}
-    for qi in range(len(qm)):
-        for c in probe[qi]:
-            cell_map.setdefault(int(c), []).append(qi)
     cell_luts = {}
-    for c, qidx in cell_map.items():
+    for c, qidx in _queries_by_group(probe).items():
         qr = qm[qidx] - cents[c]  # (nq_c, dim)
         # (nq_c, m, k): per probing query, per subspace, per center
         cell_luts[c] = (
-            np.asarray(qidx, dtype=np.int64),
+            qidx,
             ((books[None, :, :, :]
               - qr.reshape(len(qidx), m, 1, sub)) ** 2).sum(-1),
         )
-    kk = int(k)
-    # r13 (found by the composed-path boundary drive): push the probed
-    # cells as an IN filter BELOW the Arrow stage. Semantically a no-op
-    # (the kernel drops unprobed cells anyway), but over a
-    # write_ivf_pq_partitioned layout it compiles to PartitionFilters —
-    # without it the scan LISTS EVERY cell's files and the 1/nlist
-    # pruning the layout exists for never happens. The pre-r13
-    # docstring delegated this filter to the caller; the operator now
-    # owns it.
-    df = df.filter(F.col(cell_col).isin(sorted(cell_map)))
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"query_id long, {id_col} {id_type}, dist double"
+    # the probed-cells IN filter below the Arrow stage (r13, see the
+    # docstring): PartitionFilters over a write_ivf_pq_partitioned layout
+    src = df.filter(F.col(cell_col).isin(sorted(cell_luts))).select(
+        id_col, cell_col, code_col
+    )
 
-    def partial_topk(batches):
+    def blocks(pdf):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cells = pdf[cell_col].to_numpy()
-            codes = np.stack(pdf[code_col].to_numpy()).astype(np.int64)
-            ids = pdf[id_col].to_numpy()
-            out_q, out_i, out_d = [], [], []
-            for c in np.unique(cells):
-                got = cell_luts.get(int(c))
-                if got is None:
-                    continue  # unprobed cell
-                qidx, luts = got  # luts: (nq, m, k)
-                sel = np.nonzero(cells == c)[0]
-                cc = codes[sel]  # (B_c, m)
-                dq = np.zeros((len(qidx), len(sel)), dtype=np.float64)
-                for s in range(m):
-                    dq += luts[:, s, cc[:, s]]
-                cids = ids[sel]
-                n = min(kk, len(sel))
-                kth = np.partition(dq, n - 1, axis=1)[:, n - 1]  # (nq,)
-                for j in range(len(qidx)):
-                    cand = np.nonzero(dq[j] <= kth[j])[0]
-                    order = cand[np.lexsort((cids[cand], dq[j, cand]))][:n]
-                    out_q.append(np.full(n, qids[qidx[j]]))
-                    out_i.append(cids[order])
-                    out_d.append(dq[j, order])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        id_col: np.concatenate(out_i),
-                        "dist": np.concatenate(out_d),
-                    }
-                )
+        cells = pdf[cell_col].to_numpy()
+        codes = np.stack(pdf[code_col].to_numpy()).astype(np.int64)
+        ids = pdf[id_col].to_numpy()
+        for c in np.unique(cells):
+            got = cell_luts.get(int(c))
+            if got is None:
+                continue  # unprobed cell
+            qidx, luts = got  # luts: (nq, m, k)
+            sel = np.nonzero(cells == c)[0]
+            cc = codes[sel]  # (B_c, m)
+            dq = np.zeros((len(qidx), len(sel)), dtype=np.float64)
+            for s in range(m):
+                dq += luts[:, s, cc[:, s]]
+            yield ids[sel], qidx, dq.T  # (B_c, nq)
 
-    partial = df.select(id_col, cell_col, code_col).mapInPandas(
-        partial_topk, out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        partial.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= kk)
-        .select("query_id", F.col(id_col), "dist")
-    )
+    return _topk_per_query(src, id_col, "dist", k, qids, blocks)
 
 
 def write_ivf_pq_partitioned(
@@ -2668,14 +2587,9 @@ def ann_advise(
             "candidates must be in ascending cost order (the advisor's "
             f"early-stop relies on it; got costs {costs})"
         )
-    qm = np.asarray(queries, dtype=np.float64)
-    qids = np.asarray(list(query_ids), dtype=np.int64)
-    _check_batch_ids(qm, qids)
-    rng = np.random.RandomState(seed)
-    take = min(int(n_sample), len(qids))
-    idx = np.sort(rng.choice(len(qids), size=take, replace=False))
-    sample_q = qm[idx]
-    sample_ids = [int(x) for x in qids[idx]]
+    sample_q, sample_ids = _sample_queries(
+        *_query_batch(queries, query_ids), n_sample, seed
+    )
     truth_kernel = cosine_topk_batch if metric == "cosine" else l2_topk_batch
     truth_frame = truth_kernel(df, id_col, vec_col, sample_q, sample_ids, k=k)
     # bounded: n_sample·k rows — pin it as a local relation so the
@@ -2689,7 +2603,7 @@ def ann_advise(
         approx = build(df, sample_q, sample_ids, k)
         rows = ann_recall_estimate(
             df, id_col, vec_col, sample_q, sample_ids, approx,
-            k=k, n_sample=take, seed=seed, metric=metric,
+            k=k, n_sample=len(sample_ids), seed=seed, metric=metric,
             truth=truth_local,
         ).collect()
         mean = (
@@ -2771,62 +2685,29 @@ def l2_topk_batch(
     the distance-metric twin of cosine_topk_batch, and the ground-truth
     kernel the PQ/IVF-PQ tier (which ranks by L2, not cosine) measures
     against. Same shape as the cosine kernel: query matrix in the Arrow
-    closure, ONE ||x||² − 2·x·q + ||q||² evaluation per batch, tie-exact
-    worker-local per-query partial top-k (dist asc, id asc — every row
-    tied with the k-th distance survives the partial), one exchange of
-    k rows per query per batch, WindowGroupLimit window. Returns
-    (query_id, id, dist) with dist the exact squared L2 distance."""
-    from pyspark.sql import Window
-
+    closure, ONE ||x||² − 2·x·q + ||q||² evaluation per batch, the
+    shared tie-exact partial top-k (`_make_topk_worker`, dist asc, id
+    asc), one exchange of k rows per query per batch, WindowGroupLimit
+    window. Returns (query_id, id, dist) with dist the exact squared L2
+    distance."""
     if k <= 0:
         raise ValueError(f"k must be positive (got {k})")
-    qm = np.asarray(queries, dtype=np.float64)  # (Q, dim)
-    qids = np.asarray(list(query_ids), dtype=np.int64)
-    _check_batch_ids(qm, qids)
+    qm, qids = _query_batch(queries, query_ids)  # (Q, dim)
     qsq = (qm ** 2).sum(1)  # (Q,)
-    kk = int(k)
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"query_id long, {id_col} {id_type}, dist double"
+    allq = np.arange(len(qm))
 
-    def partial_topk(batches):
+    def blocks(pdf):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.stack(pdf[vec_col].to_numpy())  # (B, dim)
-            d = (
-                (m ** 2).sum(1)[:, None]
-                - 2.0 * (m @ qm.T)
-                + qsq[None, :]
-            )  # (B, Q)
-            ids = pdf[id_col].to_numpy()
-            n = min(kk, len(pdf))
-            kth = np.partition(d, n - 1, axis=0)[n - 1]  # (Q,)
-            out_q, out_i, out_d = [], [], []
-            for j in range(d.shape[1]):
-                cand = np.nonzero(d[:, j] <= kth[j])[0]
-                order = cand[np.lexsort((ids[cand], d[cand, j]))][:n]
-                out_q.append(np.full(n, qids[j]))
-                out_i.append(ids[order])
-                out_d.append(d[order, j])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_i),
-                    "dist": np.concatenate(out_d),
-                }
-            )
+        m = np.stack(pdf[vec_col].to_numpy())  # (B, dim)
+        yield pdf[id_col].to_numpy(), allq, (
+            (m ** 2).sum(1)[:, None]
+            - 2.0 * (m @ qm.T)
+            + qsq[None, :]
+        )  # (B, Q)
 
-    partial = df.select(id_col, vec_col).mapInPandas(partial_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        partial.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= kk)
-        .select("query_id", F.col(id_col), "dist")
+    return _topk_per_query(
+        df.select(id_col, vec_col), id_col, "dist", k, qids, blocks
     )
 
 
@@ -2870,9 +2751,7 @@ def pq_topk_rerank_batch(
         raise ValueError(f"overfetch must be >= 1 (got {overfetch})")
     if k <= 0:
         raise ValueError(f"k must be positive (got {k})")
-    qm = np.asarray(queries, dtype=np.float64)
-    qids = np.asarray(list(query_ids), dtype=np.int64)
-    _check_batch_ids(qm, qids)
+    qm, qids = _query_batch(queries, query_ids)
     cand = pq_topk_batch(
         df.select(id_col, code_col), id_col, code_col, qm, qids,
         codebooks, k=int(k) * int(overfetch),
@@ -2906,8 +2785,6 @@ def _exact_l2_rerank(cand, df, id_col, vec_col, qm, qids, k,
     lands in parquet PushedFilters and row-group min/max stats skip
     everything outside the shortlist — the exact rerank then READS
     candidate-sized, not corpus-sized."""
-    from pyspark.sql import Window
-
     if pushdown_ids:
         pairs = cand.select("query_id", id_col).collect()
         ids = sorted({r[1] for r in pairs})
@@ -2927,16 +2804,11 @@ def _exact_l2_rerank(cand, df, id_col, vec_col, qm, qids, k,
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return (
+    return _rank_per_query(
         cand.join(df.select(id_col, vec_col), id_col)
         .join(qdf, "query_id")
-        .select("query_id", F.col(id_col), dist.alias("dist"))
-        .withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= int(k))
-        .select("query_id", F.col(id_col), "dist")
+        .select("query_id", F.col(id_col), dist.alias("dist")),
+        id_col, "dist", k,
     )
 
 
@@ -2982,9 +2854,7 @@ def ivf_pq_rerank_batch(
         raise ValueError(f"overfetch must be >= 1 (got {overfetch})")
     if k <= 0:
         raise ValueError(f"k must be positive (got {k})")
-    qm = np.asarray(queries, dtype=np.float64)
-    qids = np.asarray(list(query_ids), dtype=np.int64)
-    _check_batch_ids(qm, qids)
+    qm, qids = _query_batch(queries, query_ids)
     cand = ivf_pq_topk_residual_batch(
         df.select(id_col, cell_col, code_col), id_col, code_col, qm, qids,
         codebooks, centroids, k=int(k) * int(overfetch), nprobe=nprobe,

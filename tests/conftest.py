@@ -72,3 +72,50 @@ def wizards(spark):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def batch_ann_tiers():
+    """The six batch ANN tiers as {name: fn(df, queries, query_ids, k)}
+    over a 4-dim corpus carrying `vec_id`, `embedding`, `pq_code` (2
+    subspaces of 2 centers) and `ivf_cell` (2 cells); the IVF tiers
+    probe every cell and LSH probes only the query's own bucket."""
+    import numpy as np
+
+    from purescript_ifrit_spark.operators import similarity as S
+
+    books = np.zeros((2, 2, 2))
+    books[:, 1, 0] = 0.5
+    cents = np.array([[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]])
+    planes = S.make_hyperplanes(4, 3, seed=1)
+    return {
+        "cosine": lambda df, q, ids, k: S.cosine_topk_batch(
+            df, "vec_id", "embedding", q, ids, k=k
+        ),
+        "lsh": lambda df, q, ids, k: S.lsh_topk_batch(
+            df, "vec_id", "embedding", q, ids, planes, k=k, probe_hamming=0
+        ),
+        "ivf": lambda df, q, ids, k: S.ivf_topk_batch(
+            df, "vec_id", "embedding", q, ids, cents, k=k, nprobe=2
+        ),
+        "pq": lambda df, q, ids, k: S.pq_topk_batch(
+            df, "vec_id", "pq_code", q, ids, books, k=k
+        ),
+        "ivf_pq_residual": lambda df, q, ids, k: S.ivf_pq_topk_residual_batch(
+            df, "vec_id", "pq_code", q, ids, books, cents, k=k, nprobe=2
+        ),
+        "l2": lambda df, q, ids, k: S.l2_topk_batch(
+            df, "vec_id", "embedding", q, ids, k=k
+        ),
+    }
+
+
+def tied_ann_corpus(spark, n=40, partitions=4):
+    """`n` copies of one unit vector (ids 0..n-1) in cell 0 with one
+    shared PQ code, split across `partitions` partitions: every tier's
+    scores tie on every row."""
+    rows = [(i, [1.0, 0.0, 0.0, 0.0], [0, 0], 0) for i in range(n)]
+    return spark.createDataFrame(
+        rows,
+        "vec_id long, embedding array<double>, pq_code array<int>, "
+        "ivf_cell int",
+    ).repartition(partitions)

@@ -532,3 +532,23 @@ def test_r13_l2_and_rerank_kernels_on_empty(spark):
     )
     assert out2.count() == 0
     assert out2.columns == ["query_id", "vec_id", "dist"]
+
+
+def test_batch_ann_tiers_on_empty_query_batch(spark):
+    """ROADMAP direction 3 on the six batch ANN tiers: a (0, dim) query
+    batch returns an empty frame with the contract schema on every tier
+    (it used to kill the job from np.concatenate([]) on the executors,
+    raise on the driver, or return 0 rows, depending on the tier), and
+    a non-2-D `queries` raises a named ValueError on the driver instead
+    of a raw numpy AxisError/IndexError."""
+    import numpy as np
+
+    from tests.conftest import batch_ann_tiers, tied_ann_corpus
+
+    corpus = tied_ann_corpus(spark, n=6, partitions=2)
+    for name, tier in batch_ann_tiers().items():
+        out = tier(corpus, np.zeros((0, 4)), [], 3)
+        assert out.count() == 0, name
+        assert out.columns[:2] == ["query_id", "vec_id"], name
+        with pytest.raises(ValueError, match="2-D"):
+            tier(corpus, [], [], 3)

@@ -416,8 +416,9 @@ def test_ann_batch_matches_single(spark, sf_dir):
 
 
 def test_ivf_batch_matches_single_query_operator(spark, sf_dir):
-    """A 1-query ivf_topk_batch probes the same cells (same argsort-of-
-    L2 rule) and returns exactly ivf_topk's ranking — ids and order
+    """A 1-query ivf_topk_batch probes the same cells (same stable
+    argsort-of-L2 rule, also with duplicate centroids) and returns
+    exactly ivf_topk's ranking — ids and order
     exact, sims to 6 decimals (numpy vs JVM summation order); a
     multi-query batch equals running ivf_topk per query."""
     import numpy as np
@@ -449,6 +450,30 @@ def test_ivf_batch_matches_single_query_operator(spark, sf_dir):
             )
         ]
         assert have == want, (qi, have, want)
+    # duplicate centroids (ivf_centroids emits them when its sample holds
+    # fewer distinct vectors than nlist): rows tie to the LOWER cell, so
+    # the copy's cell is empty, and the probe must break the distance tie
+    # the same way — an unstable sort probed the empty copy and returned
+    # 0 rows from both forms
+    dup = cents.copy()
+    dup[3] = dup[2]
+    want = [
+        (r.vec_id, round(r.sim, 6))
+        for r in similarity.ivf_topk(
+            emb, "vec_id", "embedding", dup[2].tolist(), dup, k=5, nprobe=1
+        ).collect()
+    ]
+    have = [
+        (r.vec_id, round(r.sim, 6))
+        for r in sorted(
+            similarity.ivf_topk_batch(
+                emb, "vec_id", "embedding", dup[2][None, :], [0], dup,
+                k=5, nprobe=1,
+            ).collect(),
+            key=lambda r: (-r.sim, r.vec_id),
+        )
+    ]
+    assert len(want) == 5 and have == want, (have, want)
     with pytest.raises(ValueError):
         similarity.ivf_topk_batch(
             emb, "vec_id", "embedding", queries, [0, 7], cents, k=0
@@ -635,28 +660,28 @@ def test_ann_recall_estimate_hand_computed(spark):
 
 
 def test_ann_batch_partial_topk_exact_on_ties(spark):
-    """The r10 partial-top-k rewrite must keep EXACT tie semantics:
-    duplicate embeddings tie on sim, and the returned set must be the
-    smallest ids among the tied rows — per batch and globally — exactly
-    as the (sim desc, id asc) brute-force order dictates."""
+    """The r10 partial-top-k rewrite must keep EXACT tie semantics on
+    every batch tier: duplicate embeddings (and duplicate codes) tie on
+    score, and the returned set must be the smallest ids among the tied
+    rows — per batch and globally — exactly as the (score, id asc)
+    brute-force order dictates."""
     import numpy as np
 
-    from purescript_ifrit_spark.operators import similarity
+    from tests.conftest import batch_ann_tiers, tied_ann_corpus
 
-    # 40 rows: ids 0..39, all the SAME unit vector -> every sim ties;
-    # split across 4 partitions so partial top-ks must merge correctly
-    rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(40)]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).repartition(4)
-    out = similarity.cosine_topk_batch(
-        emb, "vec_id", "embedding", np.array([[1.0, 0.0, 0.0, 0.0]]), [5], k=7
-    ).collect()
-    assert [(r.query_id, r.vec_id) for r in
-            sorted(out, key=lambda r: r.vec_id)] == [
-        (5, i) for i in range(7)
-    ]
-    assert all(abs(r.sim - 1.0) < 1e-12 for r in out)
+    # 40 rows: ids 0..39, all the SAME unit vector and PQ code in one
+    # IVF cell -> every score ties; split across 4 partitions so
+    # partial top-ks must merge correctly
+    emb = tied_ann_corpus(spark)
+    for name, tier in batch_ann_tiers().items():
+        out = tier(emb, np.array([[1.0, 0.0, 0.0, 0.0]]), [5], 7).collect()
+        assert [(r.query_id, r.vec_id) for r in
+                sorted(out, key=lambda r: r.vec_id)] == [
+            (5, i) for i in range(7)
+        ], name
+        assert len({r[2] for r in out}) == 1, name
+        if "sim" in out[0].asDict():
+            assert all(abs(r.sim - 1.0) < 1e-12 for r in out), name
 
 
 def test_salted_join_matches_plain(spark, sf_dir):

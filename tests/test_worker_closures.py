@@ -16,6 +16,9 @@ whole class of regression a hard failure.
 from __future__ import annotations
 
 import ast
+import os
+import subprocess
+import sys
 from pathlib import Path
 
 PACKAGE = Path(__file__).resolve().parents[1] / "purescript_ifrit_spark"
@@ -125,3 +128,56 @@ def test_by_value_stream_and_wav_decoders_match_module_level():
                 raise AssertionError(f"poison wav must raise: {bad!r:.30}")
             except ValueError:
                 pass
+
+
+_RUN_UNPICKLED = """
+import importlib.util, pickle, sys
+assert importlib.util.find_spec("purescript_ifrit_spark") is None
+for name, fn, pdf in pickle.load(open(sys.argv[1], "rb")):
+    n = sum(len(out) for out in fn(iter([pdf])))
+    assert n > 0, name
+    print(name, n)
+loaded = [m for m in sys.modules if m.startswith("purescript_ifrit_spark")]
+assert loaded == [], loaded
+"""
+
+
+def test_batch_ann_workers_run_without_the_package(
+    spark, tmp_path, monkeypatch
+):
+    """The AST guard above only sees imports; a worker closure that CALLS
+    a module-level package function is pickled by reference and needs the
+    package on the executors just the same. Run each batch ANN tier's
+    actual mapInPandas function, cloudpickled, in a fresh interpreter
+    where the package cannot be imported."""
+    import numpy as np
+    from pyspark import cloudpickle
+
+    from tests.conftest import batch_ann_tiers, tied_ann_corpus
+
+    corpus = tied_ann_corpus(spark, n=6, partitions=1)
+    # patch the session's concrete DataFrame class (classic or Connect)
+    frame_cls = type(corpus)
+    captured = []
+    original = frame_cls.mapInPandas
+
+    def capture(self, func, schema, *args, **kwargs):
+        captured.append((self, func))
+        return original(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "mapInPandas", capture)
+    jobs = []
+    for name, tier in batch_ann_tiers().items():
+        tier(corpus, np.array([[1.0, 0.0, 0.0, 0.0]]), [1], 3)
+        (src, func), = captured
+        captured.clear()
+        jobs.append((name, func, src.toPandas()))
+    payload = tmp_path / "workers.pkl"
+    payload.write_bytes(cloudpickle.dumps(jobs))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", _RUN_UNPICKLED, str(payload)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert len(run.stdout.split("\n")) == len(jobs) + 1, run.stdout
