@@ -13,8 +13,10 @@ work unchanged on an object store; `maxPartitionBytes` governs split sizing.
 from __future__ import annotations
 
 import os
+import weakref
 from typing import Dict, Optional
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,18 +51,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     shift epoch values, so we fail fast instead (the engine's entry points
     — bench.py, conftest.py, api.get_spark — all pin UTC).
 
-    Schema memo: `spark.read.parquet` infers the schema from the parquet
-    footers with a Spark job on every call. The StructType it infers is
-    memoized per (absolute path, listing signature, parquet-conversion
-    confs): the signature is (file, size, mtime_ns) of every file under
-    the path, so a rewrite in place misses, and the confs are
-    `_PARQUET_SCHEMA_CONFS`, so a read under another type conversion
-    misses too. A hit reads with that schema given, which resolves the
-    relation with no job. Only the schema is memoized: every call still
-    builds a fresh relation with fresh attribute ids (a self-join of two
-    calls stays unambiguous), and the `events.ts` normalization and the
-    UTC check above run on every call. Paths that are not absolute local
-    files or directories (object stores, globs) always infer."""
+    Relation memo: `spark.read.parquet` infers the schema from the
+    parquet footers with a Spark job, and resolves the relation on the
+    JVM, on every call. Both are memoized per (absolute path, listing
+    signature, parquet-conversion confs): the signature is (file, size,
+    mtime_ns) of every file under the path, so a rewrite in place
+    misses, and the confs are `_PARQUET_SCHEMA_CONFS`, so a read under
+    another type conversion misses too. The inferred StructType is kept
+    across sessions; the analyzed relation is kept per SparkSession
+    (it reads its own session's confs at scan time) and dropped once
+    the session is stopped or collected. A hit returns a fresh-id copy
+    of that relation (`newInstance`), so it runs no reader, no schema
+    conversion and no job, and a self-join of two calls stays
+    unambiguous. Rebuilding a
+    Dataset from a plan goes through Spark's private `Dataset.ofRows`:
+    where that is unavailable (Spark Connect) or raises, a hit reads
+    with the memoized schema given instead, which still runs no job.
+    The `events.ts` normalization and the UTC check above run on every
+    call. Paths that are not absolute local files or directories
+    (object stores, globs, relative paths) always infer."""
     if name == "events":
         # scope the legacy conf to this read: it is consulted when the
         # parquet schema is converted (at read() time), so restoring it
@@ -115,9 +124,10 @@ _PARQUET_SCHEMA_CONFS = (
     "spark.sql.caseSensitive",
 )
 
-# (path, conf values) -> (listing signature, inferred StructType); a
-# rewritten path replaces its entry instead of adding one
-_SCHEMAS: Dict[tuple, tuple] = {}
+# (path, conf values) -> (listing signature, inferred StructType,
+# {SparkSession: (analyzed relation, JVM Dataset class)}); a rewritten path
+# replaces its entry, and a collected or stopped session leaves the inner map
+_RELATIONS: Dict[tuple, tuple] = {}
 
 
 def _listing(path: str) -> Optional[tuple]:
@@ -141,20 +151,46 @@ def _listing(path: str) -> Optional[tuple]:
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """`spark.read.parquet(path)` with the inferred schema memoized (see
-    load_table). The listing is taken before the inferring read, so a
-    rewrite racing the read can only cause a later miss, never a stale
-    hit."""
+    """`spark.read.parquet(path)` with the inferred schema and the resolved
+    relation memoized (see load_table). The listing is taken before the
+    inferring read, so a rewrite racing the read can only cause a later
+    miss, never a stale hit."""
     listing = _listing(path)
     if listing is None:
         return spark.read.parquet(path)
     key = (path, tuple(spark.conf.get(k, None) for k in _PARQUET_SCHEMA_CONFS))
-    hit = _SCHEMAS.get(key)
-    if hit is not None and hit[0] == listing:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS[key] = (listing, df.schema)
+    hit = _RELATIONS.get(key)
+    if hit is None or hit[0] != listing:
+        df = spark.read.parquet(path)
+        hit = _RELATIONS[key] = (listing, df.schema, weakref.WeakKeyDictionary())
+    else:
+        try:
+            relation, dataset = hit[2][spark]
+            return DataFrame(
+                dataset.ofRows(spark._jsparkSession, relation.newInstance()),
+                spark,
+            )
+        except (KeyError, TypeError, Py4JError):
+            # not resolved in this session yet, or no JVM fast path
+            df = spark.read.schema(hit[1]).parquet(path)
+    try:
+        hit[2][spark] = (
+            df._jdf.queryExecution().analyzed(),
+            spark._jvm.org.apache.spark.sql.classic.Dataset,
+        )
+    except (AttributeError, TypeError, Py4JError):
+        pass
+    _forget_stopped_sessions()
     return df
+
+
+def _forget_stopped_sessions() -> None:
+    """Drop the relations of sessions whose SparkContext is stopped: the
+    session object may outlive stop() (a fixture, a global), and its JVM
+    relation would otherwise stay pinned until it is collected."""
+    for _, _, per_session in list(_RELATIONS.values()):
+        for s in [s for s in per_session.keys() if s._sc._jsc is None]:
+            del per_session[s]
 
 
 def _require_utc_session(spark: SparkSession) -> None:

@@ -4,7 +4,7 @@ VERDICT r4 #7)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from purescript_ifrit_spark.api import run_query
@@ -60,25 +60,29 @@ def _dialect(table: str, sql: str, post=None) -> SparkFn:
     return fn
 
 
+def _columns(make: Callable[[], Dict[str, Column]]) -> Callable:
+    """A post-step replacing the columns `make()` maps in ONE `withColumns`
+    (one Catalyst analysis, column order kept); `_chain` fuses the maps
+    of several such steps. `make` runs per call, because Columns need a
+    live session and the suite is built at import."""
+
+    def post(df: DataFrame) -> DataFrame:
+        return df.withColumns(make())
+
+    post.columns = make
+    return post
+
+
 def _round(*cols: str, ndigits: int = 6):
-    def post(df: DataFrame) -> DataFrame:
-        for c in cols:
-            df = df.withColumn(c, F.round(F.col(c), ndigits))
-        return df
-
-    return post
+    return _columns(lambda: {c: F.round(F.col(c), ndigits) for c in cols})
 
 
-def _null_id(df: DataFrame) -> DataFrame:
-    # GROUP BY NULL produces a NullType `_id`; cast to string so the
-    # cross-engine schema comparison is stable
-    return df.withColumn("_id", F.col("_id").cast("string"))
+# GROUP BY NULL produces a NullType `_id`; cast to string so the
+# cross-engine schema comparison is stable
+_null_id = _columns(lambda: {"_id": F.col("_id").cast("string")})
 
 
-def _chain(*fs):
-    def post(df: DataFrame) -> DataFrame:
-        for f in fs:
-            df = f(df)
-        return df
-
-    return post
+def _chain(*posts):
+    """`_columns` steps as one `withColumns`: each step reads the input
+    columns, so the steps must replace disjoint columns."""
+    return _columns(lambda: {c: v for p in posts for c, v in p.columns().items()})

@@ -223,6 +223,134 @@ def test_load_table_self_join_resolves(spark, sf_dir):
     assert joined.count() == a.count()
 
 
+# py4j round trips the driver thread makes per build, after a warm-up call:
+# a `load_table` memo hit (11 conf reads for the key, then the fresh-id
+# copy of the memoized relation) and one `p3_alias` registry call (that
+# hit plus the dialect query). Host-independent, so a regression fails
+# here even where wall time cannot show it.
+_ROUND_TRIPS = {"load_table_hit": 14, "p3_alias": 25}
+
+
+def _round_trips(fn):
+    """The py4j commands the calling thread sends during fn() (the py4j
+    finalizer thread's object releases are not counted)."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    send, me, n = ClientServerConnection.send_command, threading.get_ident(), [0]
+
+    def counting(self, command, *args, **kwargs):
+        n[0] += threading.get_ident() == me
+        return send(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        fn()
+    finally:
+        ClientServerConnection.send_command = send
+    return n[0]
+
+
+def test_build_round_trips_are_pinned(spark, sf_dir):
+    from purescript_ifrit_spark.suite import REGISTRY
+
+    p3_alias = REGISTRY["p3_alias"][0]
+    builds = {
+        "load_table_hit": lambda: S.load_table(spark, sf_dir, "customer"),
+        "p3_alias": lambda: p3_alias(spark, sf_dir),
+    }
+    got = {}
+    for name, build in builds.items():
+        build()
+        got[name] = _round_trips(build)
+    assert got == _ROUND_TRIPS
+
+
+def test_load_table_hit_matches_a_fresh_read(spark, sf_dir, monkeypatch):
+    """For every driver table, a memo hit (a fresh-id copy of the memoized
+    relation) has the schema and rows of a fresh inferring read."""
+    monkeypatch.setattr(S, "_RELATIONS", {})
+    for name in S.TABLES:
+        fresh = S.load_table(spark, sf_dir, name)
+        hit = S.load_table(spark, sf_dir, name)
+        assert hit.schema == fresh.schema, name
+        assert hit.collect() == fresh.collect(), name
+        ids = [df._jdf.queryExecution().analyzed().output().toString()
+               for df in (fresh, hit)]
+        assert ids[0] != ids[1], name
+
+
+class _RaisingDataset:
+    """Stands in for the memoized JVM Dataset class: every call raises."""
+
+    calls = 0
+
+    def ofRows(self, *args):
+        from py4j.protocol import Py4JError
+
+        _RaisingDataset.calls += 1
+        raise Py4JError("ofRows unavailable")
+
+
+def test_load_table_falls_back_when_the_jvm_fast_path_raises(spark, tmp_path):
+    """A memo hit whose JVM call raises Py4JError reads with the memoized
+    schema instead: same rows, still no job."""
+    pq.write_table(pa.table({"k": [3, 1, 2]}), str(tmp_path / "t.parquet"))
+    want = S.load_table(spark, str(tmp_path), "t").collect()
+    (entry,) = [e for k, e in S._RELATIONS.items() if k[0].startswith(str(tmp_path))]
+    entry[2][spark] = (entry[2][spark][0], _RaisingDataset())
+    df, jobs = _jobs_run(spark, lambda: S.load_table(spark, str(tmp_path), "t"))
+    assert _RaisingDataset.calls == 1 and jobs == 0
+    assert df.collect() == want
+    # the reader path stored this session's relation again: the next hit is fast
+    assert not isinstance(entry[2][spark][1], _RaisingDataset)
+
+
+def test_load_table_relation_is_per_session(spark, tmp_path, monkeypatch):
+    """A load in another session after a load in `spark` gets a relation
+    resolved in its own session, not the first session's; a collected
+    session's relation leaves the memo."""
+    import gc
+
+    from pyspark.core.rdd import RDD
+
+    # every new SparkSession rebinds RDD.toDF to a closure over itself;
+    # monkeypatch puts the original back, so `other` can be collected
+    monkeypatch.setattr(RDD, "toDF", RDD.toDF)
+    pq.write_table(pa.table({"k": [1, 2]}), str(tmp_path / "t.parquet"))
+    S.load_table(spark, str(tmp_path), "t")
+    other = spark.newSession()
+    df = S.load_table(other, str(tmp_path), "t")
+    relation = df._jdf.queryExecution().analyzed().relation()
+    assert relation.sparkSession().equals(other._jsparkSession)
+    assert not relation.sparkSession().equals(spark._jsparkSession)
+    assert df.count() == 2
+    (entry,) = [e for k, e in S._RELATIONS.items() if k[0].startswith(str(tmp_path))]
+    assert set(entry[2].keys()) == {spark, other}
+    monkeypatch.undo()
+    del df, relation, other
+    gc.collect()
+    assert list(entry[2].keys()) == [spark]
+
+
+def test_load_table_forgets_stopped_sessions(spark, tmp_path):
+    """A session object that outlives stop() does not keep its relation in
+    the memo: the next store drops it."""
+
+    class _Stopped:  # what stop() leaves: a SparkContext with no JVM handle
+        _sc = type("_StoppedContext", (), {"_jsc": None})()
+
+    stopped = _Stopped()
+    pq.write_table(pa.table({"k": [1]}), str(tmp_path / "a.parquet"))
+    pq.write_table(pa.table({"k": [2]}), str(tmp_path / "b.parquet"))
+    S.load_table(spark, str(tmp_path), "a")
+    (entry,) = [e for k, e in S._RELATIONS.items() if k[0].startswith(str(tmp_path))]
+    entry[2][stopped] = entry[2][spark]
+    S.load_table(spark, str(tmp_path), "b")
+    assert list(entry[2].keys()) == [spark]
+
+
 def _ntz_events(spark):
     return spark.createDataFrame(
         [
