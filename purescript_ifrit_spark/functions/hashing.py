@@ -95,15 +95,6 @@ def minhash_bands_sql(lane_cols, bands: int, rows_per_band: int) -> str:
     return "array(" + ",".join(parts) + ")"
 
 
-def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard similarity of two (distinct-element) arrays."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(a) + F.size(b) - inter
-    return F.when(union == 0, F.lit(0.0)).otherwise(
-        inter.cast("double") / union.cast("double")
-    )
-
-
 def simhash_signature(toks: Column, bits: int = 64) -> Column:
     """SimHash: one bigint whose bit k is the sign of the sum over tokens of
     (bit k of xxhash64(token) ? +1 : -1).

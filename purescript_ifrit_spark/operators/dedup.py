@@ -414,7 +414,7 @@ def minhash_candidate_pairs(
 
     # verification: attach shingle sets to the (small) candidate set only.
     # The intersection is STAGED in its own projection (r14 optimization
-    # round, guide §1.2): `filter(jaccard >= t)` over a live H.jaccard
+    # round, guide §1.2): `filter(jaccard >= t)` over a live jaccard
     # projection lets predicate pushdown substitute the full expression
     # into the Filter — with `inter` appearing three times in the jaccard
     # formula, each surviving candidate paid SIX array_intersect

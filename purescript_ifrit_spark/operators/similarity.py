@@ -256,8 +256,8 @@ def _probe_cells_batch(
     the tie rule of row assignment (JVM array_position, Arrow argmin).
     ONE implementation for every IVF probe site (ivf_topk,
     ivf_topk_batch, ivf_pq_topk, the residual tiers): with duplicate
-    centroids (ivf_centroids emits them when its sample holds fewer
-    distinct vectors than nlist) an unstable sort can probe the EMPTY
+    centroids (a caller-built array may repeat one; ivf_centroids
+    drops its repeats) an unstable sort can probe the EMPTY
     copy cell and return 0 rows; and ivf_pq_rerank_batch's rerank-side
     cell filter is only a semantic no-op while it selects EXACTLY the
     cells its shortlist stage probes (r14 review fix)."""
@@ -821,7 +821,11 @@ def ivf_centroids(
     is sample*dim doubles — or lower nlist), and for production indexes
     refine the sample-built centroids against the FULL corpus with
     `ivf_centroids_refine` (distributed Lloyd passes; one corpus scan +
-    one nlist*dim-sized aggregate each)."""
+    one nlist*dim-sized aggregate each).
+
+    Returns at most nlist rows: a sample with fewer distinct vectors
+    than nlist yields one centroid per distinct vector, so `nprobe`
+    always counts distinct cells."""
     rows = (
         df.select(vec_col)
         .orderBy(F.xxhash64(F.col(vec_col)).asc(), F.col(vec_col).asc())
@@ -858,7 +862,12 @@ def ivf_centroids(
         for j in range(nlist):
             if (assign == j).any():
                 c[j] = m[assign == j].mean(0)
-    return c
+    # a sample with fewer distinct vectors than nlist repeats centroids,
+    # and every copy's cell stays empty (rows tie to the lower cell), so
+    # a probe that counted one would waste a slot: keep each distinct
+    # centroid once, in first-occurrence order
+    _, first = np.unique(c, axis=0, return_index=True)
+    return c[np.sort(first)]
 
 
 def ivf_centroids_refine(

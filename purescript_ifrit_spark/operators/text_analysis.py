@@ -993,11 +993,16 @@ def bm25_topk(
     b·len/avglen)), idf = ln((N−df+0.5)/(df+0.5) + 1)) that contamination
     checks, dedup triage and RAG-ish corpus probes run at scale.
 
-    Scale: the query-term filter lands AT the token explode, so the
-    (term, doc) shuffle is match-sized, not corpus-sized; document-
-    frequency and corpus stats are term-/1-row-sized aggregates joined
-    back by broadcast; the doc-length join is the one corpus-keyed
-    exchange; the final top-k is a TakeOrdered, never a global sort.
+    `query_terms` are matched verbatim (no normalization; a repeated
+    term counts once) and scored by bm25_topk_queries' scorer as a
+    one-query batch, so for normalized terms the two rankings agree.
+
+    Scale: the query-term screen is a broadcast LEFT-SEMI join that
+    lands AT the token explode, so the (term, doc) shuffle is
+    match-sized, not corpus-sized; document-frequency and corpus stats
+    are term-/1-row-sized aggregates joined back by broadcast; the
+    doc-length join is the one corpus-keyed exchange; the final top-k
+    is a TakeOrdered, never a global sort or a window.
 
     Determinism contract: per-doc scores are rounded to 6 decimals
     BEFORE ranking and ties break by id, so the returned set is stable
@@ -1008,36 +1013,14 @@ def bm25_topk(
         raise ValueError("query_terms must name at least one term")
     if k <= 0:
         raise ValueError(f"k must be positive (got {k})")
-    per_doc = _per_doc_term_counts(df, id_col, text_col).filter(
-        F.col("term").isin(terms)
+    qterms = df.sparkSession.range(1).select(
+        F.lit(0).alias("_qid"),
+        F.explode(F.array(*map(F.lit, dict.fromkeys(terms)))).alias("term"),
     )
-    lens = df.select(
-        F.col(id_col).alias("_doc"),
-        X.token_count(F.col(text_col)).cast("long").alias("_len"),
-    )
-    corpus = lens.agg(
-        F.count(F.lit(1)).alias("_n"), F.avg("_len").alias("_avg")
-    )
-    dfreq = per_doc.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
-    idf = F.log(
-        (F.col("_n") - F.col("_df") + 0.5) / (F.col("_df") + 0.5) + 1.0
-    )
-    contrib = idf * (
-        (F.col("tf_doc") * (k1 + 1.0))
-        / (
-            F.col("tf_doc")
-            + k1 * (1.0 - b + b * F.col("_len") / F.col("_avg"))
-        )
-    )
-    scored = (
-        per_doc.join(F.broadcast(dfreq), "term")
-        .join(lens, "_doc")
-        .crossJoin(F.broadcast(corpus))
-        .groupBy("_doc")
-        .agg(F.round(F.sum(contrib), 6).alias("score"))
-    )
+    postings, doclens = build_bm25_index(df, id_col, text_col)
     return (
-        scored.orderBy(F.col("score").desc(), F.col("_doc").asc())
+        _bm25_scores(postings, doclens, qterms, id_col, k1, b, None)
+        .orderBy(F.col("score").desc(), F.col("_doc").asc())
         .limit(k)
         .select(F.col("_doc").alias(id_col), "score")
     )
@@ -1060,21 +1043,21 @@ def bm25_topk_queries(
     eval sweeps, query-log replays) where bm25_topk's one-query loop
     would rescan the corpus per query. Output (query_id, doc_id, score),
     score rounded to 6 decimals BEFORE ranking with doc-id tiebreak
-    (bm25_topk's determinism contract).
+    (bm25_topk's determinism contract). Query texts are normalized and
+    split exactly like the corpus text.
 
-    Scale: the distinct query vocabulary rides a broadcast LEFT-SEMI
-    join against the tokenized corpus — Catalyst's
+    This is build_bm25_index over `docs` fed straight to
+    bm25_topk_queries_indexed (no respread), so the direct and indexed
+    paths are one computation. Scale: the query vocabulary rides a
+    broadcast LEFT-SEMI join against the tokenized corpus — Catalyst's
     PushDownLeftSemiAntiJoin places it BELOW the (term, doc) partial
     aggregate, at the token explode (an inner join would sit above the
     aggregate and let the pre-aggregation exchange carry every distinct
-    (term, doc) pair of the corpus; the semi-join is semantically
-    identical because the vocab side is distinct and contributes no
-    columns). The shuffled candidate stream is therefore match-sized,
-    not corpus-sized × queries. Document frequency is computed ONCE per
-    distinct term (not per query), corpus stats are a broadcast single
-    row, and the per-query top-k is one window over the query-keyed
-    exchange with the limit pushed map-side. Same idf/tf composition as
-    bm25_topk, so a 1-query batch returns exactly its ranking.
+    (term, doc) pair of the corpus). The shuffled candidate stream is
+    therefore match-sized, not corpus-sized × queries. Document
+    frequency is computed ONCE per distinct term (not per query), corpus
+    stats are a broadcast single row, and the per-query top-k is one
+    window over the query-keyed exchange with the limit pushed map-side.
 
     Cost contract (measured at 100×, SCALE.md): the one large exchange
     is the (query, doc) score aggregation — volume = MATCHED (query,
@@ -1089,16 +1072,10 @@ def bm25_topk_queries(
     table rides explicit broadcasts, so it must be metadata-sized (up
     to ~millions of (query, term) rows); chunk a larger query log into
     several calls."""
-    if k <= 0:
-        raise ValueError(f"k must be positive (got {k})")
-    postings = _per_doc_term_counts(docs, doc_id_col, text_col)
-    lens = docs.select(
-        F.col(doc_id_col).alias("_doc"),
-        X.token_count(F.col(text_col)).cast("long").alias("_len"),
-    )
-    return _bm25_score_query_terms(
-        postings, lens, queries, query_id_col, query_text_col,
-        doc_id_col, k, k1, b, max_df_frac,
+    postings, doclens = build_bm25_index(docs, doc_id_col, text_col)
+    return bm25_topk_queries_indexed(
+        postings, doclens, queries, query_id_col, query_text_col,
+        doc_id_col, k, k1, b, max_df_frac, scoring_partitions=0,
     )
 
 
@@ -1111,10 +1088,10 @@ def build_bm25_index(
     and (doc_id, n_tokens) doc lengths ONCE, persist them, and score
     every future query batch from the (much smaller, numeric) index.
 
-    Returns (postings, doclens) with exactly the tokenization the
-    direct path uses (_per_doc_term_counts — shared definition, so the
-    indexed and direct scores can never diverge; equality test-pinned).
-    Persist postings partitioned/bucketed by `term`
+    Returns (postings, doclens). This is the one postings/doc-length
+    builder: bm25_topk and bm25_topk_queries score exactly these frames,
+    so the indexed and direct scores cannot diverge (equality
+    test-pinned). Persist postings partitioned/bucketed by `term`
     (sources.write_bucketed) — the query-vocab semi-join then prunes
     the postings scan to the matched terms' buckets, the minhash-index
     precedent applied to sparse retrieval."""
@@ -1200,14 +1177,15 @@ def bm25_topk_queries_indexed(
     scoring_partitions: int | None = None,
     prune_scan_terms: bool = False,
 ) -> DataFrame:
-    """Batch BM25 over a PREBUILT index (build_bm25_index): identical
-    output to bm25_topk_queries on the source corpus (same scoring
-    core, test-pinned equal), but the corpus text is never touched —
-    the one corpus-sized input is the numeric postings table, and with
-    term-bucketed postings at rest the query-vocab semi-join becomes a
-    scan prune. All bm25_topk_queries contracts (match-sized candidate
-    stream, df once per distinct term, map-side top-k, `max_df_frac`
-    stop-term screen) carry over unchanged.
+    """Batch BM25 over a PREBUILT index (build_bm25_index):
+    bm25_topk_queries is this function over a fresh build, so the output
+    is identical (test-pinned through parquet) but here the corpus text
+    is never touched — the one corpus-sized input is
+    the numeric postings table, and with term-bucketed postings at rest
+    the query-vocab semi-join becomes a scan prune. All
+    bm25_topk_queries contracts (match-sized candidate stream, df once
+    per distinct term, map-side top-k, `max_df_frac` stop-term screen)
+    carry over unchanged.
 
     `scoring_partitions` respreads the postings before the query-term
     expansion — load-bearing, measured at 100× (SCALE.md): a compact
@@ -1240,24 +1218,10 @@ def bm25_topk_queries_indexed(
     where a selective query batch's vocab spans few files."""
     if k <= 0:
         raise ValueError(f"k must be positive (got {k})")
-    p = postings.select(
-        "term",
-        F.col(doc_id_col).alias("_doc"),
-        F.col("tf").alias("tf_doc"),
-    )
+    qterms = _bm25_query_terms(queries, query_id_col, query_text_col)
     if prune_scan_terms:
-        terms = [
-            r.term
-            for r in queries.select(
-                F.explode(
-                    F.split(X.normalize_text(F.col(query_text_col)), " ")
-                ).alias("term")
-            )
-            .filter(F.length("term") > 0)
-            .distinct()
-            .collect()
-        ]
-        p = p.filter(F.col("term").isin(terms))
+        terms = [r.term for r in qterms.select("term").distinct().collect()]
+        postings = postings.filter(F.col("term").isin(terms))
     if scoring_partitions is None:
         scoring_partitions = _default_scoring_partitions(
             postings.sparkSession
@@ -1267,39 +1231,33 @@ def bm25_topk_queries_indexed(
             f"scoring_partitions must be >= 0 (got {scoring_partitions})"
         )
     if scoring_partitions:
-        p = p.repartition(scoring_partitions)
-    lens = doclens.select(
-        F.col(doc_id_col).alias("_doc"),
-        F.col("n_tokens").cast("long").alias("_len"),
-    )
-    return _bm25_score_query_terms(
-        p, lens, queries, query_id_col, query_text_col,
-        doc_id_col, k, k1, b, max_df_frac,
-    )
-
-
-def _bm25_score_query_terms(
-    postings: DataFrame,
-    lens: DataFrame,
-    queries: DataFrame,
-    query_id_col: str,
-    query_text_col: str,
-    doc_id_col: str,
-    k: int,
-    k1: float,
-    b: float,
-    max_df_frac: "float | None",
-) -> DataFrame:
-    """Shared batch-BM25 scoring core over (term, _doc, tf_doc) postings
-    and (_doc, _len) lengths — one definition for the direct and indexed
-    paths, so their scores are equal by construction."""
-    if max_df_frac is not None and not (0.0 < max_df_frac <= 1.0):
-        raise ValueError(
-            f"max_df_frac must be in (0, 1] or None (got {max_df_frac})"
-        )
+        postings = postings.repartition(scoring_partitions)
     from pyspark.sql import Window
 
-    qterms = (
+    w = Window.partitionBy("_qid").orderBy(
+        F.col("score").desc(), F.col("_doc").asc()
+    )
+    return (
+        _bm25_scores(
+            postings, doclens, qterms, doc_id_col, k1, b, max_df_frac
+        )
+        .withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") <= k)
+        .select(
+            F.col("_qid").alias(query_id_col),
+            F.col("_doc").alias(doc_id_col),
+            "score",
+        )
+    )
+
+
+def _bm25_query_terms(
+    queries: DataFrame, query_id_col: str, query_text_col: str
+) -> DataFrame:
+    """Distinct (_qid, term) pairs of a query table: the query text is
+    normalized and split like the corpus text (_per_doc_term_counts),
+    empty terms dropped."""
+    return (
         queries.select(
             F.col(query_id_col).alias("_qid"),
             F.explode(
@@ -1309,22 +1267,64 @@ def _bm25_score_query_terms(
         .filter(F.length("term") > 0)
         .distinct()
     )
-    vocab = qterms.select("term").distinct()
+
+
+def _bm25_df(
+    postings: DataFrame,
+    qterms: DataFrame,
+    corpus: DataFrame,
+    max_df_frac: "float | None",
+) -> "tuple[DataFrame, DataFrame]":
+    """The df pass of the BM25 scorer and the screen report: (the
+    postings of the query vocabulary, (term, _df, _screened)), where
+    _screened marks the `max_df_frac` stop terms (df > max_df_frac · N,
+    N the `_n` column of the 1-row `corpus`)."""
+    if max_df_frac is not None and not (0.0 < max_df_frac <= 1.0):
+        raise ValueError(
+            f"max_df_frac must be in (0, 1] or None (got {max_df_frac})"
+        )
+    # a semi-join needs no distinct build side: no aggregate, no job
+    vocab = qterms.select("term")
+    per_doc = postings.join(F.broadcast(vocab), "term", "left_semi")
+    dfreq = per_doc.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
+    if max_df_frac is None:
+        return per_doc, dfreq.withColumn("_screened", F.lit(False))
+    screened = F.col("_df") > F.lit(max_df_frac) * F.col("_n")
+    return per_doc, dfreq.crossJoin(F.broadcast(corpus.select("_n"))).select(
+        "term", "_df", screened.alias("_screened")
+    )
+
+
+def _bm25_scores(
+    postings: DataFrame,
+    doclens: DataFrame,
+    qterms: DataFrame,
+    doc_id_col: str,
+    k1: float,
+    b: float,
+    max_df_frac: "float | None",
+) -> DataFrame:
+    """The one BM25 scorer: (_qid, _doc, score) for distinct (_qid, term)
+    query terms over index-form (term, doc_id_col, tf) postings and
+    (doc_id_col, n_tokens) doc lengths, score = the sum of idf · tf
+    contributions rounded to 6 decimals."""
+    postings = postings.select(
+        "term", F.col(doc_id_col).alias("_doc"), F.col("tf").alias("tf_doc")
+    )
+    lens = doclens.select(
+        F.col(doc_id_col).alias("_doc"),
+        F.col("n_tokens").cast("long").alias("_len"),
+    )
     corpus = lens.agg(
         F.count(F.lit(1)).alias("_n"), F.avg("_len").alias("_avg")
     )
-    per_doc = postings.join(F.broadcast(vocab), "term", "left_semi")
-    dfreq = per_doc.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
+    per_doc, dfreq = _bm25_df(postings, qterms, corpus, max_df_frac)
     if max_df_frac is not None:
-        # df is per-term, so filtering AFTER the full-vocab df pass
-        # leaves the kept terms' _df values untouched; the filtered
-        # term list then re-scopes the score-side semi-join, so the
-        # stop terms never reach the scoring exchanges at all
-        dfreq = (
-            dfreq.crossJoin(F.broadcast(corpus.select("_n")))
-            .filter(F.col("_df") <= F.lit(max_df_frac) * F.col("_n"))
-            .select("term", "_df")
-        )
+        # df is per-term, so screening AFTER the full-vocab df pass
+        # leaves the kept terms' _df values untouched; the kept term
+        # list then re-scopes the score-side semi-join, so the stop
+        # terms never reach the scoring exchanges at all
+        dfreq = dfreq.filter(~F.col("_screened"))
         per_doc = postings.join(
             F.broadcast(dfreq.select("term")), "term", "left_semi"
         )
@@ -1338,25 +1338,13 @@ def _bm25_score_query_terms(
             + k1 * (1.0 - b + b * F.col("_len") / F.col("_avg"))
         )
     )
-    scored = (
+    return (
         per_doc.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(dfreq), "term")
+        .join(F.broadcast(dfreq.select("term", "_df")), "term")
         .join(lens, "_doc")
         .crossJoin(F.broadcast(corpus))
         .groupBy("_qid", "_doc")
         .agg(F.round(F.sum(contrib), 6).alias("score"))
-    )
-    w = Window.partitionBy("_qid").orderBy(
-        F.col("score").desc(), F.col("_doc").asc()
-    )
-    return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .select(
-            F.col("_qid").alias(query_id_col),
-            F.col("_doc").alias(doc_id_col),
-            "score",
-        )
     )
 
 
@@ -1373,9 +1361,9 @@ def bm25_query_screen_report(
     (VERDICT r10 #6): the scoring paths silently return ZERO rows for a
     query whose every corpus-matching term is screened, and an eval
     pipeline cannot distinguish that from "no match" without re-deriving
-    the df census. This sibling helper runs the same normalization,
-    vocabulary semi-join, and df pass as `_bm25_score_query_terms` and
-    returns one row per query:
+    the df census. This sibling helper runs the scorer's own query-term
+    normalization and df pass (vocabulary semi-join, df per term, the
+    screen) and returns one row per query:
 
       (query_id, n_terms, n_matched_terms, n_screened_terms,
        screened_all_terms)
@@ -1389,55 +1377,22 @@ def bm25_query_screen_report(
     OOV census.
 
     Takes the index form (postings, doclens) — `build_bm25_index` for
-    the direct path's documents. Scale shape: the df pass is the same
-    vocab-semi-joined aggregate the scorer runs (term-bucketed postings
-    prune it identically), everything after is metadata-sized (terms x
+    the direct path's documents. Scale shape: the df pass is the
+    scorer's vocab-semi-joined aggregate (term-bucketed postings prune
+    it identically), everything after is metadata-sized (terms x
     queries)."""
-    if max_df_frac is not None and not (0.0 < max_df_frac <= 1.0):
-        raise ValueError(
-            f"max_df_frac must be in (0, 1] or None (got {max_df_frac})"
-        )
-    qterms = (
-        queries.select(
-            F.col(query_id_col).alias("_qid"),
-            F.explode(
-                F.split(X.normalize_text(F.col(query_text_col)), " ")
-            ).alias("term"),
-        )
-        .filter(F.length("term") > 0)
-        .distinct()
-    )
-    vocab = qterms.select("term").distinct()
-    dfreq = (
-        postings.join(F.broadcast(vocab), "term", "left_semi")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("_df"))
-    )
+    qterms = _bm25_query_terms(queries, query_id_col, query_text_col)
     corpus = doclens.agg(F.count(F.lit(1)).alias("_n"))
-    screened = (
-        F.col("_df").isNotNull()
-        & (F.col("_df") > F.lit(max_df_frac) * F.col("_n"))
-        if max_df_frac is not None
-        else F.lit(False)
-    )
-    per_term = (
-        qterms.join(F.broadcast(dfreq), "term", "left")
-        .crossJoin(F.broadcast(corpus))
-        .withColumn("_matched", F.col("_df").isNotNull())
-        .withColumn("_screened", screened)
-    )
-    n_matched = F.sum(F.col("_matched").cast("long")).alias(
-        "n_matched_terms"
-    )
-    n_screened = F.sum(F.col("_screened").cast("long")).alias(
-        "n_screened_terms"
-    )
+    _, dfreq = _bm25_df(postings, qterms, corpus, max_df_frac)
+    matched = F.col("_df").isNotNull().cast("long")
+    screened = F.coalesce(F.col("_screened"), F.lit(False)).cast("long")
     return (
-        per_term.groupBy(F.col("_qid").alias(query_id_col))
+        qterms.join(F.broadcast(dfreq), "term", "left")
+        .groupBy(F.col("_qid").alias(query_id_col))
         .agg(
             F.count(F.lit(1)).alias("n_terms"),
-            n_matched,
-            n_screened,
+            F.sum(matched).alias("n_matched_terms"),
+            F.sum(screened).alias("n_screened_terms"),
         )
         .withColumn(
             "screened_all_terms",
@@ -1470,12 +1425,13 @@ def rrf_fuse(
     convention applied to RRF; Cormack et al. 2009's 1/(k0+r) with
     k0=60).
 
-    Scale contract: inputs are CANDIDATE LISTS (each system's top-N,
-    thousands of rows), not corpora — ranking a list uses one
-    unpartitioned window, which is exactly right for a driver-bounded
-    candidate set and exactly wrong for a corpus; feed corpus-sized
-    relations through bm25_topk / ann_topk first. The fuse itself is
-    one id-keyed aggregation.
+    This is rrf_fuse_queries' fuser run over one constant query, then a
+    global TakeOrdered top-k. Scale contract: inputs are CANDIDATE
+    LISTS (each system's top-N, thousands of rows), not corpora — the
+    one query's lists meet in a single partition, which is exactly
+    right for a driver-bounded candidate set and exactly wrong for a
+    corpus; feed corpus-sized relations through bm25_topk / ann_topk
+    first.
 
     Each ranking must be UNIQUE by id: a duplicated id inside one list
     would earn two reciprocal contributions from the same system —
@@ -1483,58 +1439,11 @@ def rrf_fuse(
     FAILS THE TASK in-plan when any id carries more rows than systems
     (the module's loud-guard policy); dedup the candidate list first if
     a retriever can emit repeats."""
-    if k <= 0:
-        raise ValueError(f"k must be positive (got {k})")
-    if k0 < 0:
-        raise ValueError(f"k0 must be >= 0 (got {k0})")
-    if not rankings:
-        raise ValueError("rankings must name at least one (df, score_col)")
-    from pyspark.sql import Window
-
-    parts = []
-    for i, (rdf, score_col) in enumerate(rankings):
-        w = Window.orderBy(F.col("_s").desc(), F.col(id_col).asc())
-        parts.append(
-            rdf.select(id_col, F.col(score_col).alias("_s"))
-            .withColumn("_r", F.row_number().over(w))
-            .select(
-                F.col(id_col),
-                F.lit(i).alias("_sys"),
-                # `div` = exact integer division (a double divide + cast
-                # could round up across the floor boundary at the ulp)
-                F.expr(
-                    f"CAST({scale} AS BIGINT) div "
-                    f"(CAST({k0} AS BIGINT) + _r)"
-                ).alias("_rrf"),
-            )
-        )
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionAll(p)
-    fused = allp.groupBy(id_col).agg(
-        F.sum("_rrf").alias("rrf_score"),
-        F.count_distinct(F.col("_sys")).alias("n_systems"),
-        F.count(F.lit(1)).alias("_rows"),
-    )
-    dup_ok = F.assert_true(
-        F.col("_rows") == F.col("n_systems"),
-        F.concat(
-            F.lit(
-                "rrf_fuse: an id appears more than once within one "
-                "ranking (silent double counting) — dedup the candidate "
-                "list by id first; id "
-            ),
-            F.col(id_col).cast("string"),
-        ),
-    )
-    # the guard rides the CONSUMED score column or Catalyst prunes it
-    fused = fused.withColumn(
-        "rrf_score", F.when(dup_ok.isNull(), F.col("rrf_score"))
-    )
     return (
-        fused.orderBy(F.col("rrf_score").desc(), F.col(id_col).asc())
+        _rrf_fuse(rankings, F.lit(0), id_col, k, k0, scale, "rrf_fuse")
+        .orderBy(F.col("rrf_score").desc(), F.col("_fid").asc())
         .limit(k)
-        .select(id_col, "rrf_score", "n_systems")
+        .select(F.col("_fid").alias(id_col), "rrf_score", "n_systems")
     )
 
 
@@ -1558,10 +1467,8 @@ def rrf_fuse_queries(
     sum of floor(scale / (k0 + rank-within-that-query's-list)) over the
     systems that retrieved it, top-k per query.
 
-    Same math as rrf_fuse — integer `div`, id tie-breaks, Cormack et
-    al. 2009 k0=60 default — and a 1-query batch returns exactly
-    rrf_fuse's fusion (test-pinned), modulo rrf_fuse's global-top-k
-    frame being this operator's per-query frame.
+    rrf_fuse runs this same fuser over one constant query, so a 1-query
+    batch returns exactly rrf_fuse's fusion (test-pinned).
 
     Scale: inputs are per-query CANDIDATE LISTS (queries × top-N rows,
     metadata-sized), and the whole fuse is ONE qid-keyed exchange — the
@@ -1578,6 +1485,23 @@ def rrf_fuse_queries(
     two contributions from one system, silent double counting — and the
     fuse FAILS THE TASK in-plan when any (query, id) carries more rows
     than distinct systems."""
+    return _rrf_fuse(
+        rankings, F.col(query_id_col), id_col, k, k0, scale,
+        "rrf_fuse_queries",
+    ).select(
+        F.col("_qid").alias(query_id_col),
+        F.col("_fid").alias(id_col),
+        "rrf_score",
+        "n_systems",
+    )
+
+
+def _rrf_fuse(
+    rankings, qid: Column, id_col: str, k: int, k0: int, scale: int, name: str
+) -> DataFrame:
+    """The one RRF fuser: (_qid, _fid, rrf_score, n_systems), the top-k
+    per `qid` value by rrf_score desc then id; `name` heads the
+    duplicate-id guard's message."""
     if k <= 0:
         raise ValueError(f"k must be positive (got {k})")
     if k0 < 0:
@@ -1586,16 +1510,15 @@ def rrf_fuse_queries(
         raise ValueError("rankings must name at least one (df, score_col)")
     from pyspark.sql import Window
 
-    parts = []
-    for i, (rdf, score_col) in enumerate(rankings):
-        parts.append(
-            rdf.select(
-                F.col(query_id_col).alias("_qid"),
-                F.col(id_col).alias("_fid"),
-                F.lit(i).alias("_sys"),
-                F.col(score_col).alias("_s"),
-            )
+    parts = [
+        rdf.select(
+            qid.alias("_qid"),
+            F.col(id_col).alias("_fid"),
+            F.lit(i).alias("_sys"),
+            F.col(score_col).alias("_s"),
         )
+        for i, (rdf, score_col) in enumerate(rankings)
+    ]
     allp = parts[0]
     for p in parts[1:]:
         allp = allp.unionAll(p)
@@ -1608,6 +1531,8 @@ def rrf_fuse_queries(
         "_qid",
         "_fid",
         "_sys",
+        # `div` = exact integer division (a double divide + cast could
+        # round up across the floor boundary at the ulp)
         F.expr(
             f"CAST({scale} AS BIGINT) div (CAST({k0} AS BIGINT) + _r)"
         ).alias("_rrf"),
@@ -1621,9 +1546,9 @@ def rrf_fuse_queries(
         F.col("_rows") == F.col("n_systems"),
         F.concat(
             F.lit(
-                "rrf_fuse_queries: an id appears more than once within "
-                "one ranking for one query (silent double counting) — "
-                "dedup the candidate lists by (query, id) first; id "
+                f"{name}: an id appears more than once within one "
+                "ranking (silent double counting) — dedup each candidate "
+                "list by id first; id "
             ),
             F.col("_fid").cast("string"),
         ),
@@ -1635,15 +1560,8 @@ def rrf_fuse_queries(
     wk = Window.partitionBy("_qid").orderBy(
         F.col("rrf_score").desc(), F.col("_fid").asc()
     )
-    return (
-        fused.withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
-        .select(
-            F.col("_qid").alias(query_id_col),
-            F.col("_fid").alias(id_col),
-            "rrf_score",
-            "n_systems",
-        )
+    return fused.withColumn("_rk", F.row_number().over(wk)).filter(
+        F.col("_rk") <= k
     )
 
 

@@ -12,6 +12,7 @@ work unchanged on an object store; `maxPartitionBytes` governs split sizing.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import weakref
 from typing import Dict, Optional
@@ -19,6 +20,7 @@ from typing import Dict, Optional
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -67,44 +69,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Dataset from a plan goes through Spark's private `Dataset.ofRows`:
     where that is unavailable (Spark Connect) or raises, a hit reads
     with the memoized schema given instead, which still runs no job.
-    The `events.ts` normalization and the UTC check above run on every
-    call. Paths that are not absolute local files or directories
-    (object stores, globs, relative paths) always infer."""
-    if name == "events":
-        # scope the legacy conf to this read: it is consulted when the
-        # parquet schema is converted (at read() time), so restoring it
-        # immediately keeps deferred actions working without silently
-        # changing how the session reads OTHER nanos-timestamp parquet
-        conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "true")
-        try:
-            df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            # integer FLOOR division, NOT `/` and not bare `div`: float
-            # division of ~1.7e18 ns loses precision beyond 2^53, and
-            # `div` truncates toward zero — which shifts PRE-epoch
-            # timestamps +1µs relative to floor semantics (r8 review:
-            # -1500ns must be -2µs, not -1µs, or every flooring bucket
-            # disagrees on pre-1970 rows). pmod is sign-safe.
-            df = df.withColumn(
-                "ts",
-                F.expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)"),
-            )
-        elif isinstance(ts_type, T.TimestampNTZType):
-            _require_utc_session(spark)
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    The `events.ts` normalization is memoized with the relation (a hit
+    re-applies the same projection on the JVM), and the UTC check above
+    runs on every call. Paths that are not absolute local files or
+    directories (object stores, globs, relative paths) always infer."""
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet", name == "events")
 
 
 # Session confs that change the StructType inferred from parquet footers:
@@ -125,8 +94,9 @@ _PARQUET_SCHEMA_CONFS = (
 )
 
 # (path, conf values) -> (listing signature, inferred StructType,
-# {SparkSession: (analyzed relation, JVM Dataset class)}); a rewritten path
-# replaces its entry, and a collected or stopped session leaves the inner map
+# {SparkSession: (analyzed relation, JVM Dataset class)}, JVM projection that
+# normalizes events.ts or None); a rewritten path replaces its entry, and a
+# collected or stopped session leaves the inner map
 _RELATIONS: Dict[tuple, tuple] = {}
 
 
@@ -150,45 +120,109 @@ def _listing(path: str) -> Optional[tuple]:
     return tuple(out)
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """`spark.read.parquet(path)` with the inferred schema and the resolved
-    relation memoized (see load_table). The listing is taken before the
-    inferring read, so a rewrite racing the read can only cause a later
-    miss, never a stale hit."""
+def _read_parquet(
+    spark: SparkSession, path: str, events: bool = False
+) -> DataFrame:
+    """`spark.read.parquet(path)` with the inferred schema, the resolved
+    relation and, for `events`, the `ts` normalization memoized (see
+    load_table). The listing is taken before the inferring read, so a
+    rewrite racing the read can only cause a later miss, never a stale
+    hit."""
     listing = _listing(path)
-    if listing is None:
-        return spark.read.parquet(path)
-    key = (path, tuple(spark.conf.get(k, None) for k in _PARQUET_SCHEMA_CONFS))
+    key = None
+    if listing is not None:
+        confs = tuple(spark.conf.get(k, None) for k in _PARQUET_SCHEMA_CONFS)
+        key = (path, confs)
     hit = _RELATIONS.get(key)
-    if hit is None or hit[0] != listing:
-        df = spark.read.parquet(path)
-        hit = _RELATIONS[key] = (listing, df.schema, weakref.WeakKeyDictionary())
-    else:
+    if hit is not None and hit[0] == listing:
+        if events and isinstance(hit[1]["ts"].dataType, T.TimestampNTZType):
+            _require_utc_session(spark)
         try:
             relation, dataset = hit[2][spark]
-            return DataFrame(
-                dataset.ofRows(spark._jsparkSession, relation.newInstance()),
-                spark,
-            )
+            jdf = dataset.ofRows(spark._jsparkSession, relation.newInstance())
         except (KeyError, TypeError, Py4JError):
             # not resolved in this session yet, or no JVM fast path
-            df = spark.read.schema(hit[1]).parquet(path)
+            with _nanos_as_long(spark, events):
+                df = spark.read.schema(hit[1]).parquet(path)
+            _remember(spark, hit[2], df)
+            jdf = df._jdf
+    else:
+        with _nanos_as_long(spark, events):
+            df = spark.read.parquet(path)
+        schema = df.schema
+        project = _ts_projection(spark, schema) if events else None
+        hit = (listing, schema, weakref.WeakKeyDictionary(), project)
+        jdf = df._jdf
+        if key is not None:
+            _RELATIONS[key] = hit
+            _remember(spark, hit[2], df)
+    return DataFrame(jdf if hit[3] is None else jdf.select(hit[3]), spark)
+
+
+def _remember(spark: SparkSession, per_session, df: DataFrame) -> None:
+    """Store df's analyzed relation as `spark`'s entry of a memo's
+    per-session map."""
     try:
-        hit[2][spark] = (
+        per_session[spark] = (
             df._jdf.queryExecution().analyzed(),
             spark._jvm.org.apache.spark.sql.classic.Dataset,
         )
     except (AttributeError, TypeError, Py4JError):
         pass
     _forget_stopped_sessions()
-    return df
+
+
+@contextlib.contextmanager
+def _nanos_as_long(spark: SparkSession, on: bool):
+    """Scope spark.sql.legacy.parquet.nanosAsLong=true to an events read:
+    it is consulted when the parquet schema is converted (at read() time),
+    so restoring it immediately keeps deferred actions working without
+    silently changing how the session reads OTHER nanos-timestamp
+    parquet."""
+    if not on:
+        yield
+        return
+    conf_key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(conf_key, None)
+    spark.conf.set(conf_key, "true")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(conf_key)
+        else:
+            spark.conf.set(conf_key, prev)
+
+
+def _ts_projection(spark: SparkSession, schema: T.StructType):
+    """The JVM column list that normalizes events.ts of this inferred
+    schema to TimestampType, or None when it already is one."""
+    ts_type = schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        # integer FLOOR division, NOT `/` and not bare `div`: float
+        # division of ~1.7e18 ns loses precision beyond 2^53, and
+        # `div` truncates toward zero — which shifts PRE-epoch
+        # timestamps +1µs relative to floor semantics (r8 review:
+        # -1500ns must be -2µs, not -1µs, or every flooring bucket
+        # disagrees on pre-1970 rows). pmod is sign-safe.
+        ts = F.expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)")
+    elif isinstance(ts_type, T.TimestampNTZType):
+        _require_utc_session(spark)
+        ts = F.col("ts").cast("timestamp")
+    else:
+        return None
+    cols = [
+        ts.alias("ts") if f.name == "ts" else F.col(f"`{f.name}`")
+        for f in schema.fields
+    ]
+    return spark._jvm.PythonUtils.toSeq([c._jc for c in cols])
 
 
 def _forget_stopped_sessions() -> None:
     """Drop the relations of sessions whose SparkContext is stopped: the
     session object may outlive stop() (a fixture, a global), and its JVM
     relation would otherwise stay pinned until it is collected."""
-    for _, _, per_session in list(_RELATIONS.values()):
+    for per_session in [entry[2] for entry in _RELATIONS.values()]:
         for s in [s for s in per_session.keys() if s._sc._jsc is None]:
             del per_session[s]
 

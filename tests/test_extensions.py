@@ -484,6 +484,30 @@ def test_ivf_batch_matches_single_query_operator(spark, sf_dir):
         )
 
 
+def test_ivf_centroids_count_distinct_cells(spark):
+    """A sample with fewer distinct vectors than nlist gives one centroid
+    per distinct vector, so nprobe counts distinct cells: on 30 rows of 3
+    distinct 2-d vectors at nlist=8, a query at (0.1, 0.9) probing 2
+    cells returns the 20 rows of the two nearest real cells, not 10 rows
+    from one cell and the empty cell of a duplicate centroid."""
+    import numpy as np
+
+    vecs = [[0.0, 1.0], [1.0, 0.0], [-1.0, -1.0]]
+    emb = spark.createDataFrame(
+        [(i, vecs[i % 3]) for i in range(30)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = similarity.ivf_centroids(emb, "embedding", nlist=8, seed=42)
+    assert sorted(map(tuple, cents)) == sorted(map(tuple, vecs))
+    got = similarity.ivf_topk_batch(
+        emb, "vec_id", "embedding", np.array([[0.1, 0.9]]), [0], cents,
+        k=30, nprobe=2,
+    ).collect()
+    assert sorted(r.vec_id for r in got) == [
+        i for i in range(30) if i % 3 != 2
+    ]
+
+
 def test_lsh_batch_matches_single_query_operator(spark, sf_dir):
     """A 1-query lsh_topk_batch probes the same hamming-ball buckets
     (same flip rule) and returns exactly lsh_topk's ranking — ids and

@@ -608,6 +608,30 @@ def test_rrf_fuse_takeordered_not_global_sort(spark, sf_dir):
     assert "Python" not in plan, plan
 
 
+def test_bm25_topk_verbatim_terms_and_takeordered(spark, sf_dir):
+    """bm25_topk's single-query contract: terms match verbatim (no
+    normalization, so "Spark" finds nothing where "spark" does), a
+    repeated term scores as if given once, and the top-k is a global
+    TakeOrdered over the scores, never a window."""
+    from purescript_ifrit_spark.operators.text_analysis import bm25_topk
+
+    docs = load_table(spark, sf_dir, "documents")
+
+    def top(terms):
+        return [
+            (r.doc_id, r.score)
+            for r in bm25_topk(docs, "doc_id", "text", terms, k=10).collect()
+        ]
+
+    once = top(["spark"])
+    assert len(once) == 10
+    assert top(["spark", "spark"]) == once
+    assert top(["Spark"]) == []
+    plan = physical(bm25_topk(docs, "doc_id", "text", ["spark", "join"]))
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "Window" not in plan, plan
+
+
 def test_ann_batch_partial_topk_plan(spark, sf_dir):
     """Batch brute ANN plan shape (r10 rewrite): ONE Arrow mapInPandas
     (matmul + local per-query top-k inside the worker — the full

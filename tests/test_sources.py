@@ -225,10 +225,15 @@ def test_load_table_self_join_resolves(spark, sf_dir):
 
 # py4j round trips the driver thread makes per build, after a warm-up call:
 # a `load_table` memo hit (11 conf reads for the key, then the fresh-id
-# copy of the memoized relation) and one `p3_alias` registry call (that
-# hit plus the dialect query). Host-independent, so a regression fails
-# here even where wall time cannot show it.
-_ROUND_TRIPS = {"load_table_hit": 14, "p3_alias": 25}
+# copy of the memoized relation), an `events` hit (the same plus the
+# memoized `ts` projection) and one `p3_alias` registry call (a hit plus
+# the dialect query). Host-independent, so a regression fails here even
+# where wall time cannot show it.
+_ROUND_TRIPS = {
+    "load_table_hit": 14,
+    "load_table_events_hit": 16,
+    "p3_alias": 25,
+}
 
 
 def _round_trips(fn):
@@ -258,6 +263,7 @@ def test_build_round_trips_are_pinned(spark, sf_dir):
     p3_alias = REGISTRY["p3_alias"][0]
     builds = {
         "load_table_hit": lambda: S.load_table(spark, sf_dir, "customer"),
+        "load_table_events_hit": lambda: S.load_table(spark, sf_dir, "events"),
         "p3_alias": lambda: p3_alias(spark, sf_dir),
     }
     got = {}
